@@ -20,6 +20,32 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** One run of a query: its wall seconds, or the message of what it
+    * threw. A failed run is never a timing. */
+  private[graft] def timeQuery(run: () => Any): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { run(); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(e.toString) }
+  }
+
+  /** Passes → (timed, failed) in first-seen order: a query that ran in every
+    * pass keeps its min time, one that failed in any keeps its first message. */
+  private[graft] def merge(passes: Seq[Seq[(String, Either[String, Double])]])
+      : (Seq[(String, Double)], Seq[(String, String)]) = {
+    val byName = passes.flatten.groupMap(_._1)(_._2)
+    val (ok, bad) = passes.flatten.map(_._1).distinct.map(n => n -> byName(n))
+      .partition(_._2.forall(_.isRight))
+    (ok.map { case (n, os) => n -> os.flatMap(_.toOption).min },
+     bad.map { case (n, os) => n -> os.collectFirst { case Left(m) => m }.get })
+  }
+
+  /** `{"name":"message",...}` in first-seen order. */
+  private[graft] def failedJson(failed: Seq[(String, String)]): String = {
+    val m = new java.util.LinkedHashMap[String, String]()
+    failed.foreach { case (k, v) => m.put(k, v) }
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(m)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg()
@@ -74,56 +100,47 @@ object Bench {
     // iterating locally (the driver invokes with no args)
     val only: Option[Seq[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSeq) else None
-    def pass(): Seq[(String, Double)] =
+    // one timed run, then drop intra-query caches (dedup/similarity persist
+    // intermediates consumed multiple times within one plan) so
+    // storage-memory residue from query N can't distort query N+1's timing
+    def timed(name: String)(run: () => Any): (String, Either[String, Double]) = {
+      val outcome = timeQuery(run)
+      graft.ops.ScratchCache.releaseAll()
+      spark.catalog.clearCache()
+      name -> outcome
+    }
+    def pass() =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-        .map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // drop intra-query caches (dedup/similarity persist intermediates
-        // consumed multiple times within one plan) so storage-memory residue
-        // from query N can't distort query N+1's timing
-        graft.ops.ScratchCache.releaseAll()
-        spark.catalog.clearCache()
-        name -> dt
-      }
-    val p1 = pass().toMap
-    val results0 = pass().map { case (name, dt) =>
-      name -> math.min(dt, p1.getOrElse(name, dt))
-    }
+        .map { case (name, fn) => timed(name)(() => fn(spark, sfDir).count()) }
+    val passes = Seq(pass(), pass())
     // flagship raster pipeline (E2→E3→E1, ~110 synthetic 1° tiles,
     // 24 16-day periods × 7 bands): tracked like the queries so the
     // mosaic path has a bench number, not just specs. Fresh store per
     // run; min of two, like the query passes. Skipped under a subset
     // filter unless asked for by name.
-    val results =
-      if (!only.forall(_.exists("mosaic_pipeline".contains(_)))) results0
-      else {
-        def mosaicRun(): Double = {
-          val store = java.nio.file.Files
-            .createTempDirectory("graft_bench_mosaic").toString
-          val cfg = graft.pipelines.MosaicPipeline.Config(
-            graft.model.Envelope(-5.5, 40.2, 4.3, 50.8), // 10×11 = 110 tiles
-            Seq(java.sql.Timestamp.valueOf("2021-06-15 00:00:00")),
-            graft.model.AnnualMeanDataset, store, chunkPx = 16)
-          val t0 = System.nanoTime()
-          val (cube, _, _) = graft.pipelines.MosaicPipeline.run(spark, cfg)
-          val n = cube.count()
-          require(n > 0, "mosaic pipeline produced no chunks")
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.ops.ScratchCache.releaseAll()
-          spark.catalog.clearCache()
-          dt
-        }
-        results0 :+ ("mosaic_pipeline_110tiles" -> math.min(mosaicRun(), mosaicRun()))
+    def mosaicRun() = {
+      val cfg = graft.pipelines.MosaicPipeline.Config(
+        graft.model.Envelope(-5.5, 40.2, 4.3, 50.8), // 10×11 = 110 tiles
+        Seq(java.sql.Timestamp.valueOf("2021-06-15 00:00:00")),
+        graft.model.AnnualMeanDataset,
+        java.nio.file.Files.createTempDirectory("graft_bench_mosaic").toString, chunkPx = 16)
+      timed("mosaic_pipeline_110tiles") { () =>
+        val (cube, _, _) = graft.pipelines.MosaicPipeline.run(spark, cfg)
+        require(cube.count() > 0, "mosaic pipeline produced no chunks")
       }
+    }
+    val mosaic = if (only.forall(_.exists("mosaic_pipeline".contains(_))))
+      Seq.fill(2)(Seq(mosaicRun())) else Nil
+    val (results, failed) = merge(passes ++ mosaic)
+    failed.foreach { case (name, msg) => System.err.println(s"Bench: $name failed: $msg") }
     // The driver keeps only the LAST ~1.9 KB of stdout before parsing, so a
     // 235-key JSON line loses its head and records parsed:null (r06, r09).
     // Emit the FULL per-query map to BENCH_FULL.json in the repo, and print
-    // a compact final line — total over ALL queries + a FIXED headline
-    // subset (stable keys for round-over-round comparison) sized well
-    // under the capture buffer.
+    // a compact final line — total over ALL timed queries + a FIXED
+    // headline subset (stable keys for round-over-round comparison) sized
+    // well under the capture buffer. Failed queries carry no time: they
+    // are listed with their messages under BENCH_FULL's "failed" only.
     def fmt(v: Double): String =
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def jsonMap(rs: Seq[(String, Double)]): String =
@@ -143,7 +160,7 @@ object Bench {
     val loadJson =
       s""""load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpu_sec":${fmt(cpuSec)}"""
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"queries":${jsonMap(results)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"queries":${jsonMap(results)},"failed":${failedJson(failed)},"sf":"$sfDir"}"""
     // CWD-relative (or env-overridden) so any checkout gets the file; a
     // failed write is logged, not swallowed — the stdout line advertises it
     val fullPath = java.nio.file.Paths.get(

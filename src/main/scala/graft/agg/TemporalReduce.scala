@@ -1,6 +1,6 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -8,21 +8,12 @@ import org.apache.spark.sql.functions._
   * reference's per-dataset UDAF plug-point (protocols.py:228-242,
   * glad.py:259-282) re-expressed for Spark.
   *
-  * Mean is algebraic → pure built-in expressions (partial + final hash agg,
-  * map-side combine, whole-stage codegen). Median is holistic → a typed
-  * `Aggregator`; its state is bounded by the temporal window length (≈23
-  * scenes in the reference), so memory per group stays O(window), not O(n).
+  * Over table columns a masked mean is built-in `avg(when(ok, v))` (q19)
+  * and the holistic median a typed `Aggregator`. Over chunk stacks both
+  * run in `maskedReduce`, whose state is bounded by the temporal window
+  * length (≈23 scenes in the reference): O(window) per group, not O(n).
   */
 object TemporalReduce {
-
-  /** A3 + P4: masked mean as built-ins — `avg` ignores nulls, so the QA mask
-    * is a `when` rewrite (glad.py:259-265's `where(qa == 1).mean("time")`). */
-  def maskedMean(value: Column, qaOk: Column): Column =
-    avg(when(qaOk, value))
-
-  /** P6: nodata → null rewrite (datasets/utils.py:137-140). */
-  def nodataToNull(value: Column, nodata: Double): Column =
-    when(value =!= lit(nodata), value)
 
   /** A4: exact median over doubles — numpy semantics (mean of the two middle
     * values for even counts), matching DuckDB's `median`. Null inputs are
@@ -49,67 +40,83 @@ object TemporalReduce {
   val medianUdaf: org.apache.spark.sql.expressions.UserDefinedFunction =
     udaf(MedianAggregator, Encoders.DOUBLE)
 
-  /** A3 vector form: element-wise masked mean over `ARRAY<FLOAT>` chunk
-    * payloads — one group = one (band, chunkY, chunkX) cell block, reduced
-    * across time. NaN marks masked/nodata cells on input (P4/P6 already
-    * applied); output cell is NaN when no valid observation exists
-    * (float32 mean semantics of glad.py:259-265). */
-  class VectorMeanAggregator(n: Int)
-      extends Aggregator[Array[Float], (Array[Double], Array[Int]), Array[Float]] {
-    def zero: (Array[Double], Array[Int]) = (new Array[Double](n), new Array[Int](n))
-    def reduce(b: (Array[Double], Array[Int]), v: Array[Float]): (Array[Double], Array[Int]) = {
+  /** One time slice of a chunk stack: `t` orders a band's slices and pairs
+    * each value slice with the QA slice of the same `t`. */
+  final case class Slice(band: Int, t: Long, data: Array[Float])
+
+  /** P4 + A3/A4 + U1 in one sorted group pass, like the reference's per-task
+    * stack, mask and reduce (flyte/scenes.py:271-303). `slices` holds the
+    * `groupBy` columns plus Slice's. A group's QA slices sort first and are
+    * held; each value band then streams in `t` order through one
+    * mask-and-accumulate loop and is emitted when done. A value slice with
+    * no QA slice of its `t` is skipped; a band that keeps none emits
+    * nothing; two slices of one band and `t` are refused. ONE shuffle, on
+    * the group key, and no join; per-group state is O(window × cells), so
+    * size the chunk for it (SURVEY §7 part 2). */
+  def maskedReduce[K: Encoder](slices: DataFrame, groupBy: Seq[Column], qaBand: Int,
+                               reduction: String, cells: Int): Dataset[(K, Int, Array[Float])] = {
+    require(reduction == "mean" || reduction == "median", s"unknown reduction $reduction")
+    val median = reduction == "median"
+    implicit val out: Encoder[(K, Int, Array[Float])] =
+      Encoders.tuple(implicitly[Encoder[K]], Encoders.scalaInt, ExprEnc.floatArray)
+    slices.groupBy(groupBy: _*).as[K, Slice](implicitly[Encoder[K]], Encoders.product[Slice])
+      .flatMapSortedGroups((col("band") === qaBand).desc, col("band"), col("t")) {
+        (key: K, group: Iterator[Slice]) =>
+          val it = group.buffered
+          def next(): Slice = { // sorted by t within a band: a repeat is adjacent
+            val s = it.next()
+            require(!(it.hasNext && it.head.band == s.band && it.head.t == s.t),
+              s"group $key has two slices of band ${s.band} at t=${s.t}")
+            s
+          }
+          val qa = scala.collection.mutable.LongMap.empty[Array[Float]]
+          while (it.hasNext && it.head.band == qaBand) { val s = next(); qa(s.t) = s.data }
+          Iterator.continually(it.hasNext).takeWhile(identity).flatMap { _ =>
+            val band = it.head.band
+            val kept = new KeptCells(cells, qa.size)
+            var used = false
+            while (it.hasNext && it.head.band == band) {
+              val s = next()
+              qa.get(s.t).foreach { q => kept.add(s.data, q); used = true }
+            }
+            if (used) Iterator.single((key, band, kept.finish(median))) else Iterator.empty
+          }
+      }
+  }
+
+  /** One band's kept values per cell, in slice order: a cell keeps a
+    * slice's value when its QA is 1 and the value is not NaN (P4/P6). Each
+    * cell owns `window` slots — one per QA slice, the most it can keep. */
+  private final class KeptCells(n: Int, window: Int) {
+    private val vals = new Array[Float](n * window)
+    private val cnt = new Array[Int](n)
+    def add(v: Array[Float], q: Array[Float]): Unit = {
       var i = 0
       while (i < n) {
         val x = v(i)
-        if (!x.isNaN) { b._1(i) += x; b._2(i) += 1 }
+        if (q(i) == 1f && !x.isNaN) { vals(i * window + cnt(i)) = x; cnt(i) += 1 }
         i += 1
       }
-      b
     }
-    def merge(a: (Array[Double], Array[Int]), b: (Array[Double], Array[Int])): (Array[Double], Array[Int]) = {
-      var i = 0
-      while (i < n) { a._1(i) += b._1(i); a._2(i) += b._2(i); i += 1 }
-      a
-    }
-    def finish(b: (Array[Double], Array[Int])): Array[Float] = {
+    /** A4 exact median (an even count averages the middle two in float32)
+      * or A3 float32 mean (glad.py:259-282); NaN where a cell kept none. */
+    def finish(median: Boolean): Array[Float] = {
       val out = new Array[Float](n)
       var i = 0
       while (i < n) {
-        out(i) = if (b._2(i) == 0) Float.NaN else (b._1(i) / b._2(i)).toFloat
-        i += 1
-      }
-      out
-    }
-    def bufferEncoder: Encoder[(Array[Double], Array[Int])] =
-      Encoders.tuple(ExprEnc.doubleArray, ExprEnc.intArray)
-    def outputEncoder: Encoder[Array[Float]] = ExprEnc.floatArray
-  }
-
-  /** A4 vector form: element-wise exact median across time slices. State is
-    * the list of time-slice arrays — O(window × chunkCells); size the
-    * spatial chunk accordingly for median datasets (SURVEY §7 hard-part 2). */
-  class VectorMedianAggregator(n: Int)
-      extends Aggregator[Array[Float], List[Array[Float]], Array[Float]] {
-    def zero: List[Array[Float]] = Nil
-    def reduce(b: List[Array[Float]], v: Array[Float]): List[Array[Float]] = v :: b
-    def merge(a: List[Array[Float]], b: List[Array[Float]]): List[Array[Float]] = a ::: b
-    def finish(slices: List[Array[Float]]): Array[Float] = {
-      val out = new Array[Float](n)
-      val buf = new Array[Float](slices.length)
-      var i = 0
-      while (i < n) {
-        var m = 0
-        slices.foreach { s => val x = s(i); if (!x.isNaN) { buf(m) = x; m += 1 } }
-        out(i) = if (m == 0) Float.NaN else {
-          java.util.Arrays.sort(buf, 0, m)
-          if (m % 2 == 1) buf(m / 2) else (buf(m / 2 - 1) + buf(m / 2)) / 2.0f
+        val m = cnt(i); val b = i * window
+        out(i) = if (m == 0) Float.NaN else if (median) {
+          java.util.Arrays.sort(vals, b, b + m)
+          if (m % 2 == 1) vals(b + m / 2) else (vals(b + m / 2 - 1) + vals(b + m / 2)) / 2.0f
+        } else {
+          var sum = 0.0; var j = b
+          while (j < b + m) { sum += vals(j); j += 1 }
+          (sum / m).toFloat
         }
         i += 1
       }
       out
     }
-    def bufferEncoder: Encoder[List[Array[Float]]] = Encoders.kryo[List[Array[Float]]]
-    def outputEncoder: Encoder[Array[Float]] = ExprEnc.floatArray
   }
 }
 
@@ -121,6 +128,4 @@ private[graft] object ExprEnc {
     ExpressionEncoder(ArrayEncoder(PrimitiveFloatEncoder, containsNull = false))
   val doubleArray: Encoder[Array[Double]] =
     ExpressionEncoder(ArrayEncoder(PrimitiveDoubleEncoder, containsNull = false))
-  val intArray: Encoder[Array[Int]] =
-    ExpressionEncoder(ArrayEncoder(PrimitiveIntEncoder, containsNull = false))
 }

@@ -3,15 +3,14 @@ package graft.cube
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{GridDef, Region}
-import graft.agg.TemporalReduce.{VectorMeanAggregator, VectorMedianAggregator}
+import graft.agg.TemporalReduce
 
 /** One chunk of the dense [time, band, y, x] cube in long format
   * (SURVEY §1.3): `data` is the row-major flattened chunkY×chunkX payload,
   * NaN = nodata/masked. The cube IS a DataFrame — concat/slice/reduce are
   * relational ops on the chunk keys, so Catalyst partition-prunes region
-  * slices and the shuffle key for temporal reduction is (band, cy, cx),
-  * which at scale is exactly the write-layout key (no second shuffle before
-  * the sink).
+  * slices and temporal reduction shuffles the chunks once, on their
+  * spatial key (cy, cx).
   */
 final case class ChunkRow(time: Int, band: Int, cy: Int, cx: Int, data: Array[Float])
 
@@ -151,31 +150,16 @@ object ChunkTable {
     * pixel — glad.py:260-261), drops the QA band (P5), then reduces each
     * (band, cy, cx) cell block across time with the dataset's reducer.
     *
-    * Plan shape at scale: the QA side is joined on (time, cy, cx) — an
-    * equi-join co-partitioned with the value side — then ONE shuffle on
-    * (band, cy, cx) for the aggregation. The mask itself is a codegen'd
-    * zip_with; only the final reduce is typed. */
+    * Plan shape: `TemporalReduce.maskedReduce` grouped on (cy, cx) with
+    * time as the slice order — ONE shuffle of the chunks on (cy, cx), no
+    * join, and the mask applied inside the reduce loop. */
   def temporalReduce(ds: Dataset[ChunkRow], grid: GridDef, qaBand: Int,
                      reduction: String): Dataset[ChunkRow] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val qa = ds.filter($"band" === qaBand)
-      .select($"time", $"cy", $"cx", $"data".as("qa"))
-    val masked = ds.filter($"band" =!= qaBand)
-      .join(qa, Seq("time", "cy", "cx"))
-      .select($"time", $"band", $"cy", $"cx",
-        zip_with($"data", $"qa",
-          (v, q) => when(q === 1.0f, v).otherwise(lit(Float.NaN))).as("data"))
+    import ds.sparkSession.implicits._
+    TemporalReduce.maskedReduce[(Int, Int)](ds.withColumn("t", $"time".cast("long")),
+        Seq($"cy", $"cx"), qaBand, reduction, grid.chunkY * grid.chunkX)
+      .select(lit(0).as("time"), $"_2".as("band"), $"_1._1".as("cy"), $"_1._2".as("cx"),
+        $"_3".as("data"))
       .as[ChunkRow]
-    val n = grid.chunkY * grid.chunkX
-    val agg = reduction match {
-      case "mean"   => new VectorMeanAggregator(n).toColumn
-      case "median" => new VectorMedianAggregator(n).toColumn
-      case other    => throw new IllegalArgumentException(s"unknown reduction $other")
-    }
-    masked.groupByKey(r => (r.band, r.cy, r.cx))
-      .mapValues(_.data)(graft.agg.ExprEnc.floatArray)
-      .agg(agg.name("data"))
-      .map { kv => ChunkRow(0, kv._1._1, kv._1._2, kv._1._3, kv._2) }
   }
 }

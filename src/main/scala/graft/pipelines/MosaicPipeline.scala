@@ -73,41 +73,39 @@ object MosaicPipeline {
       .toDF("tile_id", "period", "band", "data")
   }
 
+  /** The snapped feature times, ascending, with their windows' periods —
+    * the protocol's expressions run on the driver in the session zone, so
+    * the features and the store's time axis agree on every snapped time. */
+  private def windows(spark: SparkSession, cfg: Config): Seq[(Timestamp, Seq[Long])] = {
+    import spark.implicits._
+    cfg.times.toDF("t").select(cfg.dataset.snapToTemporalGrid($"t").as("time"))
+      .select($"time", cfg.dataset.windowPeriods($"time"))
+      .as[(Timestamp, Seq[Long])].collect().toSeq
+      .distinctBy(_._1.getTime).sortBy(_._1.getTime)
+  }
+
   /** E3: per (tile, snapped time), stack the trailing window of scenes and
     * apply the dataset's temporal reduction — the masked mean/median over
     * the time dimension (U1). Output: one feature chunk per
-    * (tile, time, band). */
+    * (tile, time, band).
+    *
+    * Plan shape: a literal period → times map expands each scene row to
+    * the windows holding it (a generator, not a join), then
+    * `TemporalReduce.maskedReduce` groups on (tile, time), slices ordered
+    * by period — ONE shuffle of the scene rows and no join over them. */
   def buildFeatures(spark: SparkSession, cfg: Config, grid: DataFrame,
                     scenes: DataFrame): DataFrame = {
     import spark.implicits._
-    val proto = cfg.dataset
-    val snapped = cfg.times.toDF("t")
-      .select(proto.snapToTemporalGrid($"t").as("time")).distinct()
-    val windows = snapped.select($"time",
-      explode(proto.windowPeriods($"time")).as("period"))
-    // join scenes into each window: shuffle key (period) then reduce per
-    // (tile, time, band) — the window length bounds the group size.
-    val qaBand = proto.bands.length // last = QA
-    val stacked = scenes.join(windows, Seq("period"))
-    val masked = stacked
-      .filter($"band" =!= qaBand)
-      .join(stacked.filter($"band" === qaBand)
-          .select($"tile_id", $"period", $"time", $"data".as("qa")),
-        Seq("tile_id", "period", "time"))
-      .select($"tile_id", $"time", $"band", $"period",
-        zip_with($"data", $"qa",
-          (v, q) => when(q === 1.0f, v).otherwise(lit(Float.NaN))).as("data"))
-    val n = cfg.chunkPx * cfg.chunkPx
-    val agg = proto.reduction match {
-      case "mean"   => new graft.agg.TemporalReduce.VectorMeanAggregator(n).toColumn
-      case "median" => new graft.agg.TemporalReduce.VectorMedianAggregator(n).toColumn
-    }
-    masked.as[(String, Timestamp, Int, Long, Array[Float])]
-      .groupByKey(r => (r._1, r._2, r._3))
-      .mapValues(_._5)(graft.agg.ExprEnc.floatArray)
-      .agg(agg.name("data"))
-      .map(kv => (kv._1._1, kv._1._2, kv._1._3, kv._2))
-      .toDF("tile_id", "time", "band", "data")
+    val timesOf = windows(spark, cfg)
+      .flatMap { case (time, periods) => periods.map(_ -> time) }
+      .groupMap(_._1)(_._2)
+    val slices = scenes.select($"tile_id",
+      explode(element_at(typedLit(timesOf), $"period")).as("time"),
+      $"band", $"period".as("t"), $"data")
+    graft.agg.TemporalReduce.maskedReduce[(String, Timestamp)](slices,
+        Seq($"tile_id", $"time"), cfg.dataset.bands.length, cfg.dataset.reduction,
+        cfg.chunkPx * cfg.chunkPx)
+      .select($"_1._1".as("tile_id"), $"_1._2".as("time"), $"_2".as("band"), $"_3".as("data"))
   }
 
   /** E1: assemble features into the chunked store — tiles become the chunk
@@ -117,12 +115,7 @@ object MosaicPipeline {
   def buildMosaic(spark: SparkSession, cfg: Config, grid: DataFrame,
                   features: DataFrame): (GridDef, Seq[Region]) = {
     import spark.implicits._
-    val times = cfg.times.map(t =>
-      new Timestamp(java.time.LocalDateTime.of(
-        t.toLocalDateTime.getYear, 1, 1, 0, 0).atZone(java.time.ZoneOffset.UTC)
-        .toInstant.toEpochMilli))
-      .distinct.sorted
-    val timeIndex = times.zipWithIndex.toMap
+    val times = windows(spark, cfg).map(_._1)
     val tiles = Envelopes.tilesIntersecting(grid, cfg.query)
       .select($"tile_id", $"xmin", $"ymin").collect()
     val lons = tiles.map(_.getDouble(1)).distinct.sorted
@@ -142,7 +135,7 @@ object MosaicPipeline {
     graft.zarr.ZarrStore.init(cfg.storeRoot, gridDef, bands = cfg.dataset.bands)
 
     val bTile = spark.sparkContext.broadcast(tileCell)
-    val bTime = spark.sparkContext.broadcast(timeIndex.map { case (k, v) => (k.getTime, v) })
+    val bTime = spark.sparkContext.broadcast(times.map(_.getTime).zipWithIndex.toMap)
     val chunks: Dataset[ChunkRow] = features
       .as[(String, Timestamp, Int, Array[Float])]
       .map { case (tile, time, band, data) =>

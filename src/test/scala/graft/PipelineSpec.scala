@@ -273,13 +273,7 @@ class PipelineSpec extends AnyFunSuite with SparkSpecBase {
 
     // hand-compute cell 0 of band 0 for the tile at (cy, cx) = (0, 0):
     // lats sorted -> 40 is index 0; lons -> -2 index 0; that tile's id:
-    val tileId = {
-      import graft.geo.Envelopes
-      import org.apache.spark.sql.functions.col
-      Envelopes.tilesIntersecting(Envelopes.tileGrid(spark, query), query)
-        .filter(col("xmin") === -2.0 && col("ymin") === 40.0)
-        .select("tile_id").collect().head.getString(0)
-    }
+    val tileId = tileAt(-2.0, 40.0)
     val nBands = 8
     val kept = refPeriods.filter { p =>
       MosaicPipeline.pixel(tileId, p, nBands - 1, 0, nBands) == 1f
@@ -298,12 +292,54 @@ class PipelineSpec extends AnyFunSuite with SparkSpecBase {
     assert(ArrayStore.existingKeys(spark, store).count() == before)
   }
 
+  private def tileAt(xmin: Double, ymin: Double): String = {
+    import graft.geo.Envelopes
+    import org.apache.spark.sql.functions.col
+    Envelopes.tilesIntersecting(Envelopes.tileGrid(spark, query), query)
+      .filter(col("xmin") === xmin && col("ymin") === ymin)
+      .select("tile_id").collect().head.getString(0)
+  }
+
   test("median dataset runs the holistic reducer end-to-end") {
     val store = java.nio.file.Files.createTempDirectory("graft-pipe-med").toString
     val cfg = MosaicPipeline.Config(query, Seq(t0), AnnualMedianDataset, store, chunkPx = 4)
     val (cube, _, _) = MosaicPipeline.run(spark, cfg)
     val r = cube.filter(c => c.band == 1 && c.cy == 0 && c.cx == 1).collect().head
-    assert(r.data.length == 16 && !r.data(0).isNaN)
+    assert(r.data.length == 16)
+    // cell 0 of band 1 for the tile at (cy, cx) = (0, 1): lat 40, lon -1
+    val tileId = tileAt(-1.0, 40.0)
+    val nBands = 8
+    val kept = refPeriods
+      .filter(p => MosaicPipeline.pixel(tileId, p, nBands - 1, 0, nBands) == 1f)
+      .map(p => MosaicPipeline.pixel(tileId, p, 1, 0, nBands)).sorted
+    val m = kept.size
+    assert(m >= 2)
+    val expected = if (m % 2 == 1) kept(m / 2) else (kept(m / 2 - 1) + kept(m / 2)) / 2.0f
+    assert(r.data(0) == expected, s"${r.data(0)} != $expected over $kept")
+  }
+
+  test("the store's time axis follows the session zone, not the JVM default zone") {
+    // 00:30 on Jan 1 in Tokyo is still the previous year in the UTC session:
+    // the features snap to 2020 and the axis must hold that same time
+    val saved = java.util.TimeZone.getDefault
+    val (tokyo, t) =
+      try {
+        java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("Asia/Tokyo"))
+        val t = Timestamp.valueOf("2021-01-01 00:30:00")
+        val store = java.nio.file.Files.createTempDirectory("graft-pipe-tz").toString
+        val (cube, grid, _) = MosaicPipeline.run(spark,
+          MosaicPipeline.Config(query, Seq(t), AnnualMeanDataset, store, chunkPx = 4))
+        assert(grid.nTime == 1)
+        (cube.collect(), t)
+      } finally java.util.TimeZone.setDefault(saved)
+    // the same instant under the restored default zone builds the same store
+    val store = java.nio.file.Files.createTempDirectory("graft-pipe-tz-ref").toString
+    val (ref, _, _) = MosaicPipeline.run(spark,
+      MosaicPipeline.Config(query, Seq(t), AnnualMeanDataset, store, chunkPx = 4))
+    def bits(rows: Array[graft.cube.ChunkRow]) =
+      rows.map(r => (r.time, r.band, r.cy, r.cx) -> r.data.map(java.lang.Float.floatToIntBits).toSeq).toMap
+    assert(tokyo.length == 7 * 2 * 3)
+    assert(bits(tokyo) == bits(ref.collect()))
   }
 
   test("feature COG sink writes reopenable tifs at deterministic paths, idempotently") {

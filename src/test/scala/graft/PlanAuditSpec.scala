@@ -522,4 +522,35 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpecBase {
       assert(!plan.contains("CartesianProduct"), s"$name: $plan")
     }
   }
+
+  test("E3 buildFeatures: ONE shuffle of the scene rows, no join over them, no zip_with mask") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.ZipWith // zip_with over arrays
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.pipelines.MosaicPipeline
+    val cfg = MosaicPipeline.Config(graft.model.Envelope(-1.5, 40.2, 0.3, 41.8),
+      Seq(java.sql.Timestamp.valueOf("2021-06-15 00:00:00")), graft.model.AnnualMeanDataset,
+      "unused", chunkPx = 4)
+    val grid = graft.geo.Envelopes.tileGrid(spark, cfg.query)
+    val scenes = MosaicPipeline.ingestScenes(spark, cfg, grid, Seq.empty[String].toDF("url"))
+    val df = MosaicPipeline.buildFeatures(spark, cfg, grid, scenes)
+    // the AQE initial plan: physical, with its Exchanges placed
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    // scene rows are the operators whose output carries the chunk payload;
+    // planning scenes (tile x period x band metadata) may join freely
+    def sceneRows(p: SparkPlan): Boolean = p.output.exists(_.name == "data")
+    val joins = plan.collect { case j: BaseJoinExec if j.children.exists(sceneRows) => j }
+    val shuffles = plan.collect { case e: ShuffleExchangeExec if sceneRows(e.child) => e }
+    val zips = plan.collect {
+      case n if n.expressions.exists(_.exists(_.isInstanceOf[ZipWith])) => n
+    }
+    assert(joins.isEmpty, plan.toString)
+    assert(shuffles.size == 1, plan.toString)
+    assert(zips.isEmpty, plan.toString)
+  }
 }
