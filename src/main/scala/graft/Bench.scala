@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
@@ -47,25 +45,9 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.sfDir
     val loadStart = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local[N] shuffles move through the page cache, not a network:
-      // lz4 framing is pure CPU overhead at this scale (a real cluster
-      // would keep compression on — these two are bench-host tuning, not
-      // engine semantics)
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = Harness.session()
 
     // warmup: touch every table (schema + listing caches) and run one
     // small query end-to-end (codegen + shuffle machinery)
@@ -105,8 +87,7 @@ object Bench {
     // storage-memory residue from query N can't distort query N+1's timing
     def timed(name: String)(run: () => Any): (String, Either[String, Double]) = {
       val outcome = timeQuery(run)
-      graft.ops.ScratchCache.releaseAll()
-      spark.catalog.clearCache()
+      Harness.release(spark)
       name -> outcome
     }
     def pass() =
@@ -161,10 +142,11 @@ object Bench {
       s""""load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpu_sec":${fmt(cpuSec)}"""
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"queries":${jsonMap(results)},"failed":${failedJson(failed)},"sf":"$sfDir"}"""
-    // CWD-relative (or env-overridden) so any checkout gets the file; a
+    // CWD-relative (or env-overridden) so any checkout gets the file, and
+    // named by core count so a run at one width keeps another's record; a
     // failed write is logged, not swallowed — the stdout line advertises it
     val fullPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "BENCH_FULL.json"))
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", s"BENCH_FULL_c${Harness.cpus}.json"))
       .toAbsolutePath
     scala.util.Try(java.nio.file.Files.write(
       fullPath, (full + "\n").getBytes("utf-8"))) match {

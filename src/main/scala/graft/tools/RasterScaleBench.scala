@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Raster-path scale bench (VERDICT r13 item 4): the E2→E3→E1 mosaic
   * pipeline at 110 / 1,024 / 10,000 one-degree tiles — the §2 core
   * (S2/S3/S8/S9 + O8 region planning) measured beyond the single
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
   * confirm the fan-out is carried by the Dataset, not a driver loop. */
 object RasterScaleBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .appName("raster-scale-bench").master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
 
     // ~square envelopes: 10×11=110 (the committed bench row), 32×32=1024,
     // 100×100=10000 tiles
@@ -50,7 +42,7 @@ object RasterScaleBench {
         Seq(java.sql.Timestamp.valueOf("2021-06-15 00:00:00")),
         graft.model.AnnualMeanDataset, store, chunkPx = 16)
       graft.pipelines.MosaicPipeline.run(spark, cfg)._1.count()
-      spark.catalog.clearCache()
+      graft.Harness.release(spark)
     }
 
     for ((label, env) <- sizes if wanted(label)) {
@@ -112,8 +104,7 @@ object RasterScaleBench {
         f"write=${tWrite}%6.2f s  readback=${tRead}%6.2f s  " +
         f"chunks=$nChunks%7d files=$chunkFiles%7d regions=${regions.size}%5d " +
         f"grid=${gridDef.nY}x${gridDef.nX}")
-      graft.ops.ScratchCache.releaseAll()
-      spark.catalog.clearCache()
+      graft.Harness.release(spark)
       // drop the scratch stores so 10k-tile runs don't accumulate disk
       for (st <- Seq(store, store2)) scala.util.Try {
         val s = java.nio.file.Files.walk(java.nio.file.Paths.get(st))

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import graft.ops.PlanGuard
 import graft.queries.{Relational, Temporal}
 
 /** Shuffle-budget audit: the plan shapes that matter at 100 TB, asserted
@@ -10,15 +11,17 @@ import graft.queries.{Relational, Temporal}
   * these is a scale bug even when results stay correct. */
 class PlanAuditSpec extends AnyFunSuite with SparkSpecBase {
 
-  // sparkPlan predates EnsureRequirements (no Exchanges yet); count on the
-  // executedPlan rendering, which includes the AQE initial plan
+  // sparkPlan predates EnsureRequirements (no Exchanges yet); match and
+  // count on the executedPlan, which includes the AQE initial plan — counts
+  // from its digest, whose walk covers every operator the rendering shows
   private def planStr(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
-  private def shuffles(df: DataFrame): Int =
-    "Exchange (hash|range|SinglePartition|rangepartitioning|hashpartitioning)".r
-      .findAllIn(planStr(df)).size
-  private def broadcasts(df: DataFrame): Int =
-    "BroadcastExchange".r.findAllIn(planStr(df)).size
+  // keyed and funnelling shuffles; round-robin repartitions are not counted
+  private def shuffles(df: DataFrame): Int = {
+    val exchanges = PlanGuard.digest(df).exchanges
+    Seq("hash", "range", "single").map(exchanges.getOrElse(_, 0)).sum
+  }
+  private def broadcasts(df: DataFrame): Int = PlanGuard.digest(df).broadcasts
 
   test("q01 pricing summary: one shuffle (partial+final agg), ignoring the output sort") {
     // the ORDER BY adds a range exchange; the aggregation itself must be 1
@@ -392,7 +395,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpecBase {
     val df = Relational.q216RevenueConcentration(spark, sfSmoke)
     val plan = planStr(df)
     // both consumers (total + final rows) read the cached |parts| frame
-    assert("InMemoryTableScan".r.findAllIn(plan).size >= 2, plan)
+    assert(PlanGuard.digest(df).inMemoryScans >= 2, plan)
     assert(!plan.contains("Window"), plan)
     graft.ops.ScratchCache.releaseAll()
   }
