@@ -1,7 +1,6 @@
 package graft.zarr
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.cube.ChunkRow
 import graft.model.GridDef
@@ -58,21 +57,8 @@ object ArrayStore {
 
   /** S9: idempotent parallel chunk writes. Deterministic output keys +
     * write-temp-then-atomic-rename ⇒ safe under retry and speculation. */
-  def write(ds: Dataset[ChunkRow], root: String): Unit = {
-    ds.foreachPartition { (it: Iterator[ChunkRow]) =>
-      val cdir = Paths.get(root, "c")
-      it.foreach { r =>
-        val bytes = new Array[Byte](r.data.length * 4)
-        ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-          .asFloatBuffer().put(r.data)
-        val dst = cdir.resolve(s"${r.time}.${r.band}.${r.cy}.${r.cx}")
-        val tmp = cdir.resolve(s".${dst.getFileName}.${java.util.UUID.randomUUID}.tmp")
-        Files.write(tmp, bytes)
-        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-  }
+  def write(ds: Dataset[ChunkRow], root: String): Unit =
+    ChunkWriter.write(ds, ChunkFormat.Raw(root))
 
   /** S4: re-open the store as a chunk table via the DataSourceV2 source —
     * chunk keys live in file names, so key predicates push down and prune
@@ -85,11 +71,11 @@ object ArrayStore {
 
   /** Chunk-level existence listing for incremental writes (J3 over the
     * store: list once, anti-join, write only missing). Layout-independent:
-    * works for the raw and Zarr v2 layouts via the source's detection. */
+    * works for every layout `ChunkFormat.of` detects. */
   def existingKeys(spark: SparkSession, root: String): Dataset[(Int, Int, Int, Int)] = {
     import spark.implicits._
-    ChunkStoreSource.listKeys(root)
-      .map { case (k, _) => (k.time, k.band, k.cy, k.cx) }.toDS()
+    ChunkFormat.of(root).list()
+      .map { f => (f.key.time, f.key.band, f.key.cy, f.key.cx) }.toDS()
   }
 
   /** S10: usage accounting — per top-level entry under `root`, recursive

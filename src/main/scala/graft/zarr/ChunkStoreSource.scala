@@ -1,7 +1,5 @@
 package graft.zarr
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
 import java.util
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
@@ -43,81 +41,17 @@ object ChunkStoreSource {
     StructField("cx", IntegerType, nullable = false),
     StructField("data", ArrayType(FloatType, containsNull = false), nullable = false)))
 
-  final case class Key(time: Int, band: Int, cy: Int, cx: Int)
-
-  /** Detected store layout: chunk directory, decompressed chunk size
-    * (0 = raw float32 files), decompression codec, whether chunk keys
-    * are nested directories (Zarr v3 default encoding) or flat names,
-    * and — for a v3 `sharding_indexed` array — the chunks-per-shard
-    * factors (listed keys are then SHARD coordinates; inner chunks live
-    * behind each shard's trailing index). Key layout and codec are
-    * INDEPENDENT spec dimensions — kept as separate fields so a future
-    * codec variant cannot break listing. */
-  final case class StoreLayout(dir: String, inflateTo: Int, codec: String,
-                               nestedKeys: Boolean,
-                               shard: Option[(Int, Int)] = None,
-                               transpose: Option[(Int, Int)] = None)
-
-  /** Store layout detection: the raw layout keeps chunks under `c/`
-    * (flat `t.b.cy.cx` names); a Zarr v2 store under `<var>/` beside
-    * `.zarray` (zlib, flat dot keys); a Zarr v3 store under
-    * `<var>/c/<t>/<b>/<cy>/<cx>` beside `zarr.json` (gzip codec, nested
-    * default chunk-key encoding), plain OR sharded. One source serves
-    * all of them, so every externally-readable layout gets the same
-    * plan-time pruning. */
-  def layout(root: String): StoreLayout = {
-    if (Files.exists(Paths.get(root, "data", "zarr.json"))) {
-      val l = ZarrStoreV3.readLayout(root)
-      StoreLayout(s"$root/data/c", l.grid.chunkY * l.grid.chunkX * 4, "gzip",
-        nestedKeys = true, shard = l.shard,
-        transpose =
-          if (l.transposeYX) Some((l.grid.chunkY, l.grid.chunkX)) else None)
-    } else if (Files.exists(Paths.get(root, "data", ".zarray"))) {
-      val g = ZarrStore.readGrid(root)
-      StoreLayout(s"$root/data", g.chunkY * g.chunkX * 4, "zlib", nestedKeys = false)
-    } else StoreLayout(s"$root/c", 0, "raw", nestedKeys = false)
-  }
-
-  def listKeys(root: String): Seq[(Key, String)] = {
-    val l = layout(root)
-    val dirStr = l.dir
-    val dir = Paths.get(dirStr)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    if (l.nestedKeys) { // v3 nested keys: c/<t>/<b>/<cy>/<cx>
-      val s = Files.walk(dir, 4)
-      try s.iterator().asScala
-        .filter(Files.isRegularFile(_))
-        .flatMap { p =>
-          val rel = dir.relativize(p).toString.replace('\\', '/')
-          // toIntOption on EVERY component: a stray non-numeric entry at any
-          // depth (editor backup, lost+found) must skip the file, not abort
-          // the scan with a NumberFormatException
-          rel.split('/') match {
-            case Array(t, b, cy, cx) =>
-              for (ti <- t.toIntOption; bi <- b.toIntOption;
-                   yi <- cy.toIntOption; xi <- cx.toIntOption)
-                yield Key(ti, bi, yi, xi) -> p.toString
-            case _ => None
-          }
-        }.toSeq
-      finally s.close()
-    } else {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filterNot(_.startsWith("."))
-        .flatMap { n =>
-          n.split('.') match {
-            case Array(t, b, cy, cx) =>
-              for (ti <- t.toIntOption; bi <- b.toIntOption;
-                   yi <- cy.toIntOption; xi <- cx.toIntOption)
-                yield Key(ti, bi, yi, xi) -> s"$dirStr/$n"
-            case _ => None
-          }
-        }.toSeq
-      finally s.close()
+  final case class Key(time: Int, band: Int, cy: Int, cx: Int) {
+    /** The value of key column `col`. */
+    def apply(col: String): Int = col match {
+      case "time" => time; case "band" => band
+      case "cy" => cy; case "cx" => cx
+      case other => throw new IllegalArgumentException(s"not a key column: $other")
     }
   }
+
+  /** The store's chunk format, detected from its metadata. */
+  def layout(root: String): ChunkFormat = ChunkFormat.of(root)
 
   private val keyCols = Set("time", "band", "cy", "cx")
 
@@ -129,27 +63,20 @@ object ChunkStoreSource {
     * unknown shape can never appear beneath it. Key columns are non-nullable
     * ints, so `<=>` degenerates to `=`, IsNull is constant-false and
     * IsNotNull constant-true. */
-  def keep(f: Filter, k: Key): Boolean = {
-    def v(attr: String): Int = attr match {
-      case "time" => k.time; case "band" => k.band
-      case "cy" => k.cy; case "cx" => k.cx
-      case other => throw new IllegalStateException(s"non-key attr $other pushed")
-    }
-    f match {
-      case EqualTo(a, x: Int)            => v(a) == x
-      case EqualNullSafe(a, x: Int)      => v(a) == x
-      case GreaterThan(a, x: Int)        => v(a) > x
-      case GreaterThanOrEqual(a, x: Int) => v(a) >= x
-      case LessThan(a, x: Int)           => v(a) < x
-      case LessThanOrEqual(a, x: Int)    => v(a) <= x
-      case In(a, xs)                     => xs.contains(v(a))
-      case IsNull(_)                     => false
-      case IsNotNull(_)                  => true
-      case And(l, r)                     => keep(l, k) && keep(r, k)
-      case Or(l, r)                      => keep(l, k) || keep(r, k)
-      case Not(g)                        => !keep(g, k)
-      case other => throw new IllegalStateException(s"unevaluable filter $other pushed")
-    }
+  def keep(f: Filter, k: Key): Boolean = f match {
+    case EqualTo(a, x: Int)            => k(a) == x
+    case EqualNullSafe(a, x: Int)      => k(a) == x
+    case GreaterThan(a, x: Int)        => k(a) > x
+    case GreaterThanOrEqual(a, x: Int) => k(a) >= x
+    case LessThan(a, x: Int)           => k(a) < x
+    case LessThanOrEqual(a, x: Int)    => k(a) <= x
+    case In(a, xs)                     => xs.contains(k(a))
+    case IsNull(_)                     => false
+    case IsNotNull(_)                  => true
+    case And(l, r)                     => keep(l, k) && keep(r, k)
+    case Or(l, r)                      => keep(l, k) || keep(r, k)
+    case Not(g)                        => !keep(g, k)
+    case other => throw new IllegalStateException(s"unevaluable filter $other pushed")
   }
 
   /** Pushdown accept-list — MUST match `keep`'s evaluate-list exactly,
@@ -173,19 +100,23 @@ object ChunkStoreSource {
   }
 }
 
+/** The store's format is detected once, when the store is opened: every
+  * scan built from this table shares it, and metadata the decoder cannot
+  * read fails the `load`. */
 class ChunkStoreTable(root: String) extends Table with SupportsRead {
+  private val format = ChunkFormat.of(root)
   override def name(): String = s"graft_chunks($root)"
   override def schema(): StructType = ChunkStoreSource.schema
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ChunkScanBuilder(root,
+    new ChunkScanBuilder(root, format,
       options.getLong("maxPartitionBytes", 128L * 1024 * 1024),
       Option(options.get("keyGroupedBy")).map(_.split(',').map(_.trim).toSeq)
         .getOrElse(Nil))
 }
 
-class ChunkScanBuilder(root: String, maxPartitionBytes: Long,
+class ChunkScanBuilder(root: String, format: ChunkFormat, maxPartitionBytes: Long,
                        keyGroupedBy: Seq[String] = Nil)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownAggregates
@@ -198,10 +129,11 @@ class ChunkScanBuilder(root: String, maxPartitionBytes: Long,
   private var required: StructType = ChunkStoreSource.schema
 
   /** Column pruning. Key columns come from FILE NAMES, so a projection
-    * that drops `data` never opens a payload at all (plain layouts) or
-    * reads only the trailing shard index (sharded layouts) — "which
-    * chunks exist per scene" style queries on a 100 TB store do zero
-    * payload IO even when they aren't expressible as pushed aggregates. */
+    * that drops `data` never opens a payload at all (plain layouts), or
+    * reads each shard file whole for its trailing index but decodes no
+    * inner chunk (sharded layouts) — "which chunks exist per scene" style
+    * queries on a 100 TB store decode no payload even when they aren't
+    * expressible as pushed aggregates. */
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
@@ -225,7 +157,7 @@ class ChunkScanBuilder(root: String, maxPartitionBytes: Long,
     * lives behind per-shard indexes, so sharded layouts refuse the push
     * and take the ordinary payload-reading path. */
   private def canPush(agg: Aggregation): Boolean =
-    ChunkStoreSource.layout(root).shard.isEmpty &&
+    format.shard.isEmpty &&
       agg.groupByExpressions.forall(keyRef(_).isDefined) &&
       agg.aggregateExpressions.forall {
         case _: CountStar => true
@@ -244,9 +176,9 @@ class ChunkScanBuilder(root: String, maxPartitionBytes: Long,
   }
 
   override def build(): Scan = pushedAgg match {
-    case Some(a) => new ChunkAggScan(root, pushed, a)
+    case Some(a) => new ChunkAggScan(root, format, pushed, a)
     case None =>
-      new ChunkScan(root, pushed, maxPartitionBytes, required, keyGroupedBy)
+      new ChunkScan(root, format, pushed, maxPartitionBytes, required, keyGroupedBy)
   }
 }
 
@@ -255,7 +187,7 @@ class ChunkScanBuilder(root: String, maxPartitionBytes: Long,
   * corrupting a payload and aggregating anyway). Rows ship as one
   * driver-computed InputPartition; output order is Spark's pushed-agg
   * contract: group columns first, then aggregate columns. */
-class ChunkAggScan(root: String, filters: Array[Filter],
+class ChunkAggScan(root: String, format: ChunkFormat, filters: Array[Filter],
                    agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
     extends Scan with Batch {
   import org.apache.spark.sql.connector.expressions.NamedReference
@@ -282,19 +214,15 @@ class ChunkAggScan(root: String, filters: Array[Filter],
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    def v(k: ChunkStoreSource.Key, c: String): Int = c match {
-      case "time" => k.time; case "band" => k.band
-      case "cy" => k.cy; case "cx" => k.cx
-    }
-    val keys = ChunkStoreSource.listKeys(root).map(_._1)
+    val keys = format.list().map(_.key)
       .filter(k => filters.forall(ChunkStoreSource.keep(_, k)))
     val gc = groupCols
-    val rows = keys.groupBy(k => gc.map(v(k, _)))
+    val rows = keys.groupBy(k => gc.map(k(_)))
       .toSeq.map { case (g, ks) =>
         val aggVals = agg.aggregateExpressions.toSeq.map {
           case _: CountStar => ks.size.toLong: Any
-          case m: Min => ks.map(v(_, refName(m.column))).min: Any
-          case m: Max => ks.map(v(_, refName(m.column))).max: Any
+          case m: Min => ks.map(_(refName(m.column))).min: Any
+          case m: Max => ks.map(_(refName(m.column))).max: Any
           case other =>
             throw new IllegalStateException(s"unpushable agg $other")
         }
@@ -311,22 +239,36 @@ final case class ChunkAggPartition(rows: Array[Array[Any]])
 
 object ChunkAggReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new PartitionReader[InternalRow] {
-      private val rows = p.asInstanceOf[ChunkAggPartition].rows
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = new GenericInternalRow(rows(i))
-      override def close(): Unit = ()
-    }
+    new RowReader(p.asInstanceOf[ChunkAggPartition].rows.iterator
+      .map(new GenericInternalRow(_)))
 }
 
-class ChunkScan(root: String, filters: Array[Filter], maxPartitionBytes: Long,
+private[zarr] final class RowReader(rows: Iterator[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private var row: InternalRow = _
+  override def next(): Boolean =
+    if (!rows.hasNext) false else { row = rows.next(); true }
+  override def get(): InternalRow = row
+  override def close(): Unit = ()
+}
+
+class ChunkScan(root: String, format: ChunkFormat, filters: Array[Filter],
+                maxPartitionBytes: Long,
                 required: StructType = ChunkStoreSource.schema,
                 keyGroupedBy: Seq[String] = Nil)
     extends Scan with Batch with SupportsRuntimeFiltering
     with SupportsReportStatistics with SupportsReportPartitioning {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+
+  /** A scan of the store at `root`, its format detected here. */
+  def this(root: String, filters: Array[Filter], maxPartitionBytes: Long) =
+    this(root, ChunkFormat.of(root), filters, maxPartitionBytes)
+
+  /** The store's chunk files and sizes, listed once on first use:
+    * statistics, partition planning and the reported partitioning all
+    * read this one snapshot. */
+  private lazy val listing: Seq[ChunkFile] = format.list()
 
   override def readSchema(): StructType = required
 
@@ -364,37 +306,31 @@ class ChunkScan(root: String, filters: Array[Filter], maxPartitionBytes: Long,
   override def filter(fs: Array[Filter]): Unit =
     runtimeFilters = fs.filter(ChunkStoreSource.evaluable)
 
+  /** Plain layout: listed keys ARE row keys — pruning is exact. Sharded
+    * layout: listed keys are SHARD coords; a shard survives when ANY of
+    * its inner keys satisfies the filters, and the reader re-applies the
+    * filters per inner chunk — the pushdown contract (accepted == fully
+    * enforced) holds end to end, pruning just moves to shard granularity
+    * at plan time. */
+  private def surviving(fs: Array[Filter]): Seq[ChunkFile] =
+    listing.filter(f => format.innerKeys(f.key)
+      .exists(k => fs.forall(ChunkStoreSource.keep(_, k))))
+
   /** Plan-time stats from the pruned listing, so Catalyst's join sizing
     * sees the store's true (post-static-filter) size instead of the
     * "unknown = infinite" DSv2 default — a small chunk table then
     * BROADCASTS into joins against big fact frames. Rows: one per
     * surviving key (sharded layouts report the sy·sx upper bound — stats
     * may overestimate, never underestimate, so a broadcast decision is
-    * always safe). Bytes: decompressed row footprint (key ints + payload
+    * always safe). Bytes: decoded row footprint (key ints + payload
     * floats), the in-memory size join planning actually cares about. */
   override def estimateStatistics(): Statistics = {
-    val l = ChunkStoreSource.layout(root)
-    val surviving = ChunkStoreSource.listKeys(root).filter { case (k, _) =>
-      l.shard match {
-        case None => filters.forall(ChunkStoreSource.keep(_, k))
-        case Some((sy, sx)) =>
-          (0 until sy).exists { iy => (0 until sx).exists { ix =>
-            val inner = ChunkStoreSource.Key(k.time, k.band,
-              k.cy * sy + iy, k.cx * sx + ix)
-            filters.forall(ChunkStoreSource.keep(_, inner))
-          }}
-      }
-    }
-    val perFile = l.shard.map { case (sy, sx) => sy.toLong * sx }.getOrElse(1L)
-    val rows = surviving.size * perFile
+    val files = surviving(filters)
+    val rows = files.size.toLong * format.chunksPerFile
     val payload =
       if (!required.fieldNames.contains("data")) 0L // pruned: keys only
-      else if (l.inflateTo > 0) l.inflateTo.toLong
-      else if (surviving.isEmpty) 0L
-      else { // raw layout: payload bytes == file bytes; sample the first file
-        try Files.size(Paths.get(surviving.head._2)) catch { case _: Exception => 0L }
-      }
-    val bytes = rows * (16L + payload)
+      else files.iterator.map(format.decodedBytes).sum
+    val bytes = rows * 16L + payload
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)
@@ -414,8 +350,6 @@ class ChunkScan(root: String, filters: Array[Filter], maxPartitionBytes: Long,
     * per million entries); a store beyond that keeps a manifest table
     * instead of a listing — the GtiMosaic pattern. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val l = ChunkStoreSource.layout(root)
-    val (inflateTo, codec) = (l.inflateTo, l.codec)
     // static pushed filters + any join-driven runtime filters: both prune
     // identically (runtime ones just arrive after the build side executed).
     // Key-grouped mode ignores runtime filters — dropping whole groups at
@@ -424,93 +358,50 @@ class ChunkScan(root: String, filters: Array[Filter], maxPartitionBytes: Long,
     val filters =
       if (keyGroupedBy.nonEmpty) this.filters
       else this.filters ++ runtimeFilters
-    // Plain layout: listed keys ARE row keys — pruning is exact here.
-    // Sharded layout: listed keys are SHARD coords; a shard survives when
-    // ANY of its inner keys satisfies the filters (exact existence test by
-    // enumerating the ≤ sy·sx inner keys), and the reader re-applies the
-    // filters per inner chunk — the pushdown contract (accepted == fully
-    // enforced) holds end to end, pruning just moves to shard granularity
-    // at plan time.
-    def keepFile(k: ChunkStoreSource.Key): Boolean = l.shard match {
-      case None => filters.forall(ChunkStoreSource.keep(_, k))
-      case Some((sy, sx)) =>
-        (0 until sy).exists { iy =>
-          (0 until sx).exists { ix =>
-            val inner = ChunkStoreSource.Key(k.time, k.band,
-              k.cy * sy + iy, k.cx * sx + ix)
-            filters.forall(ChunkStoreSource.keep(_, inner))
-          }
-        }
-    }
-    val files = ChunkStoreSource.listKeys(root)
-      .filter { case (k, _) => keepFile(k) }
-      .sortBy { case (k, _) => (k.time, k.band, k.cy, k.cx) }
-    val fields = required.fieldNames
+    val files = surviving(filters)
+      .sortBy(f => (f.key.time, f.key.band, f.key.cy, f.key.cx))
+    def part(fs: Array[ChunkFile]) =
+      ChunkInputPartition(fs, format, filters, required.fieldNames)
     if (keyGroupedBy.nonEmpty) {
       // one partition per key group, each tagged with its partition-key
       // row (HasPartitionKey) — the SPJ contract. Sorted by key for
       // plan determinism.
-      def kv(k: ChunkStoreSource.Key, c: String): Int = c match {
-        case "time" => k.time; case "band" => k.band
-        case "cy" => k.cy; case "cx" => k.cx
-        case other =>
-          throw new IllegalArgumentException(s"keyGroupedBy: unknown column $other")
-      }
-      return files.groupBy { case (k, _) => keyGroupedBy.map(kv(k, _)) }
-        .toArray
-        .sortBy { case (kv, _) => (kv.lift(0).getOrElse(0),
-          kv.lift(1).getOrElse(0), kv.lift(2).getOrElse(0),
-          kv.lift(3).getOrElse(0)) }
+      import scala.math.Ordering.Implicits.seqOrdering
+      return files.groupBy(f => keyGroupedBy.map(f.key(_))).toArray.sortBy(_._1)
         .map { case (keyVals, fs) =>
-          new KeyedChunkInputPartition(
-            ChunkInputPartition(fs.toArray, inflateTo, codec, l.shard,
-              filters, l.transpose, fields),
-            keyVals.toArray): InputPartition
+          new KeyedChunkInputPartition(part(fs.toArray), keyVals.toArray): InputPartition
         }
     }
-    if (files.isEmpty)
-      return Array(ChunkInputPartition(Array.empty, inflateTo, codec,
-        l.shard, filters, l.transpose, fields))
-    val sized = files.map { f =>
-      (f, try Files.size(Paths.get(f._2)) catch { case _: Exception => 0L })
-    }
-    val totalBytes = sized.map(_._2).sum
+    if (files.isEmpty) return Array(part(Array.empty))
+    val totalBytes = files.iterator.map(_.size).sum
     val parallelism = org.apache.spark.sql.SparkSession.active
       .sparkContext.defaultParallelism.toLong.max(1L)
     val openCost = 4L * 1024 // per-file overhead floor, as in FilePartition
     val budget = math.min(maxPartitionBytes,
       math.max(openCost, totalBytes / parallelism + 1))
     val parts = Array.newBuilder[InputPartition]
-    val cur = Array.newBuilder[(ChunkStoreSource.Key, String)]
+    val cur = Array.newBuilder[ChunkFile]
     var curBytes = 0L; var curN = 0
-    for ((f, sz) <- sized) {
-      val cost = math.max(sz, openCost)
+    for (f <- files) {
+      val cost = math.max(f.size, openCost)
       if (curN > 0 && curBytes + cost > budget) {
-        parts += ChunkInputPartition(cur.result(), inflateTo, codec,
-          l.shard, filters, l.transpose, fields)
+        parts += part(cur.result())
         cur.clear(); curBytes = 0L; curN = 0
       }
       cur += f; curBytes += cost; curN += 1
     }
-    if (curN > 0) parts += ChunkInputPartition(cur.result(), inflateTo, codec,
-      l.shard, filters, l.transpose, fields)
+    if (curN > 0) parts += part(cur.result())
     parts.result()
   }
   override def createReaderFactory(): PartitionReaderFactory = ChunkReaderFactory
 }
 
-/** `inflateTo` > 0 marks compressed (Zarr) payloads of that decompressed
-  * byte size; 0 = raw float32 files. `codec` picks the decompressor:
-  * "zlib" (Zarr v2 compressor) or "gzip" (Zarr v3 codec, RFC 1952).
-  * `shard` = (chunksY, chunksX) per shard when files are v3 shards — the
-  * reader then walks each shard's trailing index and re-applies `filters`
-  * per inner chunk (exactness half of the pushdown contract). */
+/** Chunk files for one read task, the store's format to decode them, the
+  * pushed filters (re-applied per chunk: a shard file holds chunks the
+  * filters reject) and the output columns. */
 final case class ChunkInputPartition(
-    files: Array[(ChunkStoreSource.Key, String)], inflateTo: Int = 0,
-    codec: String = "raw", shard: Option[(Int, Int)] = None,
-    filters: Array[Filter] = Array.empty,
-    transpose: Option[(Int, Int)] = None,
-    fields: Array[String] = ChunkStoreSource.schema.fieldNames)
+    files: Array[ChunkFile], format: ChunkFormat,
+    filters: Array[Filter], fields: Array[String])
     extends InputPartition
 
 /** A chunk partition tagged with its partition-key row — what
@@ -524,100 +415,20 @@ final class KeyedChunkInputPartition(
 
 object ChunkReaderFactory extends PartitionReaderFactory {
 
-  private def gunzipExact(raw: Array[Byte], from: Int, len: Int,
-                          inflateTo: Int, what: String): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(raw, from, len))
-    try {
-      val b = in.readNBytes(inflateTo)
-      val exhausted = in.read() == -1
-      if (b.length != inflateTo || !exhausted)
-        throw new java.io.IOException(
-          s"gzip chunk $what: expected $inflateTo bytes, " +
-            s"got ${b.length}${if (exhausted) "" else " plus trailing data"}")
-      b
-    } finally in.close()
-  }
-
-  private def decodeFloats(bytes: Array[Byte],
-                           transpose: Option[(Int, Int)]): GenericArrayData = {
-    val stored = new Array[Float](bytes.length / 4)
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      .asFloatBuffer().get(stored)
-    // x-major store (`transpose` codec, order [0,1,3,2]): permute back to
-    // the engine's logical row-major [y][x]
-    val floats = transpose match {
-      case Some((cy, cx)) =>
-        val out = new Array[Float](stored.length)
-        var x = 0; var i = 0
-        while (x < cx) {
-          var y = 0
-          while (y < cy) { out(y * cx + x) = stored(i); i += 1; y += 1 }
-          x += 1
-        }
-        out
-      case None => stored
-    }
-    new GenericArrayData(floats.map(f => f: Any))
-  }
-
   /** Assemble an output row in the PRUNED schema's field order; `data` is
     * by-name so a key-only projection never decodes (or even reads) the
     * payload. */
   private def projectRow(k: ChunkStoreSource.Key, fields: Array[String],
-                         data: => GenericArrayData): InternalRow = {
+                         data: => Array[Float]): InternalRow = {
     val vals = new Array[Any](fields.length)
     var i = 0
     while (i < fields.length) {
-      vals(i) = fields(i) match {
-        case "time" => k.time
-        case "band" => k.band
-        case "cy"   => k.cy
-        case "cx"   => k.cx
-        case "data" => data
-        case other => throw new IllegalStateException(s"unknown column $other")
-      }
+      vals(i) =
+        if (fields(i) == "data") new GenericArrayData(data.map(f => f: Any))
+        else k(fields(i))
       i += 1
     }
     new GenericInternalRow(vals)
-  }
-
-  /** Sharded read: walk the shard's trailing index — nInner (offset,
-    * nbytes) u64 LE pairs + a crc32c of the index bytes (verified: a
-    * corrupt index must fail HERE with the shard path) — gunzip each
-    * present inner chunk, and re-apply the pushed filters per inner key
-    * (the exactness half of the shard pushdown contract). */
-  private def shardRows(k: ChunkStoreSource.Key, path: String, sy: Int,
-                        sx: Int, inflateTo: Int, filters: Array[Filter],
-                        transpose: Option[(Int, Int)],
-                        fields: Array[String]): Iterator[InternalRow] = {
-    val raw = Files.readAllBytes(Paths.get(path))
-    val nInner = sy * sx
-    val idxLen = nInner * 16 + 4
-    if (raw.length < idxLen)
-      throw new java.io.IOException(
-        s"shard $path: ${raw.length} bytes < index size $idxLen")
-    val idxOff = raw.length - idxLen
-    val crc = new java.util.zip.CRC32C()
-    crc.update(raw, idxOff, nInner * 16)
-    val bb = ByteBuffer.wrap(raw, idxOff, idxLen).order(ByteOrder.LITTLE_ENDIAN)
-    val slots = Array.fill(nInner)((bb.getLong(), bb.getLong()))
-    val stored = bb.getInt()
-    if (stored != crc.getValue.toInt)
-      throw new java.io.IOException(
-        s"shard $path: index crc32c mismatch (stored $stored, computed ${crc.getValue.toInt})")
-    (0 until nInner).iterator.flatMap { i =>
-      val (off, len) = slots(i)
-      if (off == -1L && len == -1L) Iterator.empty // absent inner chunk
-      else {
-        val inner = ChunkStoreSource.Key(k.time, k.band,
-          k.cy * sy + i / sx, k.cx * sx + i % sx)
-        if (!filters.forall(ChunkStoreSource.keep(_, inner))) Iterator.empty
-        else Iterator.single(projectRow(inner, fields,
-          decodeFloats(gunzipExact(raw, off.toInt, len.toInt, inflateTo,
-            s"$path[inner $i]"), transpose)))
-      }
-    }
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
@@ -625,55 +436,9 @@ object ChunkReaderFactory extends PartitionReaderFactory {
       case kp: KeyedChunkInputPartition => kp.inner
       case cp: ChunkInputPartition => cp
     }
-    part.shard match {
-      case Some((sy, sx)) =>
-        val rows = part.files.iterator.flatMap { case (k, path) =>
-          shardRows(k, path, sy, sx, part.inflateTo, part.filters,
-            part.transpose, part.fields)
-        }
-        new PartitionReader[InternalRow] {
-          private var row: InternalRow = _
-          override def next(): Boolean = {
-            if (!rows.hasNext) false else { row = rows.next(); true }
-          }
-          override def get(): InternalRow = row
-          override def close(): Unit = ()
-        }
-      case None => plainReader(part)
-    }
-  }
-
-  private def plainReader(part: ChunkInputPartition): PartitionReader[InternalRow] = {
-    val files = part.files
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < files.length }
-      override def get(): InternalRow = {
-        val (k, path) = files(i)
-        // pruned projection: `data` unrequested ⇒ the payload file is
-        // never opened — keys come from the listing alone
-        projectRow(k, part.fields, {
-          val raw = Files.readAllBytes(Paths.get(path))
-          val bytes =
-            if (part.inflateTo == 0) raw
-            else if (part.codec == "gzip")
-              // truncation fails HERE with the chunk path, not as a
-              // confusing float-decode length mismatch downstream
-              gunzipExact(raw, 0, raw.length, part.inflateTo, path)
-            else {
-              val inf = new java.util.zip.Inflater()
-              inf.setInput(raw)
-              val out = new Array[Byte](part.inflateTo)
-              var off = 0
-              while (!inf.finished() && off < out.length)
-                off += inf.inflate(out, off, out.length - off)
-              inf.end()
-              out
-            }
-          decodeFloats(bytes, part.transpose)
-        })
-      }
-      override def close(): Unit = ()
-    }
+    new RowReader(part.files.iterator.flatMap(part.format.chunks).collect {
+      case (k, data) if part.filters.forall(ChunkStoreSource.keep(_, k)) =>
+        projectRow(k, part.fields, data())
+    })
   }
 }

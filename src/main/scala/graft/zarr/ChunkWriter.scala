@@ -1,74 +1,28 @@
 package graft.zarr
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.Dataset
 import graft.cube.ChunkRow
 
-/** Shared S9 chunk-write body for the Zarr stores: NaN edge-padding to the
-  * declared chunk shape, little-endian C-order float32 encode, compression,
-  * and the temp + UUID + atomic-rename idempotence contract — ONE
-  * implementation so the padding/rename semantics cannot drift between the
-  * v2 and v3 encodings. The two stores differ only in key layout (flat
-  * `t.b.cy.cx` vs nested `c/<t>/<b>/<cy>/<cx>`) and compressor (zlib vs
-  * gzip), passed as flags. */
+/** The one S9 chunk-write path for every layout: each chunk is encoded by
+  * the store's [[ChunkFormat]] and written to its deterministic key via
+  * temp file + atomic rename, so task retries and speculative duplicates
+  * are idempotent with no commit coordination. */
 private[zarr] object ChunkWriter {
 
-  private def deflate(bytes: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(1)
-    d.setInput(bytes); d.finish()
-    val out = new java.io.ByteArrayOutputStream(bytes.length / 2 + 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private[zarr] def gzip(bytes: Array[Byte]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream(bytes.length / 2 + 64)
-    val out = new java.util.zip.GZIPOutputStream(bos) {
-      `def`.setLevel(1) // declared codec level
-    }
-    out.write(bytes); out.close()
-    bos.toByteArray
-  }
-
-  def write(ds: Dataset[ChunkRow], varDir: String, fullLen: Int,
-            nestedKeys: Boolean, gzipCodec: Boolean,
-            transposeYX: Option[(Int, Int)] = None): Unit =
+  def write(ds: Dataset[ChunkRow], format: ChunkFormat): Unit =
     ds.foreachPartition { (it: Iterator[ChunkRow]) =>
       it.foreach { r =>
-        val padded0 =
-          if (r.data.length >= fullLen) r.data
-          else r.data ++ Array.fill(fullLen - r.data.length)(Float.NaN)
-        // x-major store (`transpose` codec [0,1,3,2]): permute the padded
-        // [Y][X] rectangle column-major before encode
-        val padded = transposeYX match {
-          case Some((cy, cx)) =>
-            val out = new Array[Float](padded0.length)
-            var i = 0; var x = 0
-            while (x < cx) {
-              var y = 0
-              while (y < cy) { out(i) = padded0(y * cx + x); i += 1; y += 1 }
-              x += 1
-            }
-            out
-          case None => padded0
-        }
-        val bytes = new Array[Byte](padded.length * 4)
-        ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-          .asFloatBuffer().put(padded)
-        val (dir, name) =
-          if (nestedKeys)
-            (Paths.get(varDir, "c", r.time.toString, r.band.toString,
-              r.cy.toString), r.cx.toString)
-          else (Paths.get(varDir), s"${r.time}.${r.band}.${r.cy}.${r.cx}")
-        Files.createDirectories(dir)
-        val dst = dir.resolve(name)
-        val tmp = dir.resolve(s".$name.${java.util.UUID.randomUUID}.tmp")
-        Files.write(tmp, if (gzipCodec) gzip(bytes) else deflate(bytes))
-        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
+        put(format.path(ChunkStoreSource.Key(r.time, r.band, r.cy, r.cx)),
+          format.encode(r.data))
       }
     }
+
+  def put(dst: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(dst.getParent)
+    val tmp = dst.resolveSibling(s".${dst.getFileName}.${java.util.UUID.randomUUID}.tmp")
+    Files.write(tmp, bytes)
+    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 }

@@ -15,7 +15,7 @@ import graft.cube.{ChunkRow, ChunkTable}
   * stretches over [1, 255], so coverage holes stay visibly black. */
 object StorePreview {
 
-  /** Render one (time, band) slice of the store to `out` (binary PGM).
+  /** Render one (time, band) slice of any layout's store to `out` (PGM).
     * Coarsening factor = the smallest divisor of both chunk dims whose
     * result fits in maxPx×maxPx (falling back to the largest common
     * divisor). Returns (width, height, dataMin, dataMax) of the render. */
@@ -23,14 +23,14 @@ object StorePreview {
                 time: Int = 0, band: Int = 0, maxPx: Int = 512)
       : (Int, Int, Double, Double) = {
     import spark.implicits._
-    val grid = ZarrStore.readGrid(root)
+    val grid = ChunkFormat.of(root).grid
     val common = (1 to math.min(grid.chunkY, grid.chunkX))
       .filter(f => grid.chunkY % f == 0 && grid.chunkX % f == 0)
     val fitting = common.filter(f =>
       (grid.nY + f - 1) / f <= maxPx && (grid.nX + f - 1) / f <= maxPx)
     val f = fitting.headOption.getOrElse(common.last)
 
-    val slice = ZarrStore.read(spark, root)
+    val slice = ArrayStore.read(spark, root)
       .filter(r => r.time == time && r.band == band)
     val coarse: Array[ChunkRow] = ChunkTable.coarsen(slice, grid, f).collect()
 

@@ -1,7 +1,7 @@
 package graft.zarr
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import graft.cube.ChunkRow
 import graft.model.GridDef
 
@@ -73,28 +73,14 @@ object ZarrStore {
       s"""{"metadata":{${entries.mkString(",")}},"zarr_consolidated_format":1}""")
   }
 
-  def readGrid(root: String, varName: String = "data"): GridDef = {
-    val s = Files.readString(Paths.get(root, varName, ".zarray"))
-    def arr(k: String): Array[Int] =
-      s.split("\"" + k + "\":\\[")(1).takeWhile(_ != ']').split(',').map(_.trim.toInt)
-    val Array(nT, nB, nY, nX) = arr("shape")
-    val Array(_, _, cy, cx) = arr("chunks")
-    GridDef(nT, nB, nY, nX, cy, cx, itemBytes = 4) // "<f4"
-  }
+  /** The array's grid, from `.zarray` parsed and checked by
+    * [[ChunkFormat.v2]] (which refuses what the decoder cannot read). */
+  def readGrid(root: String, varName: String = "data"): GridDef =
+    ChunkFormat.v2(root, varName).grid
 
-  /** S9-idempotent parallel chunk writes in Zarr v2 encoding (shared body:
-    * ChunkWriter — NaN edge-pad, LE float32, zlib, temp+atomic-rename). */
-  def write(ds: Dataset[ChunkRow], root: String, varName: String = "data"): Unit = {
-    val g = readGrid(root, varName)
-    ChunkWriter.write(ds, s"$root/$varName", g.chunkY * g.chunkX,
-      nestedKeys = false, gzipCodec = false)
-  }
-
-  /** Reopen the store through the DataSourceV2 chunk source — Zarr layout
-    * is auto-detected there, so key-predicate pushdown prunes zlib chunk
-    * files at plan time exactly like the raw layout (ZarrSpec asserts). */
-  def read(spark: SparkSession, root: String, varName: String = "data"): Dataset[ChunkRow] = {
-    import spark.implicits._
-    spark.read.format("graft.zarr.ChunkStoreSource").load(root).as[ChunkRow]
-  }
+  /** S9-idempotent parallel chunk writes in Zarr v2 encoding (ChunkWriter
+    * over the array's ChunkFormat: NaN edge-pad, LE float32, zlib). Read
+    * the store back with `ArrayStore.read`, which detects the layout. */
+  def write(ds: Dataset[ChunkRow], root: String, varName: String = "data"): Unit =
+    ChunkWriter.write(ds, ChunkFormat.v2(root, varName))
 }

@@ -1,8 +1,7 @@
 package graft.zarr
 
-import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import graft.cube.ChunkRow
 import graft.model.GridDef
 
@@ -24,73 +23,61 @@ import graft.model.GridDef
   * compression codec is real gzip, not raw zlib. Any Zarr v3 reader
   * (zarr-python ≥ 2.17/3.x, tensorstore) opens the store with no custom
   * code. Write path keeps the S9 idempotence contract (deterministic
-  * keys, temp + atomic rename); `read` goes through the same DSv2 source
-  * as v2/raw, with identical key-filter pushdown and byte-budget
-  * partitioning (layout auto-detected from `zarr.json`).
+  * keys, temp + atomic rename); `ArrayStore.read` reads it through the
+  * same DSv2 source as v2/raw, with identical key-filter pushdown and
+  * byte-budget partitioning (layout detected from `zarr.json`).
   */
 object ZarrStoreV3 {
 
   private val DimNames = Seq("time", "band", "y", "x")
 
-  private def arrayJson(g: GridDef, bands: Seq[String],
-                        xMajor: Boolean = false): String = {
-    val labels =
-      if (bands.isEmpty) ""
-      else bands.mkString(""""band_labels":["""", "\",\"", "\"],")
-    s"""{"zarr_format":3,"node_type":"array",""" +
-      s""""shape":[${g.nTime},${g.nBand},${g.nY},${g.nX}],""" +
-      """"data_type":"float32",""" +
-      s""""chunk_grid":{"name":"regular","configuration":{"chunk_shape":[1,1,${g.chunkY},${g.chunkX}]}},""" +
-      """"chunk_key_encoding":{"name":"default","configuration":{"separator":"/"}},""" +
-      """"fill_value":"NaN",""" +
-      (if (xMajor)
-        """"codecs":[{"name":"transpose","configuration":{"order":[0,1,3,2]}},"""
-      else """"codecs":[""") +
-      """{"name":"bytes","configuration":{"endian":"little"}},""" +
-      """{"name":"gzip","configuration":{"level":1}}],""" +
-      s""""attributes":{$labels"_ARRAY_DIMENSIONS":[${
-        DimNames.mkString("\"", "\",\"", "\"")}]},""" +
-      s""""dimension_names":[${DimNames.mkString("\"", "\",\"", "\"")}]}"""
-  }
-
-  /** S8 metadata-only init: one zarr.json per node, no data bytes. */
-  def init(root: String, grid: GridDef, varName: String = "data",
-           bands: Seq[String] = Nil, xMajor: Boolean = false): Unit = {
-    val dir = Paths.get(root, varName)
-    Files.createDirectories(dir)
-    Files.writeString(Paths.get(root, "zarr.json"),
-      """{"zarr_format":3,"node_type":"group"}""")
-    Files.writeString(dir.resolve("zarr.json"), arrayJson(grid, bands, xMajor))
-  }
-
-  /** Sharded array metadata (the v3 `sharding_indexed` codec, public spec
-    * https://zarr-specs.readthedocs.io/en/latest/v3/codecs/sharding-indexed):
-    * the chunk grid advertises SHARD-sized chunks; the sharding codec's
+  /** Array metadata. A sharded array (the v3 `sharding_indexed` codec,
+    * public spec
+    * https://zarr-specs.readthedocs.io/en/latest/v3/codecs/sharding-indexed)
+    * advertises SHARD-sized chunks in its chunk grid; the sharding codec's
     * configuration carries the inner chunk shape, the inner codec chain
-    * (bytes LE → gzip — identical to the unsharded store), the index
-    * codecs (bytes LE → crc32c), and index_location "end". */
-  private def shardedArrayJson(g: GridDef, sy: Int, sx: Int,
-                               bands: Seq[String]): String = {
+    * (identical to the unsharded store's), the index codecs (bytes LE →
+    * crc32c), and index_location "end". */
+  private def arrayJson(g: GridDef, bands: Seq[String], xMajor: Boolean,
+                        shard: Option[(Int, Int)]): String = {
     val labels =
       if (bands.isEmpty) ""
       else bands.mkString(""""band_labels":["""", "\",\"", "\"],")
+    val dims = DimNames.mkString("\"", "\",\"", "\"")
+    val (sy, sx) = shard.getOrElse((1, 1))
+    val elements =
+      (if (xMajor) """{"name":"transpose","configuration":{"order":[0,1,3,2]}},""" else "") +
+        """{"name":"bytes","configuration":{"endian":"little"}},""" +
+        """{"name":"gzip","configuration":{"level":1}}"""
+    val codecs =
+      if (shard.isEmpty) elements
+      else """{"name":"sharding_indexed","configuration":{""" +
+        s""""chunk_shape":[1,1,${g.chunkY},${g.chunkX}],"codecs":[$elements],""" +
+        """"index_codecs":[{"name":"bytes","configuration":{"endian":"little"}},""" +
+        """{"name":"crc32c"}],"index_location":"end"}}"""
     s"""{"zarr_format":3,"node_type":"array",""" +
       s""""shape":[${g.nTime},${g.nBand},${g.nY},${g.nX}],""" +
       """"data_type":"float32",""" +
       s""""chunk_grid":{"name":"regular","configuration":{"chunk_shape":[1,1,${sy * g.chunkY},${sx * g.chunkX}]}},""" +
       """"chunk_key_encoding":{"name":"default","configuration":{"separator":"/"}},""" +
       """"fill_value":"NaN",""" +
-      """"codecs":[{"name":"sharding_indexed","configuration":{""" +
-      s""""chunk_shape":[1,1,${g.chunkY},${g.chunkX}],""" +
-      """"codecs":[{"name":"bytes","configuration":{"endian":"little"}},""" +
-      """{"name":"gzip","configuration":{"level":1}}],""" +
-      """"index_codecs":[{"name":"bytes","configuration":{"endian":"little"}},""" +
-      """{"name":"crc32c"}],""" +
-      """"index_location":"end"}}],""" +
-      s""""attributes":{$labels"_ARRAY_DIMENSIONS":[${
-        DimNames.mkString("\"", "\",\"", "\"")}]},""" +
-      s""""dimension_names":[${DimNames.mkString("\"", "\",\"", "\"")}]}"""
+      s""""codecs":[$codecs],""" +
+      s""""attributes":{$labels"_ARRAY_DIMENSIONS":[$dims]},""" +
+      s""""dimension_names":[$dims]}"""
   }
+
+  private def writeMeta(root: String, varName: String, arrayJson: String): Unit = {
+    val dir = Paths.get(root, varName)
+    Files.createDirectories(dir)
+    Files.writeString(Paths.get(root, "zarr.json"),
+      """{"zarr_format":3,"node_type":"group"}""")
+    Files.writeString(dir.resolve("zarr.json"), arrayJson)
+  }
+
+  /** S8 metadata-only init: one zarr.json per node, no data bytes. */
+  def init(root: String, grid: GridDef, varName: String = "data",
+           bands: Seq[String] = Nil, xMajor: Boolean = false): Unit =
+    writeMeta(root, varName, arrayJson(grid, bands, xMajor, None))
 
   /** S8 init for a SHARDED store: `shardChunksY/X` inner chunks per shard
     * along y/x. Sharding is the object-count lever at 100 TB: a store of a
@@ -101,12 +88,8 @@ object ZarrStoreV3 {
                   shardChunksX: Int, varName: String = "data",
                   bands: Seq[String] = Nil): Unit = {
     require(shardChunksY > 0 && shardChunksX > 0)
-    val dir = Paths.get(root, varName)
-    Files.createDirectories(dir)
-    Files.writeString(Paths.get(root, "zarr.json"),
-      """{"zarr_format":3,"node_type":"group"}""")
-    Files.writeString(dir.resolve("zarr.json"),
-      shardedArrayJson(grid, shardChunksY, shardChunksX, bands))
+    writeMeta(root, varName,
+      arrayJson(grid, bands, xMajor = false, Some((shardChunksY, shardChunksX))))
   }
 
   /** Parsed array layout: logical (INNER-chunk) grid + chunks-per-shard
@@ -115,127 +98,46 @@ object ZarrStoreV3 {
   final case class V3Layout(grid: GridDef, shard: Option[(Int, Int)],
                             transposeYX: Boolean = false)
 
+  /** Parsed and checked by [[ChunkFormat.v3]], which refuses metadata the
+    * decoder cannot read exactly. */
   def readLayout(root: String, varName: String = "data"): V3Layout = {
-    val m = graft.model.Json.parseObject(
-      Files.readString(Paths.get(root, varName, "zarr.json")))
-    def ints(v: Any): Array[Int] =
-      v.asInstanceOf[Vector[Any]].map(_.asInstanceOf[Double].toInt).toArray
-    val Array(nT, nB, nY, nX) = ints(m("shape"))
-    val gridShape = ints(m("chunk_grid").asInstanceOf[Map[String, Any]]
-      ("configuration").asInstanceOf[Map[String, Any]]("chunk_shape"))
-    val codecs = m("codecs").asInstanceOf[Vector[Any]]
-      .map(_.asInstanceOf[Map[String, Any]])
-    // optional array→array `transpose` codec ahead of `bytes` in whichever
-    // chain encodes chunk ELEMENTS (top-level for plain arrays, the inner
-    // chain for sharded). Our chunks are [1,1,Y,X], so the only
-    // non-identity order that respects the t/b singleton dims is x-major
-    // [0,1,3,2]; anything else is rejected loudly.
-    def parseTranspose(chain: Vector[Map[String, Any]]): Boolean =
-      chain.find(_("name") == "transpose") match {
-        case Some(t) =>
-          val order = ints(t("configuration").asInstanceOf[Map[String, Any]]
-            ("order"))
-          require(order.sameElements(Array(0, 1, 3, 2)) ||
-              order.sameElements(Array(0, 1, 2, 3)),
-            s"transpose order [${order.mkString(",")}] unsupported " +
-              "(identity or x-major [0,1,3,2] only)")
-          order.sameElements(Array(0, 1, 3, 2))
-        case None => false
-      }
-    codecs.headOption.filter(_("name") == "sharding_indexed") match {
-      case Some(sh) =>
-        val conf = sh("configuration").asInstanceOf[Map[String, Any]]
-        val inner = ints(conf("chunk_shape"))
-        require(gridShape(2) % inner(2) == 0 && gridShape(3) % inner(3) == 0,
-          "shard shape must be a chunk multiple")
-        val innerChain = conf("codecs").asInstanceOf[Vector[Any]]
-          .map(_.asInstanceOf[Map[String, Any]])
-        V3Layout(GridDef(nT, nB, nY, nX, inner(2), inner(3), itemBytes = 4),
-          Some((gridShape(2) / inner(2), gridShape(3) / inner(3))),
-          parseTranspose(innerChain))
-      case None =>
-        V3Layout(GridDef(nT, nB, nY, nX, gridShape(2), gridShape(3),
-          itemBytes = 4), None, parseTranspose(codecs))
-    }
+    val f = ChunkFormat.v3(root, varName)
+    V3Layout(f.grid, f.shard, f.xMajor)
   }
 
   /** Logical (inner-chunk) grid — what writers/readers address. */
   def readGrid(root: String, varName: String = "data"): GridDef =
-    readLayout(root, varName).grid
+    ChunkFormat.v3(root, varName).grid
 
-  /** S9-idempotent parallel chunk writes in Zarr v3 encoding (shared body:
-    * ChunkWriter — NaN edge-pad, LE float32, gzip, nested keys). */
+  /** S9-idempotent parallel chunk writes in Zarr v3 encoding (ChunkWriter
+    * over the array's ChunkFormat: NaN edge-pad, LE float32, gzip, nested
+    * keys). Read the store back with `ArrayStore.read`. */
   def write(ds: Dataset[ChunkRow], root: String, varName: String = "data"): Unit = {
-    val l = readLayout(root, varName)
+    val f = ChunkFormat.v3(root, varName)
     // plain chunk files in a sharded-metadata store would be unreadable
     // (readers expect shard indexes) — route to writeSharded instead
-    require(l.shard.isEmpty,
-      s"$root/$varName is a sharded array: use writeSharded")
-    val g = l.grid
-    ChunkWriter.write(ds, s"$root/$varName", g.chunkY * g.chunkX,
-      nestedKeys = true, gzipCodec = true,
-      transposeYX = if (l.transposeYX) Some((g.chunkY, g.chunkX)) else None)
-  }
-
-  /** Reopen through the shared DSv2 chunk source (v3 layout auto-detected;
-    * same pushdown pruning as v2/raw). */
-  def read(spark: SparkSession, root: String, varName: String = "data"): Dataset[ChunkRow] = {
-    import spark.implicits._
-    spark.read.format("graft.zarr.ChunkStoreSource").load(root).as[ChunkRow]
+    require(f.shard.isEmpty, s"$root/$varName is a sharded array: use writeSharded")
+    ChunkWriter.write(ds, f)
   }
 
   /** S9 parallel writes for a SHARDED store: rows group by shard key (one
     * shuffle — the write-layout shuffle every resharding store pays), each
-    * task assembles its whole shard file — inner chunks gzip'd in
-    * lexicographic inner order, 16-byte (offset, nbytes) index entries per
-    * inner slot with u64-max marking absent chunks, crc32c over the index,
-    * index at the file end — then temp + atomic rename (same idempotence
-    * contract as the unsharded path). */
+    * task assembles its whole shard file (ChunkFormat.encodeShard: inner
+    * chunks, then the crc32c-checked index at the end) and writes it with
+    * the same temp + atomic rename as the unsharded path. */
   def writeSharded(ds: Dataset[ChunkRow], root: String,
                    varName: String = "data"): Unit = {
-    val l = readLayout(root, varName)
-    require(l.shard.isDefined,
-      s"$root/$varName is not sharded: use write (or initSharded first)")
-    val (g, (sy, sx)) = (l.grid, l.shard.get)
-    val fullLen = g.chunkY * g.chunkX
-    val varDir = s"$root/$varName"
+    val f = ChunkFormat.v3(root, varName)
+    val (sy, sx) = f.shard.getOrElse(throw new IllegalArgumentException(
+      s"$root/$varName is not sharded: use write (or initSharded first)"))
     val spark = ds.sparkSession
     import spark.implicits._
     ds.groupByKey(r => (r.time, r.band, r.cy / sy, r.cx / sx))
       .mapGroups { (key: (Int, Int, Int, Int), rows: Iterator[ChunkRow]) =>
         val (t, b, scy, scx) = key
-        val bos = new java.io.ByteArrayOutputStream()
-        val nInner = sy.toLong * sx
-        val index = ByteBuffer.allocate((nInner * 16 + 4).toInt)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        val slots = Array.fill(sy * sx)(-1L -> -1L) // (offset, nbytes)
-        rows.foreach { r =>
-          val (iy, ix) = (r.cy % sy, r.cx % sx)
-          val padded =
-            if (r.data.length >= fullLen) r.data
-            else r.data ++ Array.fill(fullLen - r.data.length)(Float.NaN)
-          val raw = new Array[Byte](padded.length * 4)
-          ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-            .asFloatBuffer().put(padded)
-          val enc = ChunkWriter.gzip(raw)
-          slots(iy * sx + ix) = bos.size().toLong -> enc.length.toLong
-          bos.write(enc)
-        }
-        slots.foreach { case (off, len) =>
-          // absent inner chunk = both fields 2^64 - 1 (spec)
-          index.putLong(off); index.putLong(len)
-        }
-        val crc = new java.util.zip.CRC32C()
-        crc.update(index.array(), 0, (nInner * 16).toInt)
-        index.putInt(crc.getValue.toInt) // u32 LE checksum (crc32c codec)
-        val dir = Paths.get(varDir, "c", t.toString, b.toString, scy.toString)
-        Files.createDirectories(dir)
-        val dst = dir.resolve(scx.toString)
-        val tmp = dir.resolve(s".$scx.${java.util.UUID.randomUUID}.tmp")
-        Files.write(tmp, bos.toByteArray ++ index.array())
-        Files.move(tmp, dst,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        val dst = f.path(ChunkStoreSource.Key(t, b, scy, scx))
+        ChunkWriter.put(dst, f.encodeShard(rows.map(r =>
+          ChunkStoreSource.Key(r.time, r.band, r.cy, r.cx) -> r.data)))
         dst.toString
       }
       .foreach((_: String) => ()) // side-effecting write, one pass

@@ -153,7 +153,7 @@ class GtiMosaicSpec extends AnyFunSuite with SparkSpecBase {
     graft.zarr.ZarrStore.init(store,
       graft.model.GridDef(1, 1, 10, 10, 5, 5, 4), bands = Seq("b0"))
     graft.zarr.ZarrStore.write(cube, store)
-    val back = graft.zarr.ZarrStore.read(spark, store).collect()
+    val back = graft.zarr.ArrayStore.read(spark, store).collect()
       .map(r => (r.time, r.band, r.cy, r.cx) -> r.data.toSeq).toMap
     val want = cube.collect().map(r => (r.time, r.band, r.cy, r.cx) -> r.data.toSeq).toMap
     assert(back.keySet == want.keySet && back.keySet.size == 4)

@@ -42,7 +42,7 @@ class ZarrSpec extends AnyFunSuite with SparkSpecBase {
     ZarrStore.write(Seq(
       ChunkRow(0, 0, 0, 0, fullData),
       ChunkRow(1, 0, 1, 1, edgeData)).toDS(), root)
-    val back = ZarrStore.read(spark, root).collect()
+    val back = graft.zarr.ArrayStore.read(spark, root).collect()
       .map(r => (r.time, r.band, r.cy, r.cx) -> r.data).toMap
     assert(back((0, 0, 0, 0)).toSeq == fullData.toSeq)
     val edge = back((1, 0, 1, 1))
@@ -86,7 +86,7 @@ class ZarrSpec extends AnyFunSuite with SparkSpecBase {
     assert(floats.toSeq == data.toSeq)
     // double-write idempotence (S9 contract holds in the Zarr encoding)
     ZarrStore.write(Seq(ChunkRow(0, 0, 0, 0, data)).toDS(), root)
-    assert(ZarrStore.read(spark, root).collect().length == 1)
+    assert(graft.zarr.ArrayStore.read(spark, root).collect().length == 1)
   }
 
   test("store preview renders a PGM quick-look without collecting full res") {

@@ -49,7 +49,7 @@ class ZarrV3Spec extends AnyFunSuite with SparkSpecBase {
     // default chunk-key encoding: c/<t>/<b>/<cy>/<cx> nested dirs
     assert(Files.exists(Paths.get(root, "data", "c", "0", "0", "0", "0")))
     assert(Files.exists(Paths.get(root, "data", "c", "1", "0", "1", "1")))
-    val back = ZarrStoreV3.read(spark, root).collect()
+    val back = graft.zarr.ArrayStore.read(spark, root).collect()
       .map(r => (r.time, r.band, r.cy, r.cx) -> r.data).toMap
     assert(back((0, 0, 0, 0)).toSeq == fullData.toSeq)
     val edge = back((1, 0, 1, 1))
@@ -57,7 +57,7 @@ class ZarrV3Spec extends AnyFunSuite with SparkSpecBase {
     assert(edge.drop(8).forall(_.isNaN))
     // double-write idempotence (S9 contract holds in the v3 encoding)
     ZarrStoreV3.write(Seq(ChunkRow(0, 0, 0, 0, fullData)).toDS(), root)
-    assert(ZarrStoreV3.read(spark, root).collect().length == 2)
+    assert(graft.zarr.ArrayStore.read(spark, root).collect().length == 2)
   }
 
   test("chunk files decode with plain gzip to little-endian C-order float32") {
@@ -117,14 +117,14 @@ class ZarrV3Spec extends AnyFunSuite with SparkSpecBase {
     assert(Files.exists(Paths.get(root, "data", "c", "0", "0", "0", "0")))
     assert(Files.exists(Paths.get(root, "data", "c", "0", "0", "1", "1")))
     assert(!Files.exists(Paths.get(root, "data", "c", "0", "0", "2", "2")))
-    val back = ZarrStoreV3.read(spark, root).collect()
+    val back = graft.zarr.ArrayStore.read(spark, root).collect()
       .map(r => (r.cy, r.cx) -> r.data.head).toMap
     assert(back.size == 8) // (1,1) was never written, absent not NaN-filled
     assert(rows.forall(r => back((r.cy, r.cx)) == (r.cy * 10 + r.cx).toFloat))
     assert(!back.contains((1, 1)))
     // idempotent rewrite of one shard
     ZarrStoreV3.writeSharded(rows.filter(r => r.cy < 2 && r.cx < 2).toDS(), root)
-    assert(ZarrStoreV3.read(spark, root).collect().length == 8)
+    assert(graft.zarr.ArrayStore.read(spark, root).collect().length == 8)
   }
 
   test("sharded store: external decode per the sharding-indexed spec") {
@@ -226,7 +226,7 @@ class ZarrV3Spec extends AnyFunSuite with SparkSpecBase {
     Files.write(chunkDir.resolve("0"), gz.toByteArray)
     val l = ZarrStoreV3.readLayout(root)
     assert(l.transposeYX && l.grid.chunkY == 2 && l.grid.chunkX == 3)
-    val rows = ZarrStoreV3.read(spark, root).collect()
+    val rows = graft.zarr.ArrayStore.read(spark, root).collect()
     assert(rows.length == 1)
     assert(rows.head.data.toSeq == Seq(1f, 2f, 3f, 4f, 5f, 6f)) // row-major
   }
@@ -239,7 +239,7 @@ class ZarrV3Spec extends AnyFunSuite with SparkSpecBase {
     val rows = Seq(ChunkRow(0, 0, 0, 0, Array(1f, 2f, 3f, 4f, 5f, 6f))).toDS()
     ZarrStoreV3.write(rows, root)
     // read back: logical row-major restored
-    val got = ZarrStoreV3.read(spark, root).collect()
+    val got = graft.zarr.ArrayStore.read(spark, root).collect()
     assert(got.length == 1 && got.head.data.toSeq == Seq(1f, 2f, 3f, 4f, 5f, 6f))
     // on-disk bytes really ARE x-major (independent gunzip)
     val raw = new java.util.zip.GZIPInputStream(
