@@ -54,10 +54,14 @@ object Dedup {
     *  - the (id_a, id_b) pair is packed into one 64-bit key
     *    (`id_a << 32 | id_b`, PackedPair) for the count aggregation — half
     *    the grouping-key bytes and one hash per row instead of two.
-    *    Requires ids in [0, 2³²) — enforced at runtime by PackedPair, and
-    *    that range also bounds the pair space itself (an exhaustive-pairs
-    *    output over more ids than that is not a plan anyone should run —
-    *    use the LSH paths).
+    *    Requires ids in [0, 2³²). PackedPair checks it at runtime on the
+    *    ids it packs: the representative ids entering the self-join and
+    *    so every candidate pair's ids. A negative id is always its
+    *    duplicate group's min, so it is packed (and raises) once its doc
+    *    forms a candidate; member ids expanded back from a group are never
+    *    packed. The range also bounds the pair space itself (an
+    *    exhaustive-pairs output over more ids than that is not a plan
+    *    anyone should run — use the LSH paths).
     *
     * `maxDf` is the scale guard: a shingle appearing in d docs contributes
     * d²/2 rows to the self-join, so one hot shingle ("in the the") makes
@@ -72,14 +76,9 @@ object Dedup {
     * `size(shingles)`; only an ENGAGED cap pays the post-filter size
     * re-aggregation. */
   def jaccardPairs(df: DataFrame, id: String, text: String, k: Int,
-                   threshold: Double, maxDf: Option[Int] = None): DataFrame = {
-    val jac = col("inter") * lit(1.0) /
-      (col("na") + col("nb") - col("inter"))
-    shinglePairCounts(df, id, text, k, maxDf, _.filter(jac >= threshold))
-      .select(PackedPair.idA(col("pair")).as("id_a"),
-        PackedPair.idB(col("pair")).as("id_b"),
-        roundp(jac, 6).as("jac"))
-  }
+                   threshold: Double, maxDf: Option[Int] = None): DataFrame =
+    shinglePairScores(df, id, text, k, maxDf, threshold, "jac",
+      col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")))
 
   /** Overlap-coefficient (Jaccard-containment) near-dup pairs:
     * score = |A∩B| / min(|A|,|B|) — the asymmetric-size criterion that
@@ -88,41 +87,33 @@ object Dedup {
     * union is dominated by the larger side. Same inverted-index plan and
     * `maxDf` scale guard as [[jaccardPairs]]; only the scoring differs. */
   def containmentPairs(df: DataFrame, id: String, text: String, k: Int,
-                       threshold: Double, maxDf: Option[Int] = None): DataFrame = {
-    val ov = col("inter") * lit(1.0) / least(col("na"), col("nb"))
-    shinglePairCounts(df, id, text, k, maxDf, _.filter(ov >= threshold))
-      .select(PackedPair.idA(col("pair")).as("id_a"),
-        PackedPair.idB(col("pair")).as("id_b"),
-        roundp(ov, 6).as("containment"))
-  }
+                       threshold: Double, maxDf: Option[Int] = None): DataFrame =
+    shinglePairScores(df, id, text, k, maxDf, threshold, "containment",
+      col("inter") * lit(1.0) / least(col("na"), col("nb")))
 
   /** Shared pair-intersection engine for the exhaustive shingle scorers:
     * builds the size-carrying inverted index (df-capped), self-joins it,
-    * and returns one row per SURVIVING pair — (packed pair, |A∩B|, |A|,
-    * |B|), where `keep` is the caller's score filter. Plan/persist notes
-    * below apply to every consumer.
+    * aggregates each pair's (|A∩B|, |A|, |B|) and keeps (id_a, id_b,
+    * `name` = round(`score`, 6)) where `score` ≥ `threshold`. Plan/persist
+    * notes below apply to every consumer.
     *
-    * EXACT-DUPLICATE COLLAPSE: byte-identical texts have identical
-    * shingle sets, so a g-way duplicate group would cost the postings
-    * self-join g² candidate rows PER SHARED SHINGLE; instead the index
-    * is built over one representative per distinct text and members
-    * expand back afterwards. `keep` runs at REP level (scores depend
-    * only on (inter, na, nb), identical across a group), so the
-    * expansion joins are strictly OUTPUT-bound; intra-group pairs carry
-    * the group's post-cap set size (score ≡ 1 under both scorers, same
-    * arithmetic). Web corpora are duplicate-heavy — this is the same
-    * collapse-first discipline as Similarity.nearDupPairs, and the SQL
-    * oracles (which replay brute pairs over ALL docs) pin its
-    * exactness. */
-  private def shinglePairCounts(df: DataFrame, id: String, text: String,
-                                k: Int, maxDf: Option[Int],
-                                keep: DataFrame => DataFrame): DataFrame = {
-    val (grouped, members) = dupCollapse(df, id, text)
+    * EXACT-DUPLICATE COLLAPSE ([[DupGroups]]): byte-identical texts have
+    * identical shingle sets, so a g-way duplicate group would cost the
+    * postings self-join g² candidate rows PER SHARED SHINGLE; instead the
+    * index is built over one representative per distinct text. Both
+    * scores are symmetric in |A| and |B|, so they are computed at REP level
+    * and the expansion carries the score; intra-group pairs of a group
+    * whose post-cap shingle set is non-empty score exactly 1.0. The SQL
+    * oracles (which replay brute pairs over ALL docs) pin its exactness. */
+  private def shinglePairScores(df: DataFrame, id: String, text: String,
+                                k: Int, maxDf: Option[Int], threshold: Double,
+                                name: String, score: Column): DataFrame = {
+    val g = DupGroups.collapse(df, id, col(text))
     // _m rides along so the hot-shingle check can weight by group size
     // (df is defined over DOCS, not distinct texts — a shingle made
     // ubiquitous by duplicated texts must still trip the cap exactly as
     // it does in the uncollapsed form and the SQL oracles)
-    val sets0 = grouped.select(col("_gid").as("doc_id"), col("_m"),
+    val sets0 = g.reps.select(col("_gid").as("doc_id"), col("_m"),
         graft.functions.ShingleExpressions.wordShingles(col("_t"), k).as("shingles"))
       .filter(col("shingles").isNotNull)
     def preSizedInv(sets: DataFrame): DataFrame = sets
@@ -163,7 +154,7 @@ object Dedup {
     // SHUFFLE_HASH: the equi-key is a string — a sort-merge join would sort
     // every posting twice just to stream them; hashing one (per-partition
     // bounded) side is strictly cheaper and AQE still handles skew splits
-    val gPairs = inv.as("a").join(inv.as("b").hint("SHUFFLE_HASH"),
+    val repPairs = inv.as("a").join(inv.as("b").hint("SHUFFLE_HASH"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .select(
         PackedPair.pack(col("a.doc_id"), col("b.doc_id")).as("pair"),
@@ -171,39 +162,23 @@ object Dedup {
       .groupBy(col("pair"))
       .agg(count(lit(1)).as("inter"),
         first(col("na0")).as("na"), first(col("nb0")).as("nb"))
-    // cross-group expansion of the SURVIVORS: each member pair inherits
-    // the rep pair's (inter, na, nb); na/nb swap with the id order so
-    // "na = |set of id_a|" stays true
-    val cross = keep(gPairs)
-      .select(PackedPair.idA(col("pair")).as("_ga"),
-        PackedPair.idB(col("pair")).as("_gb"),
-        col("inter"), col("na"), col("nb"))
-      .join(members.select(col("_gid").as("_ga"), col("doc_id").as("_ia")),
-        Seq("_ga"))
-      .join(members.select(col("_gid").as("_gb"), col("doc_id").as("_ib")),
-        Seq("_gb"))
-      .select(
-        PackedPair.pack(least(col("_ia"), col("_ib")),
-          greatest(col("_ia"), col("_ib"))).as("pair"),
-        col("inter"),
-        when(col("_ia") < col("_ib"), col("na")).otherwise(col("nb")).as("na"),
-        when(col("_ia") < col("_ib"), col("nb")).otherwise(col("na")).as("nb"))
-    // intra-group pairs: every member pair of a ≥2-way group whose
-    // POST-CAP shingle set is non-empty (a group absent from the index —
-    // all shingles hot or text too short — emits nothing, exactly like
-    // the brute join). inter = na = nb = the group's post-cap size.
-    val invSizes = inv.groupBy(col("doc_id")).agg(first(col("n")).as("n"))
-    val intra = keep(grouped.filter(col("_m") >= 2L)
-        .join(invSizes.withColumnRenamed("doc_id", "_gid"), Seq("_gid"))
-        .select(col("_gid"), col("n").as("inter"),
-          col("n").as("na"), col("n").as("nb")))
-      .join(members.select(col("_gid"), col("doc_id").as("_ia")), Seq("_gid"))
-      .join(members.select(col("_gid"), col("doc_id").as("_ib")), Seq("_gid"))
-      .filter(col("_ia") < col("_ib"))
-      .select(PackedPair.pack(col("_ia"), col("_ib")).as("pair"),
-        col("inter"), col("na"), col("nb"))
-    cross.unionByName(intra)
+      .filter(score >= threshold)
+      .select(PackedPair.idA(col("pair")).as("id_a"),
+        PackedPair.idB(col("pair")).as("id_b"), roundp(score, 6).as(name))
+    // a group absent from the index (all shingles hot, or text too short)
+    // emits nothing, exactly like the brute join
+    DupGroups.expand(g, repPairs,
+      textIntra(g, inv.select(col("doc_id").as("_gid")), name, threshold))
   }
+
+  /** Intra-group pairs of a text score: byte-identical texts score exactly
+    * 1.0, so every ≥2-member group whose rep reached the scorer (`scored`:
+    * its `_gid`s) pairs at 1.0 — when 1.0 passes `threshold`. */
+  private def textIntra(g: DupGroups.Groups, scored: DataFrame, name: String,
+                        threshold: Double): DataFrame =
+    g.reps.filter(col("_m") >= 2L).join(scored, Seq("_gid"), "left_semi")
+      .select(col("_gid"), lit(1.0).as(name))
+      .filter(lit(threshold <= 1.0))
 
   /** MinHash-LSH candidate pairs: n-hash signature, banded r rows/band,
     * docs sharing any band bucket become candidates. With r=2, b=32 the
@@ -445,192 +420,37 @@ object Dedup {
 
   /** MinHash-LSH dedup: candidates exact-verified against true Jaccard on
     * the shingle sets — output identical to brute force at the threshold,
-    * cost bounded by the candidate count. */
-  /** `assumeDistinct`: callers whose input is PROVABLY duplicate-free
+    * cost bounded by the candidate count.
+    *
+    * `assumeDistinct`: callers whose input is PROVABLY duplicate-free
     * (e.g. the stage right after an exact-dedup pass) skip the collapse
-    * — the grouping/expansion shuffles buy nothing there. */
+    * gate — its hash job buys nothing there. PackedPair checks the
+    * representative ids (every candidate pair's ids); expanded member ids
+    * are never packed. */
   def minhashDedupPairs(df: DataFrame, id: String, text: String, k: Int,
                         threshold: Double, nHashes: Int = 64,
                         rowsPerBand: Int = 2,
                         assumeDistinct: Boolean = false): DataFrame = {
-    if (assumeDistinct) {
-      // ONE tokenize+shingle pass serves candidates AND verification
-      val sets = ScratchCache.register(
-      FanOut.byKey(shingleSets(df, id, text, k), col("doc_id")).persist())
-      return verifyJaccard(
-        minhashCandidatesFromSets(sets, nHashes, rowsPerBand), sets, threshold)
-    }
-    // EXACT-DUPLICATE COLLAPSE (see shinglePairCounts): identical texts
+    // EXACT-DUPLICATE COLLAPSE (see shinglePairScores): identical texts
     // have identical signatures, so a g-way group floods every band
     // bucket with g copies; signatures/bands/verification run over one
     // representative per distinct text and members expand back
     // output-bound. Intra-group pairs exist in the uncollapsed join iff
     // the group's shingle set is non-empty (the signature filter) and
     // verify at exactly jac = 1.0.
-    val (grouped, members) = dupCollapse(df, id, text)
+    val g =
+      if (assumeDistinct) DupGroups.distinct(df, id, col(text))
+      else DupGroups.collapse(df, id, col(text))
     // ONE tokenize+shingle pass serves candidates AND exact verification
     val sets = ScratchCache.register(shingleSets(
-      grouped.select(col("_gid").as("doc_id"), col("_t").as("_text")),
+      g.reps.select(col("_gid").as("doc_id"), col("_t").as("_text")),
       "doc_id", "_text", k).transform(FanOut.byKey(_, col("doc_id"))).persist())
-    val gp = verifyJaccard(minhashCandidatesFromSets(sets, nHashes, rowsPerBand),
-      sets, threshold)
-    val cross = expandMemberPairs(gp, members, "jac")
-    val intra = grouped.filter(col("_m") >= 2L)
-      .join(sets.filter(size(col("shingles")) > 0)
-        .select(col("doc_id").as("_gid")), Seq("_gid"))
-      .join(members.select(col("_gid"), col("doc_id").as("_ia")), Seq("_gid"))
-      .join(members.select(col("_gid"), col("doc_id").as("_ib")), Seq("_gid"))
-      .filter(col("_ia") < col("_ib"))
-      .select(col("_ia").as("id_a"), col("_ib").as("id_b"),
-        lit(1.0).as("jac"))
-    cross.unionByName(if (threshold <= 1.0) intra else intra.limit(0))
+    val repPairs = verifyJaccard(
+      minhashCandidatesFromSets(sets, nHashes, rowsPerBand), sets, threshold)
+    DupGroups.expand(g, repPairs, textIntra(g,
+      sets.filter(size(col("shingles")) > 0).select(col("doc_id").as("_gid")),
+      "jac", threshold))
   }
-
-  /** Duplicate-collapse frames shared by the pair generators: `grouped`
-    * has one row per DISTINCT text (`_t`, `_gid` = min member id, `_m` =
-    * member count); `members` maps `_gid` → every member `doc_id`.
-    *
-    * SURVIVOR-SLIVER GATE (the `substringPairs` discipline): duplicates
-    * can only live inside a 64-bit text-hash group of size ≥ 2, so the
-    * hot-hash set is aggregated FIRST — an 8-byte-key, map-side-combined
-    * shuffle, the only cost the collapse adds on a duplicate-free corpus
-    * (where the hot set is empty and every doc is trivially its own
-    * group: zero text shuffles, zero caches, no Window in the plan). Only
-    * the sliver of docs whose hash group repeats pays the text-keyed
-    * window that proves byte-equality; a hash collision can only ADD a
-    * doc to the sliver (the window still partitions on true bytes, so
-    * colliding distinct texts stay distinct groups), never merge texts —
-    * byte-exactness is preserved unconditionally. On duplicate-heavy
-    * corpora the sliver is the corpus and cost converges to the plain
-    * window (WindowExec spills oversized partitions — an adversarial
-    * all-identical corpus degrades to disk, never to a driver buffer). */
-  /** Hot-group broadcast bound: 1M 8-byte keys ≈ 8 MB — comfortably
-    * broadcastable, and a corpus with more repeated-hash groups than
-    * that is duplicate-HEAVY, where the ungated full collapse is the
-    * right plan anyway. */
-  private val HotBroadcastMax = 1000000L
-
-  /** Driver-collect bound for the hot set (2^16 8-byte keys ≈ 512 KB —
-    * bounded by construction, the PercentileCut discipline): below it the
-    * membership test is a codegen'd InSet FILTER, adding zero join or
-    * exchange stages to the plan — measured, the two broadcast-join
-    * stages otherwise cost more in AQE planning rounds than the sliver
-    * work itself on rare-duplicate corpora. */
-  private val HotCollectMax = 65536L
-
-  private def dupCollapse(df: DataFrame, id: String,
-                          text: String): (DataFrame, DataFrame) =
-    dupCollapseWithBounds(df, id, text, HotCollectMax, HotBroadcastMax)
-
-  /** Test seam: the regime bounds injectable, so DedupSpec can force the
-    * broadcast-semi and degenerate full-window regimes on fixtures small
-    * enough for a unit test (production callers always go through
-    * [[dupCollapse]] with the real constants). */
-  private[graft] def dupCollapseWithBounds(
-      df: DataFrame, id: String, text: String,
-      hotCollectMax: Long, hotBroadcastMax: Long): (DataFrame, DataFrame) = {
-    val base = df.select(col(id).as("doc_id"), col(text).as("_t"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_t"))
-    val counts = ScratchCache.register(base
-      .groupBy(xxhash64(col("_t")).as("_h"))
-      .agg(count(lit(1)).as("_hc"))
-      .persist())
-    // ONE gate job yields all three regime inputs: hot-group count, docs
-    // covered by hot groups, total docs
-    val statsRow = counts.agg(
-      coalesce(sum(when(col("_hc") >= 2L, 1L)), lit(0L)),
-      coalesce(sum(when(col("_hc") >= 2L, col("_hc"))), lit(0L)),
-      coalesce(sum(col("_hc")), lit(0L))).head()
-    val (nHot, nDocsHot, nDocs) =
-      (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
-    val hot = counts.filter(col("_hc") >= 2L).select("_h") // cached parent
-    if (nHot == 0L) {
-      (base.select(col("_t"), col("doc_id").as("_gid"), lit(1L).as("_m")),
-        base.select(col("doc_id").as("_gid"), col("doc_id")))
-    } else if (nDocsHot * 2L >= nDocs) {
-      // duplicate-heavy regime (sliver is the majority of the corpus):
-      // the semi/anti split would shuffle the text twice for nothing —
-      // run the single full-corpus window (one text shuffle, spill-safe)
-      val tagged = ScratchCache.register(base
-        .select(col("doc_id"), col("_t"),
-          min(col("doc_id")).over(w).as("_gid"),
-          count(lit(1)).over(w).as("_m"))
-        .persist())
-      val grouped = tagged.filter(col("doc_id") === col("_gid"))
-        .select(col("_t"), col("_gid"), col("_m"))
-      val members = tagged.select(col("_gid"), col("doc_id"))
-      (grouped, members)
-    } else if (nHot <= hotCollectMax) {
-      // rare-duplicate regime, bounded collect: the sliver membership
-      // test is an InSet filter — no join, no exchange; only the sliver
-      // pays the text window
-      val hotSet = hot.collect().map(_.getLong(0)).toSeq
-      val withH = base.withColumn("_h", xxhash64(col("_t")))
-      val sliver = withH.filter(col("_h").isin(hotSet: _*))
-        .select(col("doc_id"), col("_t"),
-          min(col("doc_id")).over(w).as("_gid"),
-          count(lit(1)).over(w).as("_m"))
-      val uniq = withH.filter(!col("_h").isin(hotSet: _*))
-        .select(col("doc_id"), col("_t"),
-          col("doc_id").as("_gid"), lit(1L).as("_m"))
-      val tagged = ScratchCache.register(
-        sliver.unionByName(uniq).persist())
-      val grouped = tagged.filter(col("doc_id") === col("_gid"))
-        .select(col("_t"), col("_gid"), col("_m"))
-      val members = tagged.select(col("_gid"), col("doc_id"))
-      (grouped, members)
-    } else if (nHot <= hotBroadcastMax) {
-      // mid regime: too many hot groups to collect — the hot set
-      // broadcasts EXPLICITLY (the hint must not depend on AQE, because
-      // consumers routinely materialize this plan under a .persist(),
-      // components' edge cache, where adaptive join re-planning is
-      // unavailable and an unhinted join would degrade to two full text
-      // shuffles). Both joins are map-side; the sliver pays the window.
-      val bHot = broadcast(hot)
-      val withH = base.withColumn("_h", xxhash64(col("_t")))
-      val sliver = withH.join(bHot, Seq("_h"), "left_semi")
-        .select(col("doc_id"), col("_t"),
-          min(col("doc_id")).over(w).as("_gid"),
-          count(lit(1)).over(w).as("_m"))
-      val uniq = withH.join(bHot, Seq("_h"), "left_anti")
-        .select(col("doc_id"), col("_t"),
-          col("doc_id").as("_gid"), lit(1L).as("_m"))
-      val tagged = ScratchCache.register(
-        sliver.unionByName(uniq).persist())
-      val grouped = tagged.filter(col("doc_id") === col("_gid"))
-        .select(col("_t"), col("_gid"), col("_m"))
-      val members = tagged.select(col("_gid"), col("doc_id"))
-      (grouped, members)
-    } else {
-      // degenerate corner (> 1M hot groups yet a minority sliver —
-      // billions of docs with scattered small duplicate groups): an
-      // unbroadcastable hot set would make the semi/anti split shuffle
-      // the text TWICE on _h; the single full-corpus window (one text
-      // shuffle, spill-safe) is strictly cheaper
-      val tagged = ScratchCache.register(base
-        .select(col("doc_id"), col("_t"),
-          min(col("doc_id")).over(w).as("_gid"),
-          count(lit(1)).over(w).as("_m"))
-        .persist())
-      val grouped = tagged.filter(col("doc_id") === col("_gid"))
-        .select(col("_t"), col("_gid"), col("_m"))
-      val members = tagged.select(col("_gid"), col("doc_id"))
-      (grouped, members)
-    }
-  }
-
-  /** Expand rep-level scored pairs (id_a, id_b, `score`) to member pairs:
-    * every (member-of-a, member-of-b) pair inherits the rep pair's score
-    * (identical bytes ⇒ identical score), re-canonicalized a < b. */
-  private def expandMemberPairs(gp: DataFrame, members: DataFrame,
-                                score: String): DataFrame =
-    gp.select(col("id_a").as("_ga"), col("id_b").as("_gb"), col(score))
-      .join(members.select(col("_gid").as("_ga"), col("doc_id").as("_ia")),
-        Seq("_ga"))
-      .join(members.select(col("_gid").as("_gb"), col("doc_id").as("_ib")),
-        Seq("_gb"))
-      .select(least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"), col(score))
 
   /** INCREMENTAL MinHash dedup: near-dup pairs where at least one side
     * belongs to the NEW batch (`isNew`) — the corpus-growth flow: old-old
@@ -888,52 +708,36 @@ object Dedup {
     * bits), verified by exact hamming distance.
     *
     * FINGERPRINT-level duplicate collapse — strictly coarser (and
-    * cheaper) than [[shinglePairCounts]]'s text collapse: hamming
+    * cheaper) than [[shinglePairScores]]'s text collapse: hamming
     * depends ONLY on the 48-bit fingerprint, so ANY docs sharing one
     * (byte-identical texts included, but also distinct texts that
     * fingerprint equal — e.g. every sub-k-token doc at fp 0) are
     * interchangeable in the band join. Fingerprints are computed once
-    * over the full corpus as before; the collapse window then shuffles
-    * 16-byte (id, fp) rows, never text — and only for the sliver of
-    * docs whose fingerprint actually repeats (sliver gate below). Cross
-    * pairs inherit the rep pair's hamming; intra-group pairs are
-    * hamming-0 by definition and emitted unconditionally (simhash48 is
-    * total). */
+    * over the full corpus; the collapse window then shuffles 16-byte
+    * (id, fp) rows, never text. Cross pairs inherit the rep pair's
+    * hamming; intra-group pairs are hamming-0 by definition and emitted
+    * unconditionally (simhash48 is total), which is why a negative
+    * `maxHamming` is refused rather than answered with them. */
   def simhashPairs(df: DataFrame, id: String, text: String, k: Int,
                    maxHamming: Int): DataFrame = {
-    require(maxHamming < 4, "4-band pigeonhole only covers hamming <= 3")
-    // Single-pass collapse: ONE fingerprint-partitioned window over the
-    // fingerprint frame yields the rep frame (`grouped`), the expansion
-    // map (`members`), and the group sizes from the SAME shuffle —
-    // measured faster than both the sliver-gated regime (the gate's job
-    // barriers outweigh the skipped expansions: sf1 3.6 s vs 1.9 s) and
-    // the agg + fingerprint-keyed join-back (whose join RESHUFFLES the
-    // full frame a second time: sf1 3.0 s vs 1.9 s; sf0.1 flat). The
-    // window is simhash-partitioned — never global — and spill-safe at
-    // any duplicate-group skew, unlike a collect_list-style expansion
-    // buffer (the q211 plan audit pins the partitioning).
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("simhash"))
-    val tagged = ScratchCache.register(
-      simhashFingerprints(df, id, text, k)
-        .select(col("doc_id"), col("simhash"),
-          min(col("doc_id")).over(w).as("_gid"),
-          count(lit(1)).over(w).as("_m"))
-        .persist())
-    val grouped = tagged.filter(col("doc_id") === col("_gid"))
-    val members = tagged.select(col("_gid"), col("doc_id"))
-    val fp = grouped.select(col("doc_id"), col("simhash")) // rep frame, self-joined
-    val gp = simhashBandPairsPacked(fp, maxHamming)
-    val cross = expandMemberPairs(
-      gp.select(PackedPair.idA(col("pair")).as("id_a"),
-        PackedPair.idB(col("pair")).as("id_b"), col("hamming")),
-      members, "hamming")
-    val intra = grouped.filter(col("_m") >= 2L)
-      .join(members.select(col("_gid"), col("doc_id").as("_ia")), Seq("_gid"))
-      .join(members.select(col("_gid"), col("doc_id").as("_ib")), Seq("_gid"))
-      .filter(col("_ia") < col("_ib"))
-      .select(col("_ia").as("id_a"), col("_ib").as("id_b"),
-        lit(0L).as("hamming"))
-    cross.unionByName(intra)
+    require(maxHamming >= 0 && maxHamming < 4,
+      s"maxHamming must be in 0..3 (4-band pigeonhole), got $maxHamming")
+    // UNGATED collapse: the full fingerprint-partitioned window
+    // (DupGroups.window) — measured faster than both the gated regime
+    // (the gate's job barriers outweigh the skipped expansions: sf1 3.6 s
+    // vs 1.9 s) and an agg + fingerprint-keyed join-back (whose join
+    // RESHUFFLES the full frame a second time: sf1 3.0 s vs 1.9 s; sf0.1
+    // flat). The window is simhash-partitioned — never global — and
+    // spill-safe at any duplicate-group skew (the q211 plan audit pins the
+    // partitioning).
+    val g = DupGroups.window(simhashFingerprints(df, id, text, k), "doc_id",
+      col("simhash"))
+    val repPairs = simhashBandPairsPacked(
+        g.reps.select(col("_gid").as("doc_id"), col("_t").as("simhash")), maxHamming)
+      .select(PackedPair.idA(col("pair")).as("id_a"),
+        PackedPair.idB(col("pair")).as("id_b"), col("hamming"))
+    DupGroups.expand(g, repPairs,
+      g.reps.filter(col("_m") >= 2L).select(col("_gid"), lit(0L).as("hamming")))
   }
 
   /** Banded candidate self-join + exact hamming verification over a

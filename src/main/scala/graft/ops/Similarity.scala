@@ -215,91 +215,29 @@ object Similarity {
     * rows and K rows respectively, at any corpus size. */
   def nearDupPairs(emb: DataFrame, id: String, vec: String, threshold: Double,
                    nCells: Int = 16): DataFrame = {
-    // EXACT-DUPLICATE COLLAPSE before the quadratic stage: byte-identical
-    // vectors share every downstream cosine, so the cell-pruned pair
-    // generation runs over DISTINCT vectors only and group members expand
-    // back afterwards (strictly output-bound joins). Web-scale embedding
-    // corpora are duplicate-heavy (boilerplate pages, re-crawls, mirrored
-    // docs); a k-way duplicate group costs the pruned stage k² candidate
-    // evaluations without this pass and exactly 1 with it — measured
-    // 100.4 s → see SCALEBENCH on the 10-way-replicated sf1 corpus. The
-    // expansion reproduces the brute form bit-for-bit: cross-group pairs
-    // inherit the rep pair's cosine (identical bytes ⇒ identical doubles),
-    // intra-group pairs carry the group's self-cosine computed with the
-    // SAME dot/norm arithmetic (≈1, but never assumed).
-    // SLIVER GATE (cf. Dedup.dupCollapse): byte-identical vectors can
-    // only live inside a 64-bit hash group of size ≥ 2, so one cheap
-    // 8-byte-key aggregation finds the hot hashes first. Duplicate-free
-    // corpora (hot empty) skip the vector-keyed groupBy, the join-back,
-    // and the member-expansion joins entirely — all vectors are provably
-    // distinct (equal values hash equal), so the pruned generator runs
-    // straight over the input. A collision only ADDS a vector to the
-    // sliver (the groupBy still compares true values) — exactness holds.
-    val base = emb.select(col(id).as("_id"), col(vec).as("_v"))
-    val counts = ScratchCache.register(base
-      .groupBy(xxhash64(col("_v")).as("_h"))
-      .agg(count(lit(1)).as("_hc"))
-      .persist())
-    // ONE gate job: hot-group count, docs covered by hot groups, total
-    val statsRow = counts.agg(
-      coalesce(sum(when(col("_hc") >= 2L, 1L)), lit(0L)),
-      coalesce(sum(when(col("_hc") >= 2L, col("_hc"))), lit(0L)),
-      coalesce(sum(col("_hc")), lit(0L))).head()
-    val (nHot, nDocsHot, nDocs) =
-      (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
-    if (nHot == 0L)
-      return nearDupPairsDistinct(
-        base.select(col("_id").as(id), col("_v").as(vec)),
-        id, vec, threshold, nCells)
-    val hot = counts.filter(col("_hc") >= 2L).select("_h")
-    // regime choice mirrors Dedup.dupCollapse: majority-sliver (or
-    // unbroadcastable-hot) corpora collapse the whole frame; a small hot
-    // set becomes an InSet filter (no join stages); a mid-size one an
-    // EXPLICIT broadcast (not AQE-dependent — consumers materialize this
-    // plan under persists, where adaptive join re-planning is
-    // unavailable)
-    val (sliverBase, uniqBase) =
-      if (nDocsHot * 2L >= nDocs || nHot > 1000000L) (base, base.limit(0))
-      else if (nHot <= 65536L) {
-        val hotSet = hot.collect().map(_.getLong(0)).toSeq
-        val withH = base.withColumn("_h", xxhash64(col("_v")))
-        (withH.filter(col("_h").isin(hotSet: _*)).drop("_h"),
-          withH.filter(!col("_h").isin(hotSet: _*)).drop("_h"))
-      } else {
-        val withH = base.withColumn("_h", xxhash64(col("_v")))
-        (withH.join(broadcast(hot), Seq("_h"), "left_semi").drop("_h"),
-          withH.join(broadcast(hot), Seq("_h"), "left_anti").drop("_h"))
-      }
-    val sReps = ScratchCache.register(sliverBase
-      .groupBy(col("_v"))
-      .agg(min(col("_id")).as("_gid"), count(lit(1)).as("_m"))
-      .persist())
-    val reps = ScratchCache.register(sReps.unionByName(
-        uniqBase.select(col("_v"), col("_id").as("_gid"), lit(1L).as("_m")))
-      .persist())
-    val members = ScratchCache.register(sliverBase
-      .join(sReps.select(col("_v"), col("_gid")), Seq("_v"))
-      .select(col("_gid"), col("_id"))
-      .unionByName(uniqBase.select(col("_id").as("_gid"), col("_id")))
-      .persist())
-    val gPairs = nearDupPairsDistinct(
-      reps.select(col("_gid").as(id), col("_v").as(vec)),
-      id, vec, threshold, nCells)
-    val cross = gPairs
-      .join(members.select(col("_gid").as("id_a"), col("_id").as("_ia")), Seq("id_a"))
-      .join(members.select(col("_gid").as("id_b"), col("_id").as("_ib")), Seq("id_b"))
-      .select(least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"), col("cos"))
-    val intra = reps.filter(col("_m") >= 2L)
+    // EXACT-DUPLICATE COLLAPSE before the quadratic stage (DupGroups):
+    // byte-identical vectors share every downstream cosine, so the
+    // cell-pruned pair generation runs over DISTINCT vectors only and
+    // group members expand back afterwards (strictly output-bound joins).
+    // Web-scale embedding corpora are duplicate-heavy (boilerplate pages,
+    // re-crawls, mirrored docs); a k-way duplicate group costs the pruned
+    // stage k² candidate evaluations without this pass and exactly 1 with
+    // it — see SCALEBENCH on the 10-way-replicated sf1 corpus. Duplicate-
+    // free corpora pass the gate with no vector shuffle and no expansion.
+    // The expansion reproduces the brute form bit-for-bit: cross-group
+    // pairs inherit the rep pair's cosine (identical bytes ⇒ identical
+    // doubles), intra-group pairs carry the group's self-cosine computed
+    // with the SAME dot/norm arithmetic (≈1, but never assumed).
+    val g = DupGroups.collapse(emb, id, col(vec))
+    val v = col("_t")
+    val intra = g.reps.filter(col("_m") >= 2L)
       .select(col("_gid"),
-        roundp(graft.functions.DotProductF32.dot(col("_v"), col("_v")) /
-          (norm(col("_v")) * norm(col("_v"))), 6).as("cos"))
+        roundp(graft.functions.DotProductF32.dot(v, v) / (norm(v) * norm(v)), 6)
+          .as("cos"))
       .filter(col("cos") >= threshold)
-      .join(members.select(col("_gid"), col("_id").as("_ia")), Seq("_gid"))
-      .join(members.select(col("_gid"), col("_id").as("_ib")), Seq("_gid"))
-      .filter(col("_ia") < col("_ib"))
-      .select(col("_ia").as("id_a"), col("_ib").as("id_b"), col("cos"))
-    cross.unionByName(intra)
+    DupGroups.expand(g, nearDupPairsDistinct(
+        g.reps.select(col("_gid").as(id), col("_t").as(vec)),
+        id, vec, threshold, nCells), intra)
   }
 
   /** Cell-pruned pair generation over a frame whose vectors are already

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, DupGroups, Similarity}
 
 class DedupSpec extends AnyFunSuite with SparkSpecBase {
   import spark.implicits._
@@ -145,6 +145,34 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     assert(got.contains((900003L, 900004L, 0L)))
     assert(got.contains((900001L, 900004L, 0L)))
     assert(got == brute)
+  }
+
+  test("simhash pairs refuse a negative maxHamming") {
+    // intra-group pairs sit at hamming 0, so a negative bound would still
+    // emit them where the brute form (bit_count(xor) <= -1) emits nothing
+    val e = intercept[IllegalArgumentException] {
+      Dedup.simhashPairs(dupDocs, "doc_id", "text", 3, -1)
+    }
+    assert(e.getMessage.contains("maxHamming"), e.getMessage)
+  }
+
+  test("jaccard and minhash pairs raise on a negative doc_id (the group min is packed)") {
+    // -5 and 7 share a text, so -5 is their group's representative; its
+    // near-copy 3 makes the rep pair (-5, 3) a candidate that gets packed
+    val df = Seq(
+      (-5L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (7L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (3L, "alpha beta gamma delta epsilon zeta eta iota"),
+      (4L, "one two three four five six seven eight")).toDF("doc_id", "text")
+    def raises(pairs: => org.apache.spark.sql.DataFrame): Unit = {
+      val e = intercept[Exception](pairs.collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("pair-packed id outside")), e.toString)
+    }
+    raises(Dedup.jaccardPairs(df, "doc_id", "text", 3, 0.5))
+    raises(Dedup.minhashDedupPairs(df, "doc_id", "text", 3, 0.5))
+    graft.ops.ScratchCache.releaseAll()
   }
 
   test("minhash pairs on replicated docs equal the uncollapsed (assumeDistinct) algorithm") {
@@ -643,7 +671,7 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     }
     // mid regime: hot count above the collect bound, under the broadcast
     // bound — the semi/anti split must be an EXPLICIT broadcast join
-    val (g1, m1) = Dedup.dupCollapseWithBounds(df, "doc_id", "text", 1L, 10L)
+    val (g1, m1) = DupGroups.dupCollapseWithBounds(df, "doc_id", "text", 1L, 10L)
     val p1 = m1.queryExecution.executedPlan.toString
     assert(p1.contains("BroadcastHashJoin"), p1)
     check(g1, m1)
@@ -651,12 +679,48 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     spark.catalog.clearCache()
     // degenerate corner: hot count above BOTH bounds yet a minority
     // sliver — one full-corpus window, NO join anywhere in the plan
-    val (g2, m2) = Dedup.dupCollapseWithBounds(df, "doc_id", "text", 1L, 2L)
+    val (g2, m2) = DupGroups.dupCollapseWithBounds(df, "doc_id", "text", 1L, 2L)
     val p2 = m2.queryExecution.executedPlan.toString
     assert(p2.contains("Window") && !p2.toLowerCase.contains("join"), p2)
     check(g2, m2)
     graft.ops.ScratchCache.releaseAll()
     spark.catalog.clearCache()
+  }
+
+  test("near-dup vector collapse: InSet, broadcast and full-window regimes match the brute form") {
+    // 4 of 40 vectors repeat (2 extra copies each): a MINORITY sliver
+    // (12 of 48 rows), so the injected bounds alone pick the regime. The
+    // fixture is a local relation: a union in it would blur the regime's
+    // plan signature below
+    val base = Tables.embeddings(spark, sfSmoke)
+      .select($"vec_id", $"embedding").orderBy($"vec_id").limit(40).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val emb = (base ++ (1 to 2).flatMap(k =>
+        base.take(4).map { case (i, v) => (i + k * 100000L, v) }))
+      .toSeq.toDF("vec_id", "embedding")
+    val key = (r: org.apache.spark.sql.Row) =>
+      (r.getLong(0), r.getLong(1), r.getDouble(2))
+    val brute = Similarity.nearDupPairsBrute(emb, "vec_id", "embedding", 0.3)
+      .collect().map(key).toSet
+    assert(brute.count(_._3 == 1.0) >= 12, s"fixture thin: ${brute.size}")
+    // (collect bound, broadcast bound) → what the members plan must show
+    val regimes = Seq(
+      ("InSet", (DupGroups.HotCollectMax, DupGroups.HotBroadcastMax),
+        (p: String) => p.contains("Union") && !p.contains("Join")),
+      ("broadcast", (1L, 10L),
+        (p: String) => p.contains("Union") && p.contains("BroadcastHashJoin")),
+      ("full window", (1L, 2L),
+        (p: String) => p.contains("Window") && !p.contains("Union") && !p.contains("Join")))
+    regimes.foreach { case (name, (c, b), shows) =>
+      val (_, members) = DupGroups.dupCollapseWithBounds(emb, "vec_id", "embedding", c, b)
+      val plan = members.queryExecution.executedPlan.toString
+      assert(shows(plan), s"$name regime not taken:\n$plan")
+      val pruned = DupGroups.withBounds(c, b) {
+        Similarity.nearDupPairs(emb, "vec_id", "embedding", 0.3)
+      }.collect().map(key).toSet
+      assert(pruned == brute, s"$name regime diverges from brute")
+      graft.ops.ScratchCache.releaseAll()
+    }
   }
 
   test("q211 on a corpus with ZERO truth pairs still reports block stats (completeness null, counts 0)") {
