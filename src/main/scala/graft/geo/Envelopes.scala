@@ -37,18 +37,21 @@ object Envelopes {
 
   /** Generate the 1°×1° tile-grid dimension table covering an envelope —
     * the stand-in for the reference's 19k-row glad_tiling.parquet (S1).
-    * Pure generation: sequence × sequence cross join, no shuffle; the result
-    * is dimension-sized and meant to be broadcast. */
+    * Pure generation: one range over the nx × ny cells, lon-major (lon =
+    * x0 + id div ny, lat = y0 + id mod ny) — no join, no shuffle; the
+    * result is dimension-sized and meant to be broadcast. */
   def tileGrid(spark: SparkSession, cover: Envelope): DataFrame = {
-    val lons = spark.range(math.floor(cover.xmin).toLong, math.ceil(cover.xmax).toLong)
-      .toDF("lon")
-    val lats = spark.range(math.floor(cover.ymin).toLong, math.ceil(cover.ymax).toLong)
-      .toDF("lat")
-    lons.crossJoin(lats).select(
-      col("lon").cast("double").as("xmin"),
-      col("lat").cast("double").as("ymin"),
-      (col("lon") + 1).cast("double").as("xmax"),
-      (col("lat") + 1).cast("double").as("ymax"))
+    val x0 = math.floor(cover.xmin).toLong
+    val y0 = math.floor(cover.ymin).toLong
+    val nx = math.max(0L, math.ceil(cover.xmax).toLong - x0)
+    val ny = math.max(0L, math.ceil(cover.ymax).toLong - y0)
+    val lon = lit(x0) + expr(s"id div $ny")
+    val lat = lit(y0) + col("id") % ny
+    spark.range(nx * ny).select(
+      lon.cast("double").as("xmin"),
+      lat.cast("double").as("ymin"),
+      (lon + 1).cast("double").as("xmax"),
+      (lat + 1).cast("double").as("ymax"))
       .withColumn("tile_id", tileId(col("xmin"), col("ymax")))
   }
 

@@ -3,22 +3,27 @@ package graft.pipelines
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.cube.{ChunkRow, ChunkTable}
+import graft.cube.ChunkRow
 import graft.geo.Envelopes
 import graft.model._
 import graft.ops.Incremental
-import graft.plan.{RegionPlanner, ScenePlanner}
-import graft.zarr.ArrayStore
+import graft.plan.RegionPlanner
+import graft.zarr.{ArrayStore, ChunkFormat, ZarrStore}
 
 /** End-to-end dataset-building pipeline — the engine's equivalent of the
-  * reference's three workflows (SURVEY §3):
+  * reference's three workflows (SURVEY §3), each stage skipping what the
+  * store already holds (J3: the request's chunks are listed once, on the
+  * driver, before any scene is read):
   *
-  *  E2 ingest_scenes:   required scenes (U4) → anti-join existing (J3) →
-  *                      idempotent scene materialization (S5/S6 stand-in)
-  *  E3 scene_features:  tile-date work units (F5) → anti-join (J3) →
-  *                      window stack + temporal reduce (U1/A3/A4)
+  *  plan:               snapped windows, tile cells, one store listing →
+  *                      pending (tile, time, band) chunks → the scene
+  *                      slices they need ([[RequestPlan]])
+  *  E2 ingest_scenes:   planned scene slices → idempotent scene
+  *                      materialization (S5/S6 stand-in)
+  *  E3 scene_features:  each slice fed to its pending windows → window
+  *                      stack + temporal reduce (U1/A3/A4)
   *  E1 mosaic build:    store init (S8) → region plan (O8) → parallel
-  *                      idempotent region writes (S9)
+  *                      idempotent writes of the pending chunks (S9)
   *
   * Two E2 forms with one output contract: `ingestScenes` synthesizes
   * deterministic scene chunks (fast correctness harness), and
@@ -51,24 +56,158 @@ object MosaicPipeline {
     else (h % 1000).toFloat
   }
 
-  /** E2: plan required scenes, skip existing, "ingest" the rest as chunk
-    * rows (one chunk per (tile, period, band)). Returns the scene cube
-    * table keyed by (tile_id, period, band). */
-  def ingestScenes(spark: SparkSession, cfg: Config, grid: DataFrame,
-                   existingUrls: DataFrame): DataFrame = {
+  /** One mosaic request, planned once on the driver before any scene is
+    * read: the snapped times with their windows, the tiles' chunk cells
+    * and the store grid, and — from one listing of the store — the
+    * (tile, time, band) chunks still to write and the scene slices they
+    * need. E2, E3 and E1 all take it, so a resume reads, reduces and
+    * writes only the pending chunks. A store that lists no chunk leaves
+    * everything pending. Built by [[MosaicPipeline.plan]]. */
+  final class RequestPlan private[MosaicPipeline] (
+      val cfg: Config,
+      /** Snapped feature times, ascending, each with its window's periods. */
+      val windows: Seq[(Timestamp, Seq[Long])],
+      tiles: () => Seq[(String, Double, Double)],
+      stored: Seq[graft.zarr.ChunkStoreSource.Key]) {
+
+    private val nBand = cfg.dataset.bands.length
+    require(nBand < 64, s"${cfg.dataset.name}: $nBand bands, at most 63 are supported")
+
+    /** The store's time axis. */
+    def times: Seq[Timestamp] = windows.map(_._1)
+
+    /** (tile id → (cy, cx), grid): the distinct corners of the tiles the
+      * query intersects, sorted, index the chunk rows and columns. The
+      * tiles are collected on first use; E3 never needs them when nothing
+      * is stored. */
+    private lazy val layout: (Map[String, (Int, Int)], GridDef) = {
+      val ts = tiles()
+      val lons = ts.map(_._2).distinct.sorted
+      val lats = ts.map(_._3).distinct.sorted
+      val lonIdx = lons.zipWithIndex.toMap
+      val latIdx = lats.zipWithIndex.toMap
+      (ts.map { case (id, x, y) => id -> (latIdx(y), lonIdx(x)) }.toMap,
+        GridDef(nTime = windows.length, nBand = nBand,
+          nY = lats.length * cfg.chunkPx, nX = lons.length * cfg.chunkPx,
+          chunkY = cfg.chunkPx, chunkX = cfg.chunkPx, itemBytes = 4))
+    }
+    def cells: Map[String, (Int, Int)] = layout._1
+    def grid: GridDef = layout._2
+
+    /** Value bands still to write at (tile, time index), as a bit mask
+      * (bit b = band b). A plain function of driver-built maps, so E3 and
+      * E1 ship it to the executors. */
+    lazy val pendingBands: (String, Int) => Long = {
+      val all = (1L << nBand) - 1
+      val done: Map[(String, Int), Long] =
+        if (stored.isEmpty) Map.empty
+        else {
+          val tileAt = cells.map(_.swap)
+          stored.filter(k => k.time < windows.length && k.band < nBand)
+            .flatMap(k => tileAt.get((k.cy, k.cx)).map(tile => (tile, k.time) -> (1L << k.band)))
+            .groupMapReduce(_._1)(_._2)(_ | _)
+        }
+      (tile, t) => all & ~done.getOrElse((tile, t), 0L)
+    }
+
+    /** The time indices a scene slice (tile, period, band) feeds: the
+      * times whose window holds the period and whose (tile, time) still
+      * needs the band — any band, for the QA band (never stored, so a
+      * resume always reads it). */
+    lazy val feeds: (String, Long, Int) => Seq[Int] = {
+      val timesOf = windows.zipWithIndex
+        .flatMap { case ((_, periods), t) => periods.map(_ -> t) }
+        .groupMap(_._1)(_._2)
+      val pending = pendingBands
+      val qa = nBand
+      (tile, period, band) => timesOf.getOrElse(period, Nil).filter { t =>
+        val m = pending(tile, t)
+        if (band == qa) m != 0L else hasBand(m, band)
+      }
+    }
+
+    /** The scene slices to read: per (tile, period), the bands whose slice
+      * feeds a pending chunk, the QA band (index `bands.length`) wherever
+      * a value band does. A (tile, period) feeding nothing is left out. */
+    lazy val slices: Seq[(String, Long, Seq[Int])] = {
+      val fed = feeds
+      val periods = windows.flatMap(_._2).distinct.sorted
+      for {
+        tile <- cells.keys.toSeq.sorted
+        period <- periods
+        bands = (0 to nBand).filter(b => fed(tile, period, b).nonEmpty)
+        if bands.nonEmpty
+      } yield (tile, period, bands)
+    }
+
+    /** The planned slices as scene rows (tile_id, period, bands, url). */
+    def scenes(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      slices.toDF("tile_id", "period", "bands")
+        .withColumn("url", cfg.dataset.sceneUrl($"tile_id", $"period"))
+    }
+  }
+
+  private def hasBand(mask: Long, band: Int): Boolean =
+    band >= 0 && band < 64 && (mask >>> band & 1L) != 0L
+
+  /** Plan one request: one collect of the windows, the tiles of `grid`
+    * the query intersects (collected when first needed), and one listing
+    * of the store. Take it before `ZarrStore.init` touches the store. */
+  def plan(spark: SparkSession, cfg: Config, grid: DataFrame): RequestPlan = {
     import spark.implicits._
-    val required = ScenePlanner.requiredScenes(spark, grid, cfg.query, cfg.times, cfg.dataset)
-    val missing = Incremental.missing(required, existingUrls, "url")
+    val format = ChunkFormat.of(cfg.storeRoot)
+    val stored = format.list().map(_.key)
+    val p = new RequestPlan(cfg, windows(spark, cfg), () =>
+      Envelopes.tilesIntersecting(grid, cfg.query)
+        .select($"tile_id", $"xmin", $"ymin").as[(String, Double, Double)].collect().toSeq,
+      stored)
+    if (stored.nonEmpty) checkStore(p, format)
+    p
+  }
+
+  /** A store built for another request must not pass for this one's
+    * partial result: its chunk keys would name other cells, bands or
+    * times. Refused, naming the field, before any chunk counts as
+    * present. A store written before the time axis was recorded is
+    * checked on grid and bands only. */
+  private def checkStore(p: RequestPlan, format: ChunkFormat): Unit = {
+    val root = p.cfg.storeRoot
+    def refuse(field: String, stored: Any, wanted: Any): Nothing =
+      throw new IllegalArgumentException(
+        s"store $root was built for another request: its $field is $stored, this request's is $wanted")
+    format match {
+      case v2: ChunkFormat.V2 =>
+        if (v2.grid != p.grid) refuse("grid", v2.grid, p.grid)
+        val (bands, times) = ZarrStore.readAxes(root)
+        if (bands != p.cfg.dataset.bands)
+          refuse("band labels", bands.mkString("[", ",", "]"), p.cfg.dataset.bands.mkString("[", ",", "]"))
+        val wanted = p.times.map(_.getTime)
+        times.foreach(t => if (t != wanted)
+          refuse("time axis (epoch ms)", t.mkString("[", ",", "]"), wanted.mkString("[", ",", "]")))
+      case other => refuse("layout", other.getClass.getSimpleName, "Zarr v2")
+    }
+  }
+
+  /** E2: "ingest" the planned scene slices, skipping scenes whose URL is
+    * in `existingUrls`, as chunk rows (one chunk per (tile, period,
+    * band)). Returns the scene cube table keyed by (tile_id, period,
+    * band). */
+  def ingestScenes(spark: SparkSession, cfg: Config, grid: DataFrame,
+                   existingUrls: DataFrame): DataFrame =
+    synthesize(cfg, Incremental.missing(plan(spark, cfg, grid).scenes(spark), existingUrls, "url"))
+
+  /** E2 over a planned request: every planned slice. */
+  def ingestScenes(spark: SparkSession, plan: RequestPlan): DataFrame =
+    synthesize(plan.cfg, plan.scenes(spark))
+
+  private def synthesize(cfg: Config, scenes: DataFrame): DataFrame = {
+    import scenes.sparkSession.implicits._
     val nBands = cfg.dataset.bands.length + 1 // + QA band
     val px = cfg.chunkPx
-    missing
-      .select($"tile_id", $"url",
-        graft.time.TemporalGrid.datetimeToPeriod($"datetime").as("period"))
-      .crossJoin(broadcast(spark.range(0, nBands).toDF("band")))
-      .as[(String, String, Long, Long)]
-      .map { case (tile, _, period, band) =>
-        val data = Array.tabulate(px * px)(c => pixel(tile, period, band.toInt, c, nBands))
-        (tile, period, band.toInt, data)
+    scenes.select($"tile_id", $"period", $"bands").as[(String, Long, Seq[Int])]
+      .flatMap { case (tile, period, bands) =>
+        bands.map(b => (tile, period, b, Array.tabulate(px * px)(c => pixel(tile, period, b, c, nBands))))
       }
       .toDF("tile_id", "period", "band", "data")
   }
@@ -86,21 +225,28 @@ object MosaicPipeline {
 
   /** E3: per (tile, snapped time), stack the trailing window of scenes and
     * apply the dataset's temporal reduction — the masked mean/median over
-    * the time dimension (U1). Output: one feature chunk per
-    * (tile, time, band).
-    *
-    * Plan shape: a literal period → times map expands each scene row to
-    * the windows holding it (a generator, not a join), then
-    * `TemporalReduce.maskedReduce` groups on (tile, time), slices ordered
-    * by period — ONE shuffle of the scene rows and no join over them. */
+    * the time dimension (U1). Output: one feature chunk per pending
+    * (tile, time, band) of the request planned from `cfg` and `grid`. */
   def buildFeatures(spark: SparkSession, cfg: Config, grid: DataFrame,
-                    scenes: DataFrame): DataFrame = {
-    import spark.implicits._
-    val timesOf = windows(spark, cfg)
-      .flatMap { case (time, periods) => periods.map(_ -> time) }
-      .groupMap(_._1)(_._2)
+                    scenes: DataFrame): DataFrame =
+    buildFeatures(plan(spark, cfg, grid), scenes)
+
+  /** E3 over a planned request.
+    *
+    * Plan shape: the plan's driver-built `feeds` expands each scene row to
+    * the pending windows holding it (a generator, not a join), then
+    * `TemporalReduce.maskedReduce` groups on (tile, time), slices ordered
+    * by period — ONE shuffle of the scene rows and no join over them. A
+    * value slice reaches only the times still needing its band, so the
+    * reduce emits exactly the pending chunks. */
+  def buildFeatures(plan: RequestPlan, scenes: DataFrame): DataFrame = {
+    import scenes.sparkSession.implicits._
+    val cfg = plan.cfg
+    val times = plan.times.toArray
+    val feeds = plan.feeds
+    val fedTimes = udf((tile: String, period: Long, band: Int) => feeds(tile, period, band).map(times(_)))
     val slices = scenes.select($"tile_id",
-      explode(element_at(typedLit(timesOf), $"period")).as("time"),
+      explode(fedTimes($"tile_id", $"period", $"band")).as("time"),
       $"band", $"period".as("t"), $"data")
     graft.agg.TemporalReduce.maskedReduce[(String, Timestamp)](slices,
         Seq($"tile_id", $"time"), cfg.dataset.bands.length, cfg.dataset.reduction,
@@ -111,68 +257,62 @@ object MosaicPipeline {
   /** E1: assemble features into the chunked store — tiles become the chunk
     * grid (tile (cy,cx) from its position in the covering grid), times
     * become the time axis; init writes metadata only, then one idempotent
-    * parallel write pass, incremental via chunk-key anti-join. */
+    * parallel write pass of the chunks the store does not hold yet. */
   def buildMosaic(spark: SparkSession, cfg: Config, grid: DataFrame,
-                  features: DataFrame): (GridDef, Seq[Region]) = {
-    import spark.implicits._
-    val times = windows(spark, cfg).map(_._1)
-    val tiles = Envelopes.tilesIntersecting(grid, cfg.query)
-      .select($"tile_id", $"xmin", $"ymin").collect()
-    val lons = tiles.map(_.getDouble(1)).distinct.sorted
-    val lats = tiles.map(_.getDouble(2)).distinct.sorted
-    val lonIdx = lons.zipWithIndex.toMap
-    val latIdx = lats.zipWithIndex.toMap
-    val tileCell = tiles.map(r =>
-      r.getString(0) -> (latIdx(r.getDouble(2)), lonIdx(r.getDouble(1)))).toMap
-    val gridDef = GridDef(
-      nTime = times.length, nBand = cfg.dataset.bands.length,
-      nY = lats.length * cfg.chunkPx, nX = lons.length * cfg.chunkPx,
-      chunkY = cfg.chunkPx, chunkX = cfg.chunkPx, itemBytes = 4)
+                  features: DataFrame): (GridDef, Seq[Region]) =
+    buildMosaic(plan(spark, cfg, grid), features)
 
+  /** E1 over a planned request. A request with nothing pending runs no
+    * job. */
+  def buildMosaic(plan: RequestPlan, features: DataFrame): (GridDef, Seq[Region]) = {
+    val cfg = plan.cfg
     // the mosaic lands in the Zarr v2 layout — the reference's own store
     // contract (flyte/build.py:110: a store xarray reopens); the DSv2
     // source auto-detects it, so reads/pruning are unchanged
-    graft.zarr.ZarrStore.init(cfg.storeRoot, gridDef, bands = cfg.dataset.bands)
-
-    val bTile = spark.sparkContext.broadcast(tileCell)
-    val bTime = spark.sparkContext.broadcast(times.map(_.getTime).zipWithIndex.toMap)
-    val chunks: Dataset[ChunkRow] = features
-      .as[(String, Timestamp, Int, Array[Float])]
-      .map { case (tile, time, band, data) =>
-        val (cy, cx) = bTile.value(tile)
-        ChunkRow(bTime.value(time.getTime), band, cy, cx, data)
-      }
-    // incremental: skip chunks already in the store (deterministic keys)
-    val existing = ArrayStore.existingKeys(spark, cfg.storeRoot)
-      .toDF("time", "band", "cy", "cx")
-    val pending = chunks.toDF()
-      .join(existing, Seq("time", "band", "cy", "cx"), "left_anti")
-      .as[ChunkRow]
-    graft.zarr.ZarrStore.write(pending, cfg.storeRoot)
-
+    ZarrStore.init(cfg.storeRoot, plan.grid, bands = cfg.dataset.bands,
+      times = plan.times.map(_.getTime))
+    if (plan.slices.nonEmpty) ZarrStore.write(pendingChunks(plan, features), cfg.storeRoot)
     val regions = RegionPlanner.planBandRange(
-      gridDef, cfg.regionBudgetBytes, 0, gridDef.nBand)
-    (gridDef, regions)
+      plan.grid, cfg.regionBudgetBytes, 0, plan.grid.nBand)
+    (plan.grid, regions)
   }
 
-  /** E2 (real-raster form, S2+S5): fetch each missing scene's GeoTIFF with
-    * the bulk fetch operator, decode with the tiled-TIFF reader, emit one
-    * chunk per (tile, period, band) — the same output contract as the
-    * generator form, so E3/E1 are unchanged. `localizeUrl` maps the
-    * protocol's object-store URL to a reachable one (tests: a file://
-    * fixture tree laid out like the bucket; production: identity or a
-    * signing rewrite). Scenes are one chunk tile per file at this scale;
-    * bigger scenes would chunk each band plane here instead of requiring
+  /** E1's chunk rows: each feature at its (time index, band, cy, cx) key,
+    * kept only while the plan has it pending, so a stored chunk is never
+    * rewritten whatever `features` holds. A narrow filter, no join. */
+  def pendingChunks(plan: RequestPlan, features: DataFrame): Dataset[ChunkRow] = {
+    import features.sparkSession.implicits._
+    val cells = plan.cells
+    val timeIdx = plan.times.map(_.getTime).zipWithIndex.toMap
+    val pending = plan.pendingBands
+    features.as[(String, Timestamp, Int, Array[Float])]
+      .flatMap { case (tile, time, band, data) =>
+        val t = timeIdx(time.getTime)
+        if (!hasBand(pending(tile, t), band)) None
+        else { val (cy, cx) = cells(tile); Some(ChunkRow(t, band, cy, cx, data)) }
+      }
+  }
+
+  /** E2 (real-raster form, S2+S5): fetch each planned scene's GeoTIFF
+    * whose URL is not in `existingUrls` with the bulk fetch operator,
+    * decode with the tiled-TIFF reader, emit one chunk per planned
+    * (tile, period, band) — the same output contract as the generator
+    * form, so E3/E1 are unchanged. `localizeUrl` maps the protocol's
+    * object-store URL to a reachable one (tests: a file:// fixture tree
+    * laid out like the bucket; production: identity or a signing
+    * rewrite). Scenes are one chunk tile per file at this scale; bigger
+    * scenes would chunk each band plane here instead of requiring
     * equality. */
   def ingestSceneTiffs(spark: SparkSession, cfg: Config, grid: DataFrame,
                        existingUrls: DataFrame, localizeUrl: Column => Column,
-                       workdir: String): DataFrame = {
-    import spark.implicits._
-    val required = ScenePlanner.requiredScenes(spark, grid, cfg.query, cfg.times, cfg.dataset)
-    val missing = Incremental.missing(required, existingUrls, "url")
-      .select($"tile_id", $"url",
-        graft.time.TemporalGrid.datetimeToPeriod($"datetime").as("period"))
-      .withColumn("src", localizeUrl($"url"))
+                       workdir: String): DataFrame =
+    fetchScenes(cfg, Incremental.missing(plan(spark, cfg, grid).scenes(spark), existingUrls, "url"),
+      localizeUrl, workdir)
+
+  private def fetchScenes(cfg: Config, scenes: DataFrame, localizeUrl: Column => Column,
+                          workdir: String): DataFrame = {
+    import scenes.sparkSession.implicits._
+    val missing = scenes.withColumn("src", localizeUrl($"url"))
       .cache() // counted for batch sizing, then fetched and joined below
     // scratch-bounded fan-out (scenes.py:60-70 batching): each fetch task
     // downloads at most taskScratchBytes/4 even under worst-case file sizes
@@ -184,14 +324,17 @@ object MosaicPipeline {
       missing.repartition(fetchParts), "src", workdir)()
     val px = cfg.chunkPx
     missing.join(fetched.select($"url".as("src"), $"dest"), Seq("src"))
-      .select($"tile_id", $"period", $"dest").distinct()
-      .as[(String, Long, String)]
-      .flatMap { case (tile, period, dest) =>
+      .select($"tile_id", $"period", $"bands", $"dest").distinct()
+      .as[(String, Long, Seq[Int], String)]
+      .flatMap { case (tile, period, bands, dest) =>
         val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dest))
         val fi = graft.raster.GeoTiff.info(bytes)
         require(fi.width == px && fi.height == px,
           s"scene tile must be ${px}x$px, got ${fi.width}x${fi.height}")
-        (0 until fi.bands).map(b => (tile, period, b, graft.raster.GeoTiff.readBand(bytes, b)))
+        bands.map { b =>
+          require(b < fi.bands, s"scene $dest has ${fi.bands} bands, band $b is planned")
+          (tile, period, b, graft.raster.GeoTiff.readBand(bytes, b))
+        }
       }
       .toDF("tile_id", "period", "band", "data")
   }
@@ -271,31 +414,26 @@ object MosaicPipeline {
     }
   }
 
-  /** Full E1∘E2∘E3 run; returns the reopened store as a chunk table plus
-    * the planned regions (the unit of downstream parallel work). */
+  /** Full E1∘E2∘E3 run, planned once; returns the reopened store as a
+    * chunk table plus the planned regions (the unit of downstream parallel
+    * work). */
   def run(spark: SparkSession, cfg: Config): (Dataset[ChunkRow], GridDef, Seq[Region]) = {
-    import spark.implicits._
-    val grid = Envelopes.tileGrid(spark, cfg.query)
-    val noExisting = Seq.empty[String].toDF("url")
-    val scenes = ingestScenes(spark, cfg, grid, noExisting)
-    val features = buildFeatures(spark, cfg, grid, scenes)
-    val (gridDef, regions) = buildMosaic(spark, cfg, grid, features)
+    val p = plan(spark, cfg, Envelopes.tileGrid(spark, cfg.query))
+    val (gridDef, regions) = buildMosaic(p, buildFeatures(p, ingestScenes(spark, p)))
     (ArrayStore.read(spark, cfg.storeRoot), gridDef, regions)
   }
 
   /** Full run over REAL raster files: scene .tifs under `srcRoot` (laid
     * out as the URL path, host dropped — Fetch.destRel), fetched into
-    * `workdir`, decoded, then the standard E3→E1. */
+    * `workdir`, decoded, then the standard E3→E1 — only the scenes the
+    * plan needs are fetched. */
   def runFromTiffs(spark: SparkSession, cfg: Config, srcRoot: String,
                    workdir: String): (Dataset[ChunkRow], GridDef, Seq[Region]) = {
-    import spark.implicits._
-    val grid = Envelopes.tileGrid(spark, cfg.query)
-    val noExisting = Seq.empty[String].toDF("url")
+    val p = plan(spark, cfg, Envelopes.tileGrid(spark, cfg.query))
     val localize = (u: Column) => concat(lit("file://" + srcRoot + "/"),
       regexp_replace(u, "^[a-z0-9]+://[^/]+/", ""))
-    val scenes = ingestSceneTiffs(spark, cfg, grid, noExisting, localize, workdir)
-    val features = buildFeatures(spark, cfg, grid, scenes)
-    val (gridDef, regions) = buildMosaic(spark, cfg, grid, features)
+    val scenes = fetchScenes(cfg, p.scenes(spark), localize, workdir)
+    val (gridDef, regions) = buildMosaic(p, buildFeatures(p, scenes))
     (ArrayStore.read(spark, cfg.storeRoot), gridDef, regions)
   }
 }

@@ -66,22 +66,24 @@ object RasterScaleBench {
 
       // stage attribution (each phase forced independently — re-runs the
       // upstream lineage, so these overlap; they locate cost, the total
-      // above is the pipeline number)
+      // above is the pipeline number). The stages plan against a second,
+      // empty store: the first is complete, and a plan skips what a store
+      // holds.
+      val store2 = java.nio.file.Files
+        .createTempDirectory(s"graft_raster_w_$label").toString
+      val cfg2 = cfg.copy(storeRoot = store2)
       val grid = graft.geo.Envelopes.tileGrid(spark, env)
       import spark.implicits._
       val noExisting = Seq.empty[String].toDF("url")
       val scenes = graft.pipelines.MosaicPipeline
-        .ingestScenes(spark, cfg, grid, noExisting)
+        .ingestScenes(spark, cfg2, grid, noExisting)
       val (nScenes, tScenes) = time(scenes.count())
       val features = graft.pipelines.MosaicPipeline
-        .buildFeatures(spark, cfg, grid, scenes)
+        .buildFeatures(spark, cfg2, grid, scenes)
       val (nFeatures, tFeatures) = time(features.count())
-      // E1 in isolation: a second fresh store fed by the same lazy
-      // features (its time includes one features recompute — subtract
-      // tFeatures for the write-stage share)
-      val store2 = java.nio.file.Files
-        .createTempDirectory(s"graft_raster_w_$label").toString
-      val cfg2 = cfg.copy(storeRoot = store2)
+      // E1 in isolation, fed by the same lazy features (its time includes
+      // one features recompute — subtract tFeatures for the write-stage
+      // share)
       val (_, tWrite) = time {
         graft.pipelines.MosaicPipeline.buildMosaic(spark, cfg2, grid, features)
       }

@@ -340,11 +340,12 @@ class ChunkScan(root: String, format: ChunkFormat, filters: Array[Filter],
   }
 
   /** Plan-time pruning, then byte-budget splitting (the FilePartition
-    * sizing rule): sorted (for key locality) surviving files are greedily
-    * packed into partitions of at most
-    * `min(maxPartitionBytes, max(openCost, totalBytes / parallelism))` —
-    * a 100 TB store at the default 128 MiB budget plans ~800k tasks (not a
-    * fixed 32), while a small store still fans out to cluster width.
+    * sizing rule): each file costs `max(size, openCost)`, and sorted (for
+    * key locality) surviving files are greedily packed into partitions of
+    * at most `min(maxPartitionBytes, max(openCost, totalCost / parallelism))`
+    * — a 100 TB store at the default 128 MiB budget plans ~800k tasks (not
+    * a fixed 32), while a small store fans out to about cluster width, even
+    * one of files far smaller than the open cost.
     * The key listing is driver-side, like Spark's own InMemoryFileIndex:
     * one flat directory of names (~40 B/chunk of driver memory, seconds
     * per million entries); a store beyond that keeps a manifest table
@@ -373,22 +374,22 @@ class ChunkScan(root: String, format: ChunkFormat, filters: Array[Filter],
         }
     }
     if (files.isEmpty) return Array(part(Array.empty))
-    val totalBytes = files.iterator.map(_.size).sum
+    val openCost = 4L * 1024 // per-file overhead floor, as in FilePartition
+    def cost(f: ChunkFile) = math.max(f.size, openCost)
+    val totalCost = files.iterator.map(cost).sum
     val parallelism = org.apache.spark.sql.SparkSession.active
       .sparkContext.defaultParallelism.toLong.max(1L)
-    val openCost = 4L * 1024 // per-file overhead floor, as in FilePartition
     val budget = math.min(maxPartitionBytes,
-      math.max(openCost, totalBytes / parallelism + 1))
+      math.max(openCost, totalCost / parallelism + 1))
     val parts = Array.newBuilder[InputPartition]
     val cur = Array.newBuilder[ChunkFile]
     var curBytes = 0L; var curN = 0
     for (f <- files) {
-      val cost = math.max(f.size, openCost)
-      if (curN > 0 && curBytes + cost > budget) {
+      if (curN > 0 && curBytes + cost(f) > budget) {
         parts += part(cur.result())
         cur.clear(); curBytes = 0L; curN = 0
       }
-      cur += f; curBytes += cost; curN += 1
+      cur += f; curBytes += cost(f); curN += 1
     }
     if (curN > 0) parts += part(cur.result())
     parts.result()

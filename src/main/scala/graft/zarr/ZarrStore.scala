@@ -3,7 +3,7 @@ package graft.zarr
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Dataset
 import graft.cube.ChunkRow
-import graft.model.GridDef
+import graft.model.{GridDef, Json}
 
 /** Zarr v2 on-disk store — the externally-readable array sink
   * (SURVEY §2.1 S7/S8; reference contract: flyte/build.py:110 writes a
@@ -28,6 +28,7 @@ import graft.model.GridDef
 object ZarrStore {
 
   private val DimNames = Seq("time", "band", "y", "x")
+  private val TimeAttr = "time_epoch_ms"
 
   private def zarrayJson(g: GridDef): String =
     s"""{"zarr_format":2,"shape":[${g.nTime},${g.nBand},${g.nY},${g.nX}],""" +
@@ -36,9 +37,12 @@ object ZarrStore {
       """"order":"C","filters":null,"dimension_separator":"."}"""
 
   /** S8 metadata-only init: group + array metadata, no data bytes. Band
-    * labels ride in `.zattrs` beside the xarray dimension convention. */
+    * labels and the time axis (epoch ms) ride in `.zattrs` beside the
+    * xarray dimension convention. Init overwrites the array's metadata;
+    * whether a store may be resumed is the caller's check (a second
+    * variable may join an existing root). */
   def init(root: String, grid: GridDef, varName: String = "data",
-           bands: Seq[String] = Nil): Unit = {
+           bands: Seq[String] = Nil, times: Seq[Long] = Nil): Unit = {
     val dir = Paths.get(root, varName)
     Files.createDirectories(dir)
     Files.writeString(Paths.get(root, ".zgroup"), """{"zarr_format":2}""")
@@ -47,8 +51,19 @@ object ZarrStore {
     val labels =
       if (bands.isEmpty) ""
       else bands.mkString(""","band_labels":["""", "\",\"", "\"]")
-    Files.writeString(dir.resolve(".zattrs"), s"{$dims$labels}")
+    val axis = if (times.isEmpty) "" else times.mkString(s",\"$TimeAttr\":[", ",", "]")
+    Files.writeString(dir.resolve(".zattrs"), s"{$dims$labels$axis}")
     consolidate(root)
+  }
+
+  /** The array's band labels and recorded time axis (epoch ms; None when
+    * init recorded none), from `.zattrs` (optional in the spec). */
+  def readAxes(root: String, varName: String = "data"): (Seq[String], Option[Seq[Long]]) = {
+    val file = Paths.get(root, varName, ".zattrs")
+    val attrs = if (Files.exists(file)) Json.parseObject(Files.readString(file)) else Map.empty[String, Any]
+    def list(k: String): Option[Vector[Any]] = attrs.get(k).collect { case v: Vector[_] => v }
+    (list("band_labels").getOrElse(Vector.empty).map(_.toString),
+      list(TimeAttr).map(_.map(_.asInstanceOf[Double].toLong)))
   }
 
   /** Zarr v2 consolidated metadata (`.zmetadata`, the `zarr.consolidate_

@@ -150,6 +150,26 @@ class ChunkSourceSpec extends AnyFunSuite with SparkSpecBase {
     assert(df.count() == 48)
   }
 
+  test("a store of sub-4 KiB chunks plans about cluster-width tasks, not one per open cost") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // each file costs max(size, 4 KiB); summing raw sizes instead would
+    // plan about parallelism x 4096 / 16 B tasks here
+    val par = spark.sparkContext.defaultParallelism
+    val nT = 8 * par
+    val smallRoot = java.nio.file.Files.createTempDirectory("graft-dsv2-small").toString
+    val g = GridDef(nT, 2, 4, 4, 2, 2, 4)
+    val small = for {
+      t <- 0 until nT; b <- 0 until 2; cy <- 0 until 2; cx <- 0 until 2
+    } yield ChunkRow(t, b, cy, cx, Array.fill(4)(1f))
+    ArrayStore.init(smallRoot, ArrayStore.Meta(g, Seq("B1", "B2")))
+    ArrayStore.write(spark.createDataset(small), smallRoot)
+    val df = spark.read.format("graft.zarr.ChunkStoreSource").load(smallRoot)
+    val n = df.queryExecution.sparkPlan.collect { case s: BatchScanExec => s }
+      .head.inputPartitions.length
+    assert(n <= 2 * par, s"${small.size} files of 16 B planned $n tasks at parallelism $par")
+    assert(df.count() == small.size)
+  }
+
   test("column pruning: a key-only projection never opens a payload") {
     // corrupt EVERY payload in a zlib-validated store; key-only reads must
     // still succeed (keys live in file names), full reads must fail

@@ -342,6 +342,149 @@ class PipelineSpec extends AnyFunSuite with SparkSpecBase {
     assert(bits(tokyo) == bits(ref.collect()))
   }
 
+  private val twoYears = Seq("2021-06-15", "2022-06-15").map(d => Timestamp.valueOf(s"$d 00:00:00"))
+
+  private def twoYearCfg(store: String) =
+    MosaicPipeline.Config(query, twoYears, AnnualMeanDataset, store, chunkPx = 4)
+
+  private def tmpStore(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def files(root: String): Seq[java.nio.file.Path] = {
+    val r = java.nio.file.Paths.get(root)
+    val s = java.nio.file.Files.walk(r)
+    try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(r.relativize).toSeq.sorted
+    finally s.close()
+  }
+
+  /** Every file of a store by relative path, with its bytes. */
+  private def contents(root: String): Map[String, Seq[Byte]] =
+    files(root).map(f => f.toString ->
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(root).resolve(f)).toSeq).toMap
+
+  /** Chunk files by path with their file identity: an atomic rewrite
+    * replaces the file, so an unchanged identity means never rewritten. */
+  private def chunkIds(root: String): Map[String, AnyRef] =
+    files(root).filter(_.getFileName.toString.matches("""\d+\.\d+\.\d+\.\d+""")).map { f =>
+      f.toString -> java.nio.file.Files.readAttributes(java.nio.file.Paths.get(root).resolve(f),
+        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+    }.toMap
+
+  private def copyStore(from: String, prefix: String): String = {
+    val to = tmpStore(prefix)
+    files(from).foreach { f =>
+      val dst = java.nio.file.Paths.get(to).resolve(f)
+      java.nio.file.Files.createDirectories(dst.getParent)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(from).resolve(f), dst)
+    }
+    to
+  }
+
+  private def planOf(cfg: MosaicPipeline.Config) =
+    MosaicPipeline.plan(spark, cfg, graft.geo.Envelopes.tileGrid(spark, cfg.query))
+
+  test("a resume reduces exactly the deleted chunks and ends bit-identical to a fresh build") {
+    val fresh = tmpStore("graft-pipe-fresh")
+    MosaicPipeline.run(spark, twoYearCfg(fresh))
+    val resumed = copyStore(fresh, "graft-pipe-resume")
+    // (time, cy, cx) = (0, 0, 0) loses some bands, (1, 1, 2) all of them;
+    // every other (tile, time), (0, 0, 1) among them, keeps all bands
+    val deleted = Seq(0, 2, 5).map(b => s"0.$b.0.0") ++ (0 until 7).map(b => s"1.$b.1.2")
+    deleted.foreach(k => java.nio.file.Files.delete(java.nio.file.Paths.get(resumed, "data", k)))
+    val kept = chunkIds(resumed)
+    assert(kept.keys.exists(_.endsWith("0.3.0.1")))
+    val cfg = twoYearCfg(resumed)
+    val plan = planOf(cfg)
+    assert(MosaicPipeline.buildFeatures(plan, MosaicPipeline.ingestScenes(spark, plan)).count() ==
+      deleted.size)
+    // QA is never stored: a (tile, period) feeding a pending chunk reads it
+    assert(plan.slices.nonEmpty && plan.slices.forall(_._3.contains(7)))
+    MosaicPipeline.run(spark, cfg)
+    assert(contents(resumed) == contents(fresh))
+    val after = chunkIds(resumed)
+    kept.foreach { case (f, id) => assert(after(f) == id, s"$f was rewritten") }
+  }
+
+  test("resuming a complete store plans no scene slice and writes nothing") {
+    val store = tmpStore("graft-pipe-complete")
+    val cfg = twoYearCfg(store)
+    MosaicPipeline.run(spark, cfg)
+    val before = chunkIds(store)
+    assert(before.size == 2 * 7 * 2 * 3)
+    assert(planOf(cfg).slices.isEmpty)
+    MosaicPipeline.run(spark, cfg)
+    assert(chunkIds(store) == before)
+  }
+
+  test("an empty store plans every band of exactly the required scenes") {
+    import org.apache.spark.sql.functions.col
+    val cfg = twoYearCfg(tmpStore("graft-pipe-empty"))
+    val grid = graft.geo.Envelopes.tileGrid(spark, query)
+    val plan = MosaicPipeline.plan(spark, cfg, grid)
+    val required = graft.plan.ScenePlanner.requiredScenes(spark, grid, query, twoYears, AnnualMeanDataset)
+      .select(col("tile_id"), TemporalGrid.datetimeToPeriod(col("datetime")))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(required.nonEmpty)
+    assert(plan.slices.map(s => (s._1, s._2)).toSet == required)
+    assert(plan.slices.size == required.size)
+    assert(plan.slices.forall(_._3 == (0 to 7)))
+  }
+
+  test("a resume into a store built for another request is refused, naming the field") {
+    val store = tmpStore("graft-pipe-other")
+    MosaicPipeline.run(spark, twoYearCfg(store))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(store, "data", "1.0.0.0"))
+    val before = contents(store)
+    // same grid and bands, other times: key 0.* is 2021 here, 2022 there
+    val later = Seq("2022-06-15", "2023-06-15").map(d => Timestamp.valueOf(s"$d 00:00:00"))
+    val e = intercept[IllegalArgumentException](
+      MosaicPipeline.run(spark, twoYearCfg(store).copy(times = later)))
+    assert(e.getMessage.contains("time axis"), e.getMessage)
+    val g = intercept[IllegalArgumentException](MosaicPipeline.run(spark,
+      twoYearCfg(store).copy(query = Envelope(-1.5, 40.2, 1.3, 41.8))))
+    assert(g.getMessage.contains("grid"), g.getMessage)
+    assert(contents(store) == before)
+    // a store without the recorded axis is checked on grid and bands only
+    val attrs = java.nio.file.Paths.get(store, "data", ".zattrs")
+    java.nio.file.Files.writeString(attrs,
+      java.nio.file.Files.readString(attrs).replaceAll(",\"time_epoch_ms\":\\[[0-9,]*\\]", ""))
+    assert(graft.zarr.ZarrStore.readAxes(store)._2.isEmpty)
+    MosaicPipeline.run(spark, twoYearCfg(store))
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(store, "data", "1.0.0.0")))
+  }
+
+  test("a real-raster resume fetches only the scenes its pending chunks need") {
+    import org.apache.spark.sql.functions.col
+    val px = 4; val nBands = 8
+    val srcRoot = tmpStore("graft-tif-resume-src")
+    val grid = graft.geo.Envelopes.tileGrid(spark, query)
+    graft.plan.ScenePlanner.requiredScenes(spark, grid, query, twoYears, AnnualMeanDataset)
+      .select(col("tile_id"), col("url"), TemporalGrid.datetimeToPeriod(col("datetime")))
+      .collect().foreach { r =>
+        val (tile, url, period) = (r.getString(0), r.getString(1), r.getLong(2))
+        val dst = java.nio.file.Paths.get(srcRoot, graft.ops.Fetch.destRel(url))
+        java.nio.file.Files.createDirectories(dst.getParent)
+        java.nio.file.Files.write(dst, graft.raster.GeoTiffWriter.write(px, px,
+          (0 until nBands).map(b => Array.tabulate(px * px)(c => MosaicPipeline.pixel(tile, period, b, c, nBands))),
+          nodata = Some(Double.NaN)))
+      }
+    val store = tmpStore("graft-tif-resume")
+    val cfg = twoYearCfg(store)
+    MosaicPipeline.runFromTiffs(spark, cfg, srcRoot, tmpStore("graft-tif-resume-w0"))
+    val full = contents(store)
+    // one band of the tile at (cy, cx) = (1, 0) in the second year: its
+    // window's scenes of that tile, and no other, are fetched again
+    java.nio.file.Files.delete(java.nio.file.Paths.get(store, "data", "1.4.1.0"))
+    val work = tmpStore("graft-tif-resume-w1")
+    MosaicPipeline.runFromTiffs(spark, cfg, srcRoot, work)
+    assert(contents(store) == full)
+    val fetched = files(work).map(_.toString)
+    val window = MosaicPipeline.plan(spark, twoYearCfg(tmpStore("graft-tif-resume-empty")), grid)
+      .windows(1)._2
+    assert(fetched.size == window.size, fetched)
+    assert(fetched.forall(_.contains(tileAt(-2.0, 41.0))), fetched)
+  }
+
   test("feature COG sink writes reopenable tifs at deterministic paths, idempotently") {
     import org.apache.spark.sql.functions.col
     val store = java.nio.file.Files.createTempDirectory("graft-pipe-cog").toString

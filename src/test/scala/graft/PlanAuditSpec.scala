@@ -556,4 +556,32 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpecBase {
     assert(shuffles.size == 1, plan.toString)
     assert(zips.isEmpty, plan.toString)
   }
+
+  test("E2→E3→E1 planned resume: ONE shuffle of the payload, no join at all") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.pipelines.MosaicPipeline
+    val store = java.nio.file.Files.createTempDirectory("graft-audit-resume").toString
+    val cfg = MosaicPipeline.Config(graft.model.Envelope(-1.5, 40.2, 0.3, 41.8),
+      Seq(java.sql.Timestamp.valueOf("2021-06-15 00:00:00")), graft.model.AnnualMeanDataset,
+      store, chunkPx = 4)
+    MosaicPipeline.run(spark, cfg)
+    for (k <- Seq("0.0.0.0", "0.3.1.2", "0.6.0.1"))
+      java.nio.file.Files.delete(java.nio.file.Paths.get(store, "data", k))
+    val plan = MosaicPipeline.plan(spark, cfg, graft.geo.Envelopes.tileGrid(spark, cfg.query))
+    // the chunk rows E1 writes: planned slices → fed windows → reduce → keys
+    val chunks = MosaicPipeline.pendingChunks(plan,
+      MosaicPipeline.buildFeatures(plan, MosaicPipeline.ingestScenes(spark, plan)))
+    val physical = chunks.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    def payload(p: SparkPlan): Boolean = p.output.exists(_.name == "data")
+    val shuffles = physical.collect { case e: ShuffleExchangeExec if payload(e.child) => e }
+    val joins = physical.collect { case j: BaseJoinExec => j }
+    assert(shuffles.size == 1, physical.toString)
+    assert(joins.isEmpty, physical.toString)
+    assert(chunks.count() == 3)
+  }
 }
