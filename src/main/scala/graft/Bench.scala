@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main — driver contract: ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
@@ -7,6 +9,12 @@ package graft
   * JVM/codegen/file-listing startup is not attributed to whichever query
   * happens to run first; queries then run in sorted-name order for
   * run-to-run comparability.
+  *
+  * Each query's time is the min of two passes. Data caches are dropped
+  * between queries, but generated code is not: the JVM's codegen cache
+  * holds the whole bench's classes (build.sbt), so pass 2 may find a
+  * query's classes resident and compile none. BENCH_FULL's `codegen` map
+  * holds the classes each query compiled in each pass.
   */
 object Bench {
   /** 1-minute loadavg via the JVM's own OS bean (getloadavg(3)); -1.0 when
@@ -76,17 +84,22 @@ object Bench {
     // cost with whatever else the host is doing that second (observed >5x
     // inflation on individual queries under external load); the min of two
     // independent runs estimates steady-state cost while still paying every
-    // query's real IO/shuffle/codegen work each pass (caches are dropped
-    // between queries, so pass 2 is not a warm-cache replay).
+    // query's real IO/shuffle work each pass (data caches are dropped
+    // between queries, so pass 2 is not a warm-cache replay; generated
+    // code stays resident, see above).
     // optional arg: comma-separated name substrings — bench a subset while
     // iterating locally (the driver invokes with no args)
     val only: Option[Seq[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSeq) else None
     // one timed run, then drop intra-query caches (dedup/similarity persist
     // intermediates consumed multiple times within one plan) so
-    // storage-memory residue from query N can't distort query N+1's timing
+    // storage-memory residue from query N can't distort query N+1's timing;
+    // each run's compiled-class count goes to BENCH_FULL's "codegen" map
+    val codegen = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
     def timed(name: String)(run: () => Any): (String, Either[String, Double]) = {
+      val c0 = Harness.compiledClasses()
       val outcome = timeQuery(run)
+      codegen(name) = codegen.getOrElse(name, Nil) :+ (Harness.compiledClasses() - c0)
       Harness.release(spark)
       name -> outcome
     }
@@ -140,8 +153,14 @@ object Bench {
     }
     val loadJson =
       s""""load_start":${fmt(loadStart)},"load_end":${fmt(loadEnd)},"cpu_sec":${fmt(cpuSec)}"""
+    // generated-code footprint: classes compiled per query and pass, and
+    // the Metaspace the loaded classes hold at the end of the run
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .asScala.find(_.getName == "Metaspace").fold(-1.0)(_.getUsage.getUsed / 1048576.0)
+    val codegenJson = codegen.map { case (k, ns) => "\"" + k + "\":" + ns.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"queries":${jsonMap(results)},"failed":${failedJson(failed)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$loadJson,"metaspace_mb":${fmt(metaspaceMb)},"queries":${jsonMap(results)},"codegen":$codegenJson,"failed":${failedJson(failed)},"sf":"$sfDir"}"""
     // CWD-relative (or env-overridden) so any checkout gets the file, and
     // named by core count so a run at one width keeps another's record; a
     // failed write is logged, not swallowed — the stdout line advertises it

@@ -34,10 +34,17 @@ object Harness {
     spark
   }
 
-  /** Drops the frames a query cached (its ScratchCache persists and the
-    * session cache), so no storage residue of one query reaches the next. */
-  def release(spark: SparkSession): Unit = {
-    graft.ops.ScratchCache.releaseAll()
-    spark.catalog.clearCache()
-  }
+  /** Drops the frames a query of `spark` cached, so no storage residue of
+    * one query reaches the next. Every frame a query leaves cached is
+    * registered with `ScratchCache` (the rest are unpersisted where they
+    * are made), so this releases exactly `spark`'s and leaves the frames of
+    * other sessions of the same SparkContext cached. */
+  def release(spark: SparkSession): Unit = graft.ops.ScratchCache.release(spark)
+
+  /** Classes Janino has compiled in this JVM so far: the sample count of
+    * Spark's codegen compilation-time histogram, which records one sample
+    * per codegen cache miss. A delta across a query is the classes that
+    * query compiled; 0 means its generated code was all resident. */
+  def compiledClasses(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

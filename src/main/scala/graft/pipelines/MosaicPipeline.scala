@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.cube.ChunkRow
 import graft.geo.Envelopes
 import graft.model._
-import graft.ops.Incremental
+import graft.ops.{Incremental, ScratchCache}
 import graft.plan.RegionPlanner
 import graft.zarr.{ArrayStore, ChunkFormat, ZarrStore}
 
@@ -312,8 +312,10 @@ object MosaicPipeline {
   private def fetchScenes(cfg: Config, scenes: DataFrame, localizeUrl: Column => Column,
                           workdir: String): DataFrame = {
     import scenes.sparkSession.implicits._
-    val missing = scenes.withColumn("src", localizeUrl($"url"))
-      .cache() // counted for batch sizing, then fetched and joined below
+    // counted for batch sizing, then fetched and joined below; the lazy
+    // result reads it, so its release is the caller's (`Harness.release`)
+    val missing = ScratchCache.register(
+      scenes.withColumn("src", localizeUrl($"url")).cache())
     // scratch-bounded fan-out (scenes.py:60-70 batching): each fetch task
     // downloads at most taskScratchBytes/4 even under worst-case file sizes
     // (the reference's 4x headroom — outputs/temp files share the disk)

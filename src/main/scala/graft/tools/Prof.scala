@@ -11,8 +11,9 @@ import graft.ops.PlanGuard
   * `SPARK_GRAFT_SF_DIR`. `names` are comma-separated query-name substrings.
   *
   *  - `time <names> [passes]`: each matching query run `passes` times
-  *    (default 2), one line per query with every pass's wall seconds, or
-  *    the message of what the pass threw.
+  *    (default 2), one line per query with every pass's wall seconds and
+  *    the classes it Janino-compiled (`Harness.compiledClasses`), or the
+  *    message of what the pass threw.
   *  - `jobs <name> [passes]`: the query named exactly, run `passes` times
   *    (default 2), then every Spark job of the last pass with its wall
   *    time, the gap since the previous job ended and its stages — the
@@ -52,9 +53,11 @@ object Prof {
   private def time(spark: SparkSession, queries: Seq[Query], passes: Int): Unit =
     for ((name, fn) <- queries) {
       val runs = Seq.fill(passes) {
+        val c0 = Harness.compiledClasses()
         val r = Bench.timeQuery(() => fn(spark, Harness.sfDir).count())
+        val compiled = Harness.compiledClasses() - c0
         Harness.release(spark)
-        r.fold(m => s"failed: $m", t => f"$t%7.3f")
+        r.fold(m => s"failed: $m", t => f"$t%7.3f [$compiled%3d cls]")
       }
       println(f"PROF $name%-26s ${runs.mkString(" ")}")
     }

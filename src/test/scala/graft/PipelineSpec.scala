@@ -453,10 +453,13 @@ class PipelineSpec extends AnyFunSuite with SparkSpecBase {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(store, "data", "1.0.0.0")))
   }
 
-  test("a real-raster resume fetches only the scenes its pending chunks need") {
+  /** A fixture tree under a new temp dir: one 4×4-pixel GeoTIFF per scene
+    * the two-year request needs, at its URL's path, holding the
+    * generator's pixels. */
+  private def twoYearSceneTiffs(prefix: String): String = {
     import org.apache.spark.sql.functions.col
     val px = 4; val nBands = 8
-    val srcRoot = tmpStore("graft-tif-resume-src")
+    val srcRoot = tmpStore(prefix)
     val grid = graft.geo.Envelopes.tileGrid(spark, query)
     graft.plan.ScenePlanner.requiredScenes(spark, grid, query, twoYears, AnnualMeanDataset)
       .select(col("tile_id"), col("url"), TemporalGrid.datetimeToPeriod(col("datetime")))
@@ -468,6 +471,12 @@ class PipelineSpec extends AnyFunSuite with SparkSpecBase {
           (0 until nBands).map(b => Array.tabulate(px * px)(c => MosaicPipeline.pixel(tile, period, b, c, nBands))),
           nodata = Some(Double.NaN)))
       }
+    srcRoot
+  }
+
+  test("a real-raster resume fetches only the scenes its pending chunks need") {
+    val srcRoot = twoYearSceneTiffs("graft-tif-resume-src")
+    val grid = graft.geo.Envelopes.tileGrid(spark, query)
     val store = tmpStore("graft-tif-resume")
     val cfg = twoYearCfg(store)
     MosaicPipeline.runFromTiffs(spark, cfg, srcRoot, tmpStore("graft-tif-resume-w0"))
@@ -483,6 +492,17 @@ class PipelineSpec extends AnyFunSuite with SparkSpecBase {
       .windows(1)._2
     assert(fetched.size == window.size, fetched)
     assert(fetched.forall(_.contains(tileAt(-2.0, 41.0))), fetched)
+  }
+
+  test("a real-raster build leaves no frame cached once Harness.release has run") {
+    spark.catalog.clearCache() // isolate from earlier tests' own caches
+    graft.ops.ScratchCache.releaseAll()
+    val srcRoot = twoYearSceneTiffs("graft-tif-release-src")
+    MosaicPipeline.runFromTiffs(spark, twoYearCfg(tmpStore("graft-tif-release")), srcRoot,
+      tmpStore("graft-tif-release-w"))
+    assert(!spark.sharedState.cacheManager.isEmpty) // the fetched scene rows
+    Harness.release(spark)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("feature COG sink writes reopenable tifs at deterministic paths, idempotently") {
