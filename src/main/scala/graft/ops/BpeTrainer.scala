@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: the corpus is scanned ONCE into a (word, freq) table —
   * every iteration after that runs over the |word-vocab|-sized symbol
   * table (pair explode → one hash aggregation → TakeOrdered(1) argmax →
-  * map-applied merge), never the corpus. Each round localCheckpoints the
-  * new generation and unpersists the old one: iterative lineage is NOT
-  * optional hygiene here — without truncation the logical plan doubles
-  * per merge and the driver OOMs composing it long before data size
-  * matters (measured: heap exhaustion just RENDERING the plan string at
-  * ~20 unchecked rounds).
+  * map-applied merge), never the corpus. Each round cuts the new
+  * generation (`ScratchCache.cut`) and frees the old one: iterative
+  * lineage is NOT optional hygiene here — without truncation the logical
+  * plan doubles per merge and the driver OOMs composing it long before
+  * data size matters (measured: heap exhaustion just RENDERING the plan
+  * string at ~20 unchecked rounds).
   *
   * Determinism: the argmax tie-break is (count DESC, left symbol ASC,
   * right symbol ASC), so the merge sequence is reproducible run-to-run
@@ -52,9 +52,12 @@ object BpeTrainer {
         .as("w"))
       .groupBy($"w").agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
-    var syms: Dataset[(Seq[String], Long)] = words
-      .map { case (w, f) => ((w.map(_.toString) :+ Eow): Seq[String], f) }
-      .localCheckpoint(true)
+    // each generation is a ScratchCache cut (freed when superseded, and
+    // on release if the loop throws)
+    def cut(ds: Dataset[(Seq[String], Long)]) =
+      ScratchCache.cut(ds.toDF()).as[(Seq[String], Long)]
+    var syms = cut(words
+      .map { case (w, f) => ((w.map(_.toString) :+ Eow): Seq[String], f) })
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (merges.length < nMerges && !done) {
@@ -71,13 +74,12 @@ object BpeTrainer {
       else {
         val (a, b, _) = top.head
         merges += ((a, b))
-        val next = syms.map { case (s, f) => (applyMerge(s, a, b), f) }
-          .localCheckpoint(true)
-        syms.unpersist()
+        val next = cut(syms.map { case (s, f) => (applyMerge(s, a, b), f) })
+        ScratchCache.free(syms)
         syms = next
       }
     }
-    syms.unpersist()
+    ScratchCache.free(syms)
     merges.toSeq
   }
 

@@ -234,12 +234,14 @@ object CorpusSink {
         (sum(rowHash) % 4294967296L).as("content_hash"),
         min(col(idCol).cast("long")).as("min_id"),
         max(col(idCol).cast("long")).as("max_id"))
-    val manifest = (old match {
+    // cut: the new manifest reads the old manifest files it overwrites
+    val manifest = ScratchCache.cut((old match {
       case Some(o) => o.select(newRows.columns.map(col): _*).unionByName(newRows)
       case None => newRows
-    }).orderBy(col("shard_id")).localCheckpoint()
+    }).orderBy(col("shard_id")))
     manifest.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(new java.io.File(dir, ManifestDir).toString)
+    ScratchCache.free(manifest)
     newRows.orderBy(col("shard_id"))
   }
 

@@ -517,11 +517,12 @@ object Dedup {
     * short-diameter in practice, and `maxIter` bounds adversarial
     * chains.
     *
-    * Latency shape: exactly ONE Spark action per round — the round's
-    * aggregation carries an `observe` metric counting labels that
-    * DECREASED this round (exact, overflow-free, unlike a label-sum
-    * compare), so materializing the new generation and detecting the
-    * fixpoint are the same job. Round 1 is folded into initialization:
+    * Latency shape: one job cuts the edge list off the pair plan, then
+    * exactly ONE job per round — the round's aggregation carries an
+    * `observe` metric counting labels that DECREASED this round (exact,
+    * overflow-free, unlike a label-sum compare) and the label count, so
+    * materializing the new generation and detecting the fixpoint are the
+    * same job. Round 1 is folded into initialization:
     * the seed label is already min(id, neighbors) from a single
     * aggregation over the edge list, so a diameter-d component needs
     * d-1 loop rounds, and pair tables with no chains (the common
@@ -540,38 +541,33 @@ object Dedup {
       pairs: DataFrame, a: String, b: String,
       maxIter: Int, labelBroadcastMax: Long): DataFrame = {
     // both edge directions from ONE pass over the pair plan (a union of
-    // two selects would evaluate the upstream pair generator twice).
-    // Cached UNPARTITIONED: in the common regime (labels fit a broadcast
-    // — every bench SF, and any corpus whose near-dup graph converges at
-    // the seed) the per-round neighbor join broadcasts labels and never
-    // shuffles the edges, so a dst repartition before the fill would be a
-    // pure extra exchange (measured r15: q133 5.9→9.7 s, q128 6.7→10.0 s
-    // from exactly that). The scale regime re-caches on dst below, gated
-    // on the OBSERVED label count — never speculatively.
-    val edges0 = ScratchCache.register(
+    // two selects would evaluate the upstream pair generator twice), CUT
+    // (ScratchCache.cut: materialized now, registered for release): every
+    // later plan — the seed, each round, the query's final consumer —
+    // starts at the edge rows instead of embedding the whole pair plan
+    // (DupGroups, band and verify caches), which Spark would otherwise
+    // re-plan and re-print at every stage update of every round (q51's
+    // digest: 15835 plan lines as a persisted frame). Unpartitioned: in
+    // the common regime (labels fit a broadcast — every bench SF, and any
+    // corpus whose near-dup graph converges at the seed) the per-round
+    // neighbor join broadcasts labels and never shuffles the edges, so a
+    // dst repartition here would be a pure extra exchange (measured r15:
+    // q133 5.9→9.7 s, q128 6.7→10.0 s from exactly that). The scale
+    // regime re-cuts them on dst below, gated on the OBSERVED label count
+    // — never speculatively.
+    val edges0 = ScratchCache.cut(
       pairs.select(explode(array(
           struct(col(a).cast("long").as("src"), col(b).cast("long").as("dst")),
           struct(col(b).cast("long").as("src"), col(a).cast("long").as("dst"))))
           .as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .persist())
+        .select(col("e.src").as("src"), col("e.dst").as("dst")))
     var edges = edges0
     // seed = round 1: label(id) = min(id, all neighbors) in one shuffle
     // (edges carry both directions, so min(least(src,dst)) grouped by src
-    // IS the first propagation step)
+    // IS the first propagation step). Not materialized on its own: round
+    // 0 reads it on both sides, and both reuse the one edge exchange.
     var labels = edges.groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("label"))
-      .persist()
-    // Plan view each round BUILDS on. Round 0 uses the seed plan directly
-    // (the common single-round case keeps the r14 plan shape exactly);
-    // later rounds use a LINEAGE-CUT view of the materialized generation
-    // (LogicalRDD over the persisted rows) — without the cut, each round's
-    // logical plan embeds the previous round's 3-4 times (own + neighbor +
-    // jump sides), so analysis cost and plan strings grow as 4^rounds and
-    // a ~10-round chain OOMs the driver before any data moves. The cut
-    // costs one Row conversion per round read and only exists off the
-    // seed-convergent fast path.
-    var labelsView = labels
     var it = 0
     var nLabels = -1L
     var converged = false
@@ -582,24 +578,22 @@ object Dedup {
       // A round-0 non-convergence means real chains; from round 1 on,
       // (a) when the label table (nLabels rows of two longs) outgrows a
       // broadcast, the per-round join would shuffle the edges EVERY round
-      // — re-cache them hash-partitioned on dst once (one pass over the
-      // already-cached edges) so the join reuses the cached layout (the
-      // PageRank edge-cache discipline);
+      // — re-cut them hash-partitioned on dst once (one pass over the
+      // already-cut edges); the cut keeps that partitioning, so each
+      // round's join reads the edges where they are (the PageRank
+      // edge-cache discipline);
       if (it == 1) {
         val bcMax =
           if (labelBroadcastMax >= 0L) labelBroadcastMax
           else pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
         if (bcMax >= 0L && nLabels * 16L > bcMax) {
-          val e = ScratchCache.register(
-            FanOut.byKey(edges0, col("dst")).persist())
-          e.count() // fill from the cached unpartitioned edges, then drop them
-          edges0.unpersist()
-          edges = e
+          edges = ScratchCache.cut(FanOut.byKey(edges0, col("dst")))
+          ScratchCache.free(edges0)
         }
       }
       val obs = org.apache.spark.sql.Observation(s"cc_round_$it")
-      val own = labelsView.select(col("id"), col("label"), lit(true).as("own"))
-      val nbr = edges.join(labelsView.withColumnRenamed("id", "dst"), Seq("dst"))
+      val own = labels.select(col("id"), col("label"), lit(true).as("own"))
+      val nbr = edges.join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
         .select(col("src").as("id"), col("label"), lit(false).as("own"))
       // (b) POINTER-JUMP SHORTCUT, same gate: each id also adopts its
       // label's label (labels form a monotone forest — label(id) ≤ id and
@@ -612,32 +606,36 @@ object Dedup {
       val withJump =
         if (it == 0) own.union(nbr)
         else {
-          val jump = labelsView.select(col("id"), col("label").as("_l"))
-            .join(labelsView.select(col("id").as("_l"), col("label").as("_ll")),
+          val jump = labels.select(col("id"), col("label").as("_l"))
+            .join(labels.select(col("id").as("_l"), col("label").as("_ll")),
               Seq("_l"))
             .select(col("id"), col("_ll").as("label"), lit(false).as("own"))
           own.union(nbr).union(jump)
         }
       // the old label rides the aggregation (each id has exactly ONE own
-      // row), so "did anything change" is measured inside the same pass
-      val next = withJump
+      // row), so "did anything change" and the label count are observed
+      // inside the same pass: the generation's cut is the round's ONE job.
+      // Each generation is cut, so a round's plan holds the previous one
+      // as a scan — without that, it embeds the previous round's 3-4
+      // times (own + neighbor + jump sides), and analysis cost and plan
+      // strings grow as 4^rounds.
+      val next = ScratchCache.cut(withJump
         .groupBy(col("id"))
         .agg(min(col("label")).as("label"),
           max(when(col("own"), col("label"))).as("__old"))
         .observe(obs,
           coalesce(sum(when(col("label") < col("__old"), 1L).otherwise(0L)),
-            lit(0L)).as("changed"))
-        .select(col("id"), col("label"))
-        .persist()
-      nLabels = next.count() // the ONE action: materializes next + the metric
-      labels.unpersist()     // superseded generation frees NOW
+            lit(0L)).as("changed"),
+          count(lit(1)).as("n"))
+        .select(col("id"), col("label")))
+      ScratchCache.free(labels) // superseded generation frees NOW
       labels = next
-      // lineage cut (see labelsView note above): rounds > 0 build on the
-      // materialized rows, not the nested logical plan
-      labelsView = next.sparkSession.createDataFrame(next.rdd, next.schema)
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      val m = obs.get
+      nLabels = m("n").asInstanceOf[Long]
+      converged = m("changed").asInstanceOf[Long] == 0L
       it += 1
     }
+    ScratchCache.free(edges) // the last generation no longer reads them
     if (sys.env.contains("GRAFT_CC_DEBUG"))
       System.err.println(s"connectedComponents: $it rounds")
     // (an empty graph needs no special case: the seed aggregation is
@@ -646,12 +644,12 @@ object Dedup {
     // survivors per true component — refuse instead; callers with known
     // long chains raise maxIter
     if (!converged) {
-      labels.unpersist()
+      ScratchCache.free(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           "(component diameter exceeds maxIter?)")
     }
-    ScratchCache.register(labels) // final generation: released by the sweep
+    // the final generation stays registered: released by the sweep
     labels.select(col("id"), col("label").as("component_id"))
   }
 

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.Checkpoint
 
-/** Lifecycle registry for operator-internal persisted intermediates.
+/** Lifecycle registry for operator-internal materialized intermediates.
   *
   * Multi-pass operators (dedup, similarity, size-batching) persist frames
   * that are consumed more than once INSIDE one logical result — the
@@ -12,17 +14,26 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * them itself; but left alone in a long-lived session they accumulate
   * executor storage until eviction pressure degrades unrelated jobs.
   *
-  * Every such persist registers here under the session it belongs to; a
-  * session-level caller releases that session's frames between jobs with
-  * [[release]] (`graft.Harness.release`: `Bench` clears between timed
+  * Iterative operators (connected components, BPE training) and
+  * read-then-overwrite writers (the corpus sink's manifest) instead CUT
+  * lineage with [[cut]]: the frame is materialized now and later plans
+  * start at its rows, not at the plan that made them.
+  *
+  * Every such persist or cut registers here under the session it belongs
+  * to; a session-level caller releases that session's frames between jobs
+  * with [[release]] (`graft.Harness.release`: `Bench` clears between timed
   * queries, `Verify` between dumped queries), leaving the frames of other
   * sessions of the same SparkContext cached. [[releaseAll]] drops every
   * session's. Frames whose last consumer is INSIDE the operator are not
-  * registered — they are unpersisted eagerly at the internal
-  * materialization point instead.
+  * left registered — they are unpersisted (a persist) or [[free]]d (a cut)
+  * at the internal materialization point instead.
   */
 object ScratchCache {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+
+  /** A cut: its session, the frame [[cut]] returned, the blocks it reads. */
+  private final case class Cut(spark: SparkSession, frame: DataFrame, rdd: RDD[_])
+  private val cuts = scala.collection.mutable.ArrayBuffer.empty[Cut]
 
   /** Register an operator-internal persisted frame for later release by
     * its session. */
@@ -31,20 +42,49 @@ object ScratchCache {
     df
   }
 
-  /** Unpersist (blocking=false) and forget the frames registered from
-    * `spark`. Safe to call between jobs; a released frame that is re-read
-    * simply recomputes. */
+  /** Lineage cut: materializes `df` now (one job) as an eager local
+    * checkpoint and returns a frame that reads those rows, with `df`'s
+    * physical output partitioning kept (a hash aggregate's or a
+    * `repartition(n, key)`'s `HashPartitioning` survives, so a later join
+    * or aggregation on that key does not shuffle it again). A plan built
+    * on the result holds one scan node in place of `df`'s whole plan. The
+    * blocks are registered under `df`'s session: [[release]] and
+    * [[releaseAll]] drop them, [[free]] drops them sooner. */
+  private[graft] def cut(df: DataFrame): DataFrame = {
+    val (frame, rdd) = Checkpoint.local(df)
+    synchronized(cuts += Cut(df.sparkSession, frame, rdd))
+    frame
+  }
+
+  /** Drop now the blocks of the cut `df` is (the frame [[cut]] returned,
+    * or a typed view of it) and forget it; a frame that is no cut is left
+    * alone. For cuts whose last consumer is inside the operator. */
+  private[graft] def free(df: Dataset[_]): Unit = synchronized {
+    val plan = df.queryExecution.logical
+    cuts.filter(_.frame.queryExecution.logical eq plan).foreach(c => Checkpoint.free(c.rdd))
+    cuts.filterInPlace(_.frame.queryExecution.logical ne plan)
+  }
+
+  /** Unpersist (blocking=false) and forget the frames and cuts registered
+    * from `spark`. Safe to call between jobs; a released persisted frame
+    * that is re-read simply recomputes (a released cut cannot be re-read:
+    * its rows are gone with its blocks). */
   def release(spark: SparkSession): Unit = synchronized {
     frames.filter(_.sparkSession eq spark).foreach(_.unpersist())
     frames.filterInPlace(_.sparkSession ne spark)
+    cuts.filter(_.spark eq spark).foreach(c => Checkpoint.free(c.rdd))
+    cuts.filterInPlace(_.spark ne spark)
   }
 
-  /** Unpersist every registered frame of every session and forget them. */
+  /** Unpersist every registered frame and cut of every session and forget
+    * them. */
   def releaseAll(): Unit = synchronized {
     frames.foreach(_.unpersist())
     frames.clear()
+    cuts.foreach(c => Checkpoint.free(c.rdd))
+    cuts.clear()
   }
 
-  /** Number of currently-registered frames (monitoring/tests). */
-  def registered: Int = synchronized(frames.size)
+  /** Number of currently-registered frames and cuts (monitoring/tests). */
+  def registered: Int = synchronized(frames.size + cuts.size)
 }

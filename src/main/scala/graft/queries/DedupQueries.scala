@@ -277,11 +277,10 @@ object DedupQueries {
     import s.implicits._
     val docs = documents(s, d)
     val pairs = Dedup.minhashDedupPairs(docs, "doc_id", "text", 3, 0.8)
-    // comp is ≤ |paired docs| and feeds BOTH the histogram and the
-    // singleton anti-join — persist it so the minhash pair pipeline
-    // upstream runs once, not once per consumer
-    val comp = graft.ops.ScratchCache.register(
-      Dedup.connectedComponents(pairs, "id_a", "id_b").persist())
+    // comp feeds BOTH the histogram and the singleton anti-join; it is
+    // already materialized (connected components returns its last cut
+    // generation), so the pair pipeline upstream runs once
+    val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val hist = comp.groupBy($"component_id").agg(count(lit(1)).as("sz"))
       .groupBy($"sz".as("cluster_size")).agg(count(lit(1)).as("n_clusters"))
     val singles = docs.select($"doc_id")
@@ -463,8 +462,7 @@ object DedupQueries {
       .agg(count(lit(1)).as("n_docs_kept"), sum($"n_tok").as("n_tokens_kept"))
       .select(lit("1_exact").as("policy"), $"n_docs_kept", $"n_tokens_kept")
     val pairs = Dedup.minhashDedupPairs(documents(s, d), "doc_id", "text", 3, 0.8)
-    val comp = graft.ops.ScratchCache.register(
-      Dedup.connectedComponents(pairs, "id_a", "id_b").persist())
+    val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
     // survivors: min id per component; non-members survive by default —
     // expressed as an anti-join union, never a driver-side set difference
     val compKeep = comp.groupBy($"component_id").agg(min($"id").as("doc_id"))

@@ -22,6 +22,8 @@ import graft.ops.PlanGuard
   *    (default all), one JSON object keyed by query name. Eager operators
   *    (connected components' rounds) run while the frame is built; the
   *    digest is of the final consumer plan, the one the query returns.
+  *    The run gets its own empty `java.io.tmpdir`, so queries that reuse
+  *    scratch state there digest their build path on every host.
   *
   * e.g. `sbt "runMain graft.tools.Prof time q27,q28 3"`. */
 object Prof {
@@ -94,6 +96,21 @@ object Prof {
   }
 
   private def plan(spark: SparkSession, queries: Seq[Query], out: String): Unit = {
+    // queries that keep scratch state under java.io.tmpdir (q126's and
+    // q138's corpus shards, q144's band index) plan their build path on a
+    // cold root and their reuse path on a warm one: a fresh root for the
+    // run makes every digest a function of the code alone
+    val tmpdir = System.getProperty("java.io.tmpdir")
+    val root = java.nio.file.Files.createTempDirectory("graft-prof-plan-").toFile
+    System.setProperty("java.io.tmpdir", root.toString)
+    try digest(spark, queries, out)
+    finally {
+      System.setProperty("java.io.tmpdir", tmpdir)
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
+  }
+
+  private def digest(spark: SparkSession, queries: Seq[Query], out: String): Unit = {
     val digests = new java.util.LinkedHashMap[String, java.util.Map[String, Any]]()
     for ((name, fn) <- queries) {
       try {

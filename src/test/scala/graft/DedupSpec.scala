@@ -622,6 +622,81 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     graft.ops.ScratchCache.releaseAll()
   }
 
+  test("connectedComponents forced scale regime: >= 3 rounds over cut generations " +
+      "equal a union-find, no exchange on the dst-partitioned edge side") {
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // shuffled chains (ids out of chain order, so min labels travel far),
+    // a cycle and isolated pairs
+    val rnd = new scala.util.Random(41)
+    val chainA = rnd.shuffle((1L to 40L).toList)
+    val chainB = rnd.shuffle((100L to 130L).toList)
+    val edgeList = chainA.zip(chainA.tail) ++ chainB.zip(chainB.tail) ++
+      Seq((200L, 201L), (201L, 202L), (202L, 200L), (300L, 301L), (400L, 401L))
+    val pairs = edgeList.toDF("id_a", "id_b")
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edgeList.foreach { case (x, y) =>
+      val (rx, ry) = (find(x), find(y))
+      if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+    }
+    val brute = parent.keys.map(id => id -> find(id)).toMap
+    // every round's plan, as the cut of its generation executed it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // no broadcast at all: the round join must be a shuffled one, so only
+    // the edges' kept partitioning can spare their side the exchange
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val got = Dedup.connectedComponentsWithBounds(pairs, "id_a", "id_b",
+          maxIter = 25, labelBroadcastMax = 0L)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got == brute)
+      def round(qe: QueryExecution): Option[Int] =
+        qe.logical.collectFirst {
+          case c: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
+              if c.name.startsWith("cc_round_") => c.name.stripPrefix("cc_round_").toInt
+        }
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      def seen = plans.toArray(Array.empty[QueryExecution]).toSeq.flatMap(q => round(q).map(_ -> q))
+      while (seen.map(_._1).distinct.size < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+      val rounds = seen.toMap
+      assert(rounds.size >= 3, s"rounds: ${rounds.keys}")
+      // reaches the edge rows' scan through operators that keep rows where
+      // they are: Some(true) with no exchange, Some(false) through one
+      def edgeSide(p: SparkPlan, shuffled: Boolean): Option[Boolean] = p match {
+        case s: RDDScanExec if s.output.map(_.name) == Seq("src", "dst") => Some(!shuffled)
+        case _: BaseJoinExec => None
+        case e: Exchange => edgeSide(e.child, shuffled = true)
+        case other => other.children.iterator.map(edgeSide(_, shuffled)).collectFirst {
+          case Some(v) => v
+        }
+      }
+      for ((it, qe) <- rounds if it >= 1) {
+        val initial = qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+        val joinSides = initial.collect { case j: BaseJoinExec => j }
+          .flatMap(_.children.flatMap(edgeSide(_, shuffled = false)))
+        assert(joinSides == Seq(true), s"round $it:\n$initial")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      graft.ops.ScratchCache.releaseAll()
+    }
+  }
+
   test("blockLocalComponents == iterative connectedComponents on blocked graphs") {
     // random block-confined edges (ids namespaced per block so blocks are
     // disjoint) — the union-find path must agree with label propagation
