@@ -3,15 +3,15 @@ package graft.ops
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted MinHash band index — the corpus half of incremental near-dup
   * detection, saved once and probed per batch.
   *
-  * `Dedup.minhashDedupPairsIncremental` recomputes the CORPUS signatures
-  * on every batch: the right answer for a one-shot job, O(N) wasted work
-  * per batch for a growing corpus. This op factors the corpus pass out
-  * into two parquet tables under `path`:
+  * Re-running `Dedup.minhashDedupPairs` over corpus ∪ batch recomputes
+  * the CORPUS signatures and self-joins the whole corpus on every batch:
+  * the right answer for a one-shot job, O(N) wasted work per batch for a
+  * growing corpus. This op factors the corpus pass out into two parquet
+  * tables under `path`:
   *
   *   bands/   (doc_id, key)     — one row per (doc, band bucket); the
   *                                probe side of the candidate equi-join
@@ -21,10 +21,12 @@ import org.apache.spark.sql.functions._
   *                                instead of silently missing candidates
   *
   * Probe cost per batch of B docs: shingle+sign the BATCH only (O(B)),
-  * one equi-join against the stored bands, exact verification of the
-  * candidates — the corpus text is never re-read. `append` then folds the
-  * batch into the index (one O(B) write), keeping the index current for
-  * the next batch: the corpus-growth flow of a 100 TB ingest pipeline.
+  * one banded candidate join against the stored bands
+  * (`Dedup.bandCandidates`, hot-band guard included), exact verification
+  * of the candidates — the corpus text is never re-read. `append` then
+  * folds the batch into the index (one O(B) write), keeping the index
+  * current for the next batch: the corpus-growth flow of a 100 TB ingest
+  * pipeline.
   * Both tables stay DataFrames end to end; nothing corpus-sized crosses
   * the driver.
   */
@@ -62,31 +64,20 @@ object BandIndex {
       ref.rowsPerBand)
 
   /** Near-dup pairs between `batch` and the indexed corpus (plus within
-    * the batch itself) — output identical to
-    * `minhashDedupPairsIncremental` over corpus ∪ batch (spec-asserted),
-    * but the corpus side reads the saved index: no corpus re-shingling.
-    * Batch ids must be disjoint from corpus ids (the ingest contract). */
+    * the batch itself) — output identical to `Dedup.minhashDedupPairs`
+    * over corpus ∪ batch filtered to pairs touching the batch
+    * (spec-asserted), but the corpus side reads the saved index: no
+    * corpus re-shingling. Batch ids must be disjoint from corpus ids (the
+    * ingest contract). */
   def probe(spark: SparkSession, ref: Ref, batch: DataFrame, id: String,
             text: String, threshold: Double): DataFrame = {
     val batchSets = ScratchCache.register(
       Dedup.shingleSets(batch, id, text, ref.k).persist())
     val newBands = bandFrame(batchSets, ref)
-      .select(col("doc_id").as("nid"), col("key"))
-    val corpusBands = spark.read.parquet(ref.path + "/bands")
-      .select(col("doc_id").as("oid"), col("key"))
-    // candidate = batch×(corpus ∪ batch) band collisions; canonical (a<b)
-    // packing dedupes the batch-batch pairs both sides generate. The
-    // planner broadcasts the (small) batch band side.
-    val allBands = corpusBands.unionByName(
-      newBands.select(col("nid").as("oid"), col("key")))
-    val cands = allBands
-      .join(newBands.hint("SHUFFLE_HASH"), Seq("key"))
-      .filter(col("nid") =!= col("oid"))
-      .select(PackedPair.pack(least(col("nid"), col("oid")),
-        greatest(col("nid"), col("oid"))).as("pair"))
-      .distinct()
-      .select(PackedPair.idA(col("pair")).as("id_a"),
-        PackedPair.idB(col("pair")).as("id_b"))
+    // candidate = batch × (corpus ∪ batch) band collisions
+    val cands = Dedup.minhashCandidatePairs(
+      spark.read.parquet(ref.path + "/bands").unionByName(newBands),
+      Dedup.Probe.New(newBands))
     // verification universe: stored corpus sets ∪ the batch's fresh sets
     val sets = spark.read.parquet(ref.path + "/sets").unionByName(batchSets)
     Dedup.verifyJaccard(cands, sets, threshold)

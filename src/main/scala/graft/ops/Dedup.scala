@@ -192,30 +192,28 @@ object Dedup {
   /** Signature frame from a shingle-set frame (one fused ArrayPolyHash
     * pass over the set elements; MinHash's min-fold is order- and
     * multiplicity-insensitive, so the signature equals the
-    * wordShingleHashes form exactly), threading `carry` columns through. */
-  private[ops] def signatures(sets: DataFrame, nHashes: Int,
-                         carry: Seq[String] = Nil): DataFrame =
-    sets.select((col("doc_id") +: carry.map(col)) :+ minhashSignature(
+    * wordShingleHashes form exactly). */
+  private[ops] def signatures(sets: DataFrame, nHashes: Int): DataFrame =
+    sets.select(col("doc_id"), minhashSignature(
         graft.functions.ShingleExpressions.arrayPolyHash(col("shingles")),
-        nHashes).as("sig"): _*)
+        nHashes).as("sig"))
       .filter(size(col("sig")) > 0)
 
   /** Banded keys from a signature frame. Band bucket = ONE long: xxhash64
     * over (band index, the band's rows) — same (band, rows) always hashes
     * equal, so recall is untouched; a 64-bit collision can only ADD a
     * candidate, and every candidate is exact-verified downstream. */
-  private[ops] def bandKeys(sig: DataFrame, nHashes: Int, rowsPerBand: Int,
-                       carry: Seq[String] = Nil): DataFrame = {
+  private[ops] def bandKeys(sig: DataFrame, nHashes: Int, rowsPerBand: Int): DataFrame = {
     val nBands = nHashes / rowsPerBand
-    sig.select((col("doc_id") +: carry.map(col)) :+
+    sig.select(col("doc_id"),
       explode(array((0 until nBands).map(b =>
         xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*))
-        .as("key"): _*)
+        .as("key"))
   }
 
   /** Exact verification: candidate id pairs rejoin their shingle sets and
-    * keep true Jaccard ≥ threshold — shared by the full and incremental
-    * forms so the verification semantics cannot drift. */
+    * keep true Jaccard ≥ threshold — shared by the full form and the
+    * band-index probe so the verification semantics cannot drift. */
   private[ops] def verifyJaccard(cands: DataFrame, sets: DataFrame,
                             threshold: Double): DataFrame = {
     // SHUFFLE_HASH measured, kept (r16 A/B at sf1, 32 cores, min-of-two
@@ -235,73 +233,112 @@ object Dedup {
       .select(col("id_a"), col("id_b"), roundp(jac, 6).as("jac"))
   }
 
-  /** Hot-band guard for the LSH band self-joins (guide §2.5 skew). The
-    * band caches are pinned HashPartitioning(key) so the self-joins plan
-    * with ZERO exchanges — which also removes the exchanges AQE's skew
-    * split would need: one viral band bucket (near-identical boilerplate
-    * cluster) of g rows lands g²/2 candidate generation in a SINGLE task
-    * with no rescue. Buckets above this cap run through a salted join
-    * instead (the maxDf-discipline analogue for buckets that cannot be
-    * DROPPED: a df-cap may shrink the comparison universe, but dropping
-    * an LSH candidate would break the pairs-above-threshold contract, so
-    * the guard reshapes the layout and keeps the row multiset identical).
-    * Conf-overridable; 8192² /2 ≈ 33M candidate rows is a seconds-scale
-    * task, far above any bench-SF bucket (≤ |docs| = 5000 at sf0.1), so
-    * the cold path — the exact pre-guard plan — is what every bench and
-    * oracle run executes. */
-  val HotBandCapKey = "graft.lsh.hotBandCap"
+  /** Hot-band guard of [[bandCandidates]] (guide §2.5 skew): the largest
+    * band bucket joined in one plain task. The self-joined band caches are
+    * pinned HashPartitioning(key) so the self-joins plan with ZERO
+    * exchanges — which also removes the exchanges AQE's skew split would
+    * need: one viral band bucket (near-identical boilerplate cluster) of g
+    * rows lands g²/2 candidate generation in a SINGLE task with no rescue.
+    * Buckets above this cap run through a salted join instead (the
+    * maxDf-discipline analogue for buckets that cannot be DROPPED: a df-cap
+    * may shrink the comparison universe, but dropping an LSH candidate
+    * would break the pairs-above-threshold contract, so the guard reshapes
+    * the layout and keeps the row multiset identical). 8192² /2 ≈ 33M
+    * candidate rows is a seconds-scale task, far above any bench-SF bucket
+    * (≤ |docs| = 5000 at sf0.1), so the cold path — the exact pre-guard
+    * plan — is what every bench and oracle run executes. */
   val DefaultHotBandCap = 8192L
 
-  /** Skew-guarded candidate SELF-join over a cached band frame: pairs of
-    * rows sharing `keys` with a.doc_id < b.doc_id, `sel` projecting from
-    * the joined (a, b) aliases. `bands` must already be persisted and
-    * hash-partitioned on `keys` (FanOut.byKey). The cache fill runs HERE
-    * as a per-key count aggregation — ONE action like the plain `.count()`
-    * fill it replaces (the aggregation reuses the cached partitioning, so
-    * no new exchange), and its max bucket size picks the regime:
-    *  - every bucket ≤ hotCap: EXACTLY the plain self-join — same plan,
-    *    same jobs, zero overhead;
+  private val hotBandCap = new scala.util.DynamicVariable(DefaultHotBandCap)
+
+  /** Test seam: run `body` with the hot-band cap replaced, so a spec can
+    * force the salted regime on fixtures small enough to assert on.
+    * Production callers never set it. */
+  private[graft] def withHotBandCap[T](cap: Long)(body: => T): T =
+    hotBandCap.withValue(cap)(body)
+
+  /** Probe side of [[bandCandidates]]. */
+  private[ops] sealed trait Probe
+  private[ops] object Probe {
+    /** Every pair of band rows sharing a bucket, once (a.doc_id < b.doc_id):
+      * the corpus self-join. */
+    case object All extends Probe
+    /** Pairs with at least one side in `batch` — band rows of the same
+      * schema, also present in the joined frame (corpus ∪ batch): b runs
+      * over the batch, a over everything, a.doc_id ≠ b.doc_id. For a
+      * batch of B docs against a corpus of N, candidate work is O(B·N·p)
+      * band collisions instead of the self-join's O(N²·p). */
+    final case class New(batch: DataFrame) extends Probe
+  }
+
+  /** THE banded candidate join: rows of `bands` and of the probe side
+    * sharing `keys`, `sel` projecting from the joined (a, b) aliases; its
+    * second argument is the pair packed canonically (smaller id first),
+    * so batch-batch pairs met from both sides pack equal and a distinct
+    * dedupes them. One action picks the regime: the per-key count of
+    * `bands` (for [[Probe.New]], semi-joined to the batch's keys) and its
+    * max bucket.
+    *  - every bucket ≤ the cap: EXACTLY the plain join — same plan, no
+    *    further job. For [[Probe.All]] `bands` must already be persisted
+    *    and hash-partitioned on `keys` (FanOut.byKey): the count IS the
+    *    cache fill (the aggregation reuses the cached partitioning, so no
+    *    new exchange), one action like the plain `.count()` fill it
+    *    replaces, and the filled cache reports HashPartitioning(keys, N),
+    *    which the self-join reuses on both sides (an unfilled one plans as
+    *    UnknownPartitioning and re-inserts both exchanges);
     *  - else: over-cap keys split out (broadcast semi/anti — the cold
-    *    sliver keeps the cached partitioning and the plain join); hot
-    *    rows join salted — side a carries salt = xxhash64(doc_id) mod s,
-    *    side b replicates s×, both explicitly repartitioned on
-    *    (keys, salt) so a hot bucket spreads over s tasks. Each qualifying
-    *    pair meets exactly once (on a's salt), so the output multiset is
-    *    identical to the plain join — DedupSpec pins this. */
-  private def bandSelfJoinSkewGuarded(bands: DataFrame, keys: Seq[String])
-                                     (sel: DataFrame => DataFrame): DataFrame = {
-    val spark = bands.sparkSession
-    val hotCap = spark.conf.getOption(HotBandCapKey).map(_.toLong)
-      .getOrElse(DefaultHotBandCap)
-    val eq = (keys.map(k => col(s"a.$k") === col(s"b.$k")) :+
-      (col("a.doc_id") < col("b.doc_id"))).reduce(_ && _)
-    val counts = bands.groupBy(keys.map(col): _*).count()
-    val maxRow = counts.agg(max(col("count"))).head() // fill + max, one action
+    *    sliver runs the plain join); hot rows join salted — side a carries
+    *    salt = xxhash64(doc_id) mod s, side b replicates s×, both
+    *    explicitly repartitioned on (keys, salt) so a hot bucket spreads
+    *    over s tasks, each building its hash table from side a's ~g/s ≈
+    *    cap rows. Each qualifying pair meets exactly once (on a's salt), so
+    *    the output multiset is identical to the plain join — DedupSpec
+    *    pins this and the build side. */
+  private[ops] def bandCandidates(bands: DataFrame, keys: Seq[String], probe: Probe)
+                                 (sel: (DataFrame, Column) => DataFrame): DataFrame = {
+    val hotCap = hotBandCap.value
+    val (ia, ib) = (col("a.doc_id"), col("b.doc_id"))
+    val (side, keep, pair) = probe match {
+      case Probe.All => (bands, ia < ib, PackedPair.pack(ia, ib))
+      case Probe.New(batch) =>
+        (batch, ia =!= ib, PackedPair.pack(least(ia, ib), greatest(ia, ib)))
+    }
+    val eq = (keys.map(k => col(s"a.$k") === col(s"b.$k")) :+ keep).reduce(_ && _)
+    val counts = (probe match {
+      case Probe.All => bands
+      case Probe.New(batch) =>
+        bands.join(batch.select(keys.map(col): _*), keys, "left_semi")
+    }).groupBy(keys.map(col): _*).count()
+    val maxRow = counts.agg(max(col("count"))).head() // one action
     val maxBucket = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     if (maxBucket <= hotCap)
-      return sel(bands.as("a").join(bands.as("b").hint("SHUFFLE_HASH"), eq))
+      return sel(bands.as("a").join(side.as("b").hint("SHUFFLE_HASH"), eq), pair)
     val hotKeys = broadcast(
       counts.filter(col("count") > hotCap).select(keys.map(col): _*))
-    val cold = bands.join(hotKeys, keys, "left_anti")
-    val hot = bands.join(hotKeys, keys, "left_semi")
+    def cold(df: DataFrame) = df.join(hotKeys, keys, "left_anti")
     // linear salt count: bounds the per-task BUILD side at ~hotCap rows;
     // per-task probe work is g·hotCap — a bucket so hot that even that
     // staggers is emitting O(g²) candidates and is mis-parameterized
     // upstream (raise rowsPerBand / tighten the collapse), not a layout
     // problem this guard can absorb
     val salts = math.min(64L, (maxBucket + hotCap - 1L) / hotCap).toInt
-    val aS = FanOut.byKey(
-      hot.withColumn("_salt",
-        pmod(xxhash64(col("doc_id")), lit(salts.toLong))),
+    def salted(df: DataFrame, salt: Column) = FanOut.byKey(
+      df.join(hotKeys, keys, "left_semi").withColumn("_salt", salt),
       (keys :+ "_salt").map(col): _*)
-    val bS = FanOut.byKey(
-      hot.withColumn("_salt",
-        explode(array((0 until salts).map(i => lit(i.toLong)): _*))),
-      (keys :+ "_salt").map(col): _*)
-    sel(cold.as("a").join(cold.as("b").hint("SHUFFLE_HASH"), eq))
-      .unionByName(sel(aS.as("a").join(bS.as("b").hint("SHUFFLE_HASH"),
-        eq && col("a._salt") === col("b._salt"))))
+    val aS = salted(bands, pmod(xxhash64(col("doc_id")), lit(salts.toLong)))
+    val bS = salted(side, explode(array((0 until salts).map(i => lit(i.toLong)): _*)))
+    sel(cold(bands).as("a").join(cold(side).as("b").hint("SHUFFLE_HASH"), eq), pair)
+      .unionByName(sel(aS.as("a").hint("SHUFFLE_HASH").join(bS.as("b"),
+        eq && col("a._salt") === col("b._salt")), pair))
   }
+
+  /** MinHash candidate id pairs over a (doc_id, key) band frame: one row
+    * per canonical (id_a < id_b) pair, whatever the probe side. */
+  private[ops] def minhashCandidatePairs(bands: DataFrame, probe: Probe): DataFrame =
+    bandCandidates(bands, Seq("key"), probe)((j, pair) => j.select(pair.as("pair")))
+      .distinct() // one long per pair for the dedupe shuffle
+      .select(PackedPair.idA(col("pair")).as("id_a"),
+        PackedPair.idB(col("pair")).as("id_b"))
 
   /** Candidates from an ALREADY-SHINGLED (doc_id, shingles) table — lets a
     * caller that also needs the string sets (exact verification) pay the
@@ -315,23 +352,13 @@ object Dedup {
     // both sides (plan-verified 2 Exchange → 0 at the join; the single
     // fill exchange moves (doc_id, key) longs once). Lives until the
     // caller materializes the result (ScratchCache.releaseAll between
-    // session jobs).
+    // session jobs). The candidate join runs the eager fill, which also
+    // materializes the upstream sets cache, whose own doc_id partitioning
+    // the verify joins reuse the same way.
     val bands = ScratchCache.register(
       bandKeys(signatures(sets, nHashes), nHashes, rowsPerBand)
         .transform(FanOut.byKey(_, col("key"))).persist())
-    // the skew-guarded join runs the eager fill (the inv.count()
-    // discipline): an unfilled cache plans as UnknownPartitioning (its
-    // AdaptiveSparkPlan has no final plan yet), which re-inserts both
-    // self-join exchanges; a filled one reports HashPartitioning(key, N)
-    // and the join reuses it on both sides. The fill also materializes
-    // the upstream sets cache, whose own doc_id partitioning the verify
-    // joins reuse the same way. SHUFFLE_HASH inside: long-key self-join,
-    // no point sorting.
-    bandSelfJoinSkewGuarded(bands, Seq("key"))(
-      _.select(PackedPair.pack(col("a.doc_id"), col("b.doc_id")).as("pair")))
-      .distinct() // one long per pair for the dedupe shuffle
-      .select(PackedPair.idA(col("pair")).as("id_a"),
-        PackedPair.idB(col("pair")).as("id_b"))
+    minhashCandidatePairs(bands, Probe.All)
   }
 
   /** MinHash FIDELITY audit: for every near-dup pair at `threshold` (LSH
@@ -395,10 +422,10 @@ object Dedup {
           xxhash64(lit(b), slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))): _*))
           .as(Seq("b", "key")))
       .transform(FanOut.byKey(_, col("key"))).persist())
-    // skew-guarded join runs the fill (expose HashPartitioning; hot-band
-    // salting at scale — see bandSelfJoinSkewGuarded)
-    val cand = bandSelfJoinSkewGuarded(bands, Seq("key"))(
-      _.select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
+    // the candidate join runs the fill (expose HashPartitioning; hot-band
+    // salting at scale — see bandCandidates)
+    val cand = bandCandidates(bands, Seq("key"), Probe.All)((j, _) =>
+      j.select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         col("a.b").as("ab")))
       .groupBy(col("id_a"), col("id_b"))
       .agg(min(col("ab")).as("min_band"))
@@ -450,46 +477,6 @@ object Dedup {
     DupGroups.expand(g, repPairs, textIntra(g,
       sets.filter(size(col("shingles")) > 0).select(col("doc_id").as("_gid")),
       "jac", threshold))
-  }
-
-  /** INCREMENTAL MinHash dedup: near-dup pairs where at least one side
-    * belongs to the NEW batch (`isNew`) — the corpus-growth flow: old-old
-    * pairs were already found when the old docs arrived, so a batch
-    * ingest only needs new-new and new-old pairs.
-    *
-    * Scale shape vs the full form: the candidate join is new-bands ×
-    * all-bands instead of the corpus band SELF-join — for a batch of B
-    * docs against a corpus of N, candidate work drops from O(N²·p) to
-    * O(B·N·p) band-collision pairs, and the planner can broadcast the
-    * (small) new side outright. Output equals `minhashDedupPairs`
-    * filtered to pairs touching the batch (spec-asserted). */
-  def minhashDedupPairsIncremental(df: DataFrame, id: String, text: String,
-                                   k: Int, threshold: Double, isNew: Column,
-                                   nHashes: Int = 64, rowsPerBand: Int = 2): DataFrame = {
-    val sets = ScratchCache.register(
-      df.select(col(id).as("doc_id"), isNew.as("__new"),
-          graft.functions.ShingleExpressions.wordShingles(col(text), k).as("shingles"))
-        .filter(col("shingles").isNotNull)
-        .transform(FanOut.byKey(_, col("doc_id")))
-        .persist())
-    // both candidate-join sides read the band frame: persist so the
-    // signature pipeline runs once (same guarantee as the full form)
-    val sig = ScratchCache.register(
-      signatures(sets, nHashes, carry = Seq("__new")).persist())
-    val bands = bandKeys(sig, nHashes, rowsPerBand, carry = Seq("__new"))
-    // every candidate has a new side by construction; canonical (a<b)
-    // packing dedupes the new-new pairs that both sides generate
-    val newSide = bands.filter(col("__new"))
-      .select(col("doc_id").as("nid"), col("key"))
-    val cands = bands.select(col("doc_id").as("oid"), col("key"))
-      .join(newSide.hint("SHUFFLE_HASH"), Seq("key"))
-      .filter(col("nid") =!= col("oid"))
-      .select(PackedPair.pack(least(col("nid"), col("oid")),
-        greatest(col("nid"), col("oid"))).as("pair"))
-      .distinct()
-      .select(PackedPair.idA(col("pair")).as("id_a"),
-        PackedPair.idB(col("pair")).as("id_b"))
-    verifyJaccard(cands, sets, threshold)
   }
 
   /** Per-doc distinct shingle hashes — fused native expression (tokenize →
@@ -636,8 +623,6 @@ object Dedup {
       it += 1
     }
     ScratchCache.free(edges) // the last generation no longer reads them
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"connectedComponents: $it rounds")
     // (an empty graph needs no special case: the seed aggregation is
     // empty, the first loop pass observes 0 changes and exits converged)
     // a silent partial propagation would hand dedup several "canonical"
@@ -754,14 +739,13 @@ object Dedup {
       .select(col("doc_id"), col("simhash"),
         col("bk.band").as("band"), col("bk.key").as("key"))
       .transform(FanOut.byKey(_, col("band"), col("key"))).persist())
-    // skew-guarded join runs the fill (expose HashPartitioning; hot-band
-    // salting at scale — see bandSelfJoinSkewGuarded). hamming is per-pair
+    // the candidate join runs the fill (expose HashPartitioning; hot-band
+    // salting at scale — see bandCandidates). hamming is per-pair
     // constant, so verify BEFORE the dedupe: only surviving near-dups
     // enter the distinct, and the shuffle carries one packed long + the
     // distance instead of two ids + two fingerprints
-    bandSelfJoinSkewGuarded(bands, Seq("band", "key"))(
-      _.select(
-        PackedPair.pack(col("a.doc_id"), col("b.doc_id")).as("pair"),
+    bandCandidates(bands, Seq("band", "key"), Probe.All)((j, pair) =>
+      j.select(pair.as("pair"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
           .cast("bigint").as("hamming"))
         .filter(col("hamming") <= maxHamming))

@@ -510,16 +510,16 @@ object DedupQueries {
 
   /** q52: incremental dedup — the `src0` documents stand in for a newly
     * ingested batch; emit near-dup pairs (J ≥ 0.8) touching the batch
-    * only. The candidate join is new-bands × all-bands (O(B·N), broadcast-
-    * able new side) instead of the corpus self-join — the batch-ingest
-    * flow of a growing corpus. Oracle = the brute pairs restricted to
+    * only. The candidate join is new-bands × all-bands (O(B·N), with the
+    * hot-band guard of the corpus self-join) instead of the corpus
+    * self-join — the batch-ingest flow of a growing corpus. Oracle = the brute pairs restricted to
     * batch membership. */
   def q52IncrementalDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // the PERSISTED-index flow: corpus shingled+banded once into a saved
     // parquet band index, batch probes it (no corpus re-read). Output is
-    // identical to minhashDedupPairsIncremental over corpus ∪ batch
-    // (spec-asserted both ways in DedupSpec).
+    // identical to minhashDedupPairs over corpus ∪ batch filtered to pairs
+    // touching the batch (spec-asserted in DedupSpec).
     val docs = documents(s, d)
     val dir = java.nio.file.Files.createTempDirectory("graft-band-index").toString
     val ref = graft.ops.BandIndex.build(

@@ -1,6 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.ops.{Dedup, DupGroups, Similarity}
@@ -106,6 +110,16 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
         (900001L, "tiny one"), (900002L, "tiny one"), // identical, < k tokens
         (900003L, "tiny two"), (900004L, "tiny other") // distinct shorts
       ).toDF("doc_id", "text"))
+  }
+
+  /** Near-duplicate (not identical) fixture: every text 3× under shifted
+    * ids, each copy with its own one-word tail, so the duplicate collapse
+    * keeps all three and their MinHash band buckets hold ≥ 3 rows. */
+  private def nearDupDocs = {
+    val base = docs.select($"doc_id", $"text").limit(30)
+    (0 to 2).map(i => base.select(($"doc_id" + lit(i * 100000L)).as("doc_id"),
+        concat($"text", lit(s" tail$i")).as("text")))
+      .reduce(_.unionByName(_))
   }
 
   test("jaccard pairs on replicated docs equal the all-pairs brute form") {
@@ -396,22 +410,33 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     assert(r.getSeq[Long](0) == Seq(expect(0), 0L, expect(1)))
   }
 
+  /** `minhashDedupPairs` over `docs` at J ≥ 0.6, as (id_a, id_b, jac). */
+  private def fullPairs(docs: DataFrame): Set[(Long, Long, Double)] =
+    Dedup.minhashDedupPairs(docs, "doc_id", "text", 3, 0.6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The pairs with a side in `batch`: what a band-index probe of `batch`
+    * must reproduce. */
+  private def touching(pairs: Set[(Long, Long, Double)], batch: DataFrame) = {
+    val ids = batch.select($"doc_id").as[Long].collect().toSet
+    pairs.filter { case (a, b, _) => ids.contains(a) || ids.contains(b) }
+  }
+
   test("incremental minhash pairs == full pairs filtered to the batch") {
-    val full = Dedup.minhashDedupPairs(docs, "doc_id", "text", 3, 0.6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batchIds = docs.filter($"source" === "src0")
-      .select($"doc_id").as[Long].collect().toSet
-    val expected = full.filter { case (a, b) =>
-      batchIds.contains(a) || batchIds.contains(b) }
-    val got = Dedup.minhashDedupPairsIncremental(docs, "doc_id", "text",
-        3, 0.6, isNew = $"source" === "src0")
+    val full = fullPairs(docs)
+    val corpus = docs.filter($"source" =!= "src0")
+    val batch = docs.filter($"source" === "src0")
+    val expected = touching(full, batch).map(p => (p._1, p._2))
+    val dir = java.nio.file.Files.createTempDirectory("graft-bandinc").toString
+    val ref = graft.ops.BandIndex.build(corpus, "doc_id", "text", dir)
+    val got = graft.ops.BandIndex.probe(spark, ref, batch, "doc_id", "text", 0.6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == expected)
     assert(got.size < full.size, "batch restriction must actually restrict")
     graft.ops.ScratchCache.releaseAll()
   }
 
-  test("persisted band index: probe == in-memory incremental; append grows it") {
+  test("persisted band index: probe == full pairs filtered to the batch; append grows it") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bandidx").toString
     val corpus = docs.filter($"source" =!= "src0")
     val batch = docs.filter($"source" === "src0")
@@ -422,9 +447,7 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
     // file scans touch only the index directory and the batch's source
     val scans = probe.queryExecution.executedPlan.toString
     assert(scans.contains(dir), scans.take(2000))
-    val expected = Dedup.minhashDedupPairsIncremental(docs, "doc_id", "text",
-        3, 0.6, isNew = $"source" === "src0")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val expected = touching(fullPairs(docs), batch)
     val got = probe.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == expected)
@@ -582,28 +605,52 @@ class DedupSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("hot-band skew guard: salted self-join output == plain join (forced low cap)") {
-    // cap 2 marks most fixture band buckets hot, forcing the salted path
+    // cap 2 marks the fixtures' band buckets hot, forcing the salted path
     // (side-a salt + side-b replication + explicit (key, salt)
     // repartition) — the pair sets must be EXACTLY the default-cap plan's
-    // (which this fixture runs entirely cold), for minhash and simhash
-    val plainMh = Dedup.minhashDedupPairs(dupDocs, "doc_id", "text", 3, 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val plainSh = Dedup.simhashPairs(dupDocs, "doc_id", "text", 3, 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    graft.ops.ScratchCache.releaseAll()
-    spark.conf.set(Dedup.HotBandCapKey, "2")
-    try {
-      val saltedMh = Dedup.minhashDedupPairs(dupDocs, "doc_id", "text", 3, 0.8)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val saltedSh = Dedup.simhashPairs(dupDocs, "doc_id", "text", 3, 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(saltedMh == plainMh, "salted minhash pairs diverge from plain join")
-      assert(saltedSh == plainSh, "salted simhash pairs diverge from plain join")
-      assert(plainMh.nonEmpty && plainSh.nonEmpty, "fixture produced no pairs")
-    } finally {
-      spark.conf.unset(Dedup.HotBandCapKey)
-      graft.ops.ScratchCache.releaseAll()
+    // (which these fixtures run entirely cold), for minhash, simhash and
+    // the band-index probe (a batch of one replica against the others).
+    // Each salted task must build its hash table from side a: side b is
+    // replicated once per salt, so a table built from it would hold the
+    // whole hot bucket in every (key, salt) task. dupDocs' minhash buckets
+    // hold ≤ 2 representatives once exact duplicates collapse, so that
+    // run stays cold; the near-dup variants carry the salted self-join.
+    val dir = java.nio.file.Files.createTempDirectory("graft-bandhot").toString
+    val inBatch = $"doc_id".between(100000L, 199999L)
+    val ref = graft.ops.BandIndex.build(dupDocs.filter(!inBatch),
+      "doc_id", "text", dir)
+    def frames() = Seq(
+      ("minhash", false, Dedup.minhashDedupPairs(dupDocs, "doc_id", "text", 3, 0.8)),
+      ("near-dup minhash", true,
+        Dedup.minhashDedupPairs(nearDupDocs, "doc_id", "text", 3, 0.8)),
+      ("simhash", true, Dedup.simhashPairs(dupDocs, "doc_id", "text", 3, 3)),
+      ("probe", true, graft.ops.BandIndex.probe(spark, ref,
+        dupDocs.filter(inBatch), "doc_id", "text", 0.8)))
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSet
+    def replicates(p: SparkPlan) = p.exists {
+      case g: GenerateExec => g.generatorOutput.exists(_.name == "_salt")
+      case _ => false
     }
+    val plain = frames().map(f => rows(f._3))
+    graft.ops.ScratchCache.releaseAll()
+    try Dedup.withHotBandCap(2) {
+      for (((name, hot, df), want) <- frames().zip(plain)) {
+        assert(want.nonEmpty, s"$name: fixture produced no pairs")
+        assert(rows(df) == want, s"salted $name pairs diverge from plain join")
+        val salted = df.queryExecution.sparkPlan.collect {
+          case j: ShuffledHashJoinExec
+              if j.leftKeys.exists(_.references.exists(_.name == "_salt")) => j
+        }
+        if (hot) assert(salted.nonEmpty, s"$name: no salted join under cap 2")
+        for (j <- salted) {
+          val (build, stream) =
+            if (j.buildSide == BuildLeft) (j.left, j.right) else (j.right, j.left)
+          assert(!replicates(build) && replicates(stream),
+            s"$name: salted join builds from the replicated side\n$j")
+        }
+      }
+    } finally graft.ops.ScratchCache.releaseAll()
   }
 
   test("connectedComponents scale regime: dst-partitioned edges + pointer jump " +
