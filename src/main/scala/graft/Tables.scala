@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (see TESTDATA.md).
   *
@@ -11,8 +12,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    normalizeNtz(df)
+    val path = s"$dir/$name.parquet"
+    normalizeNtz(spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** Inferred table schemas per session, keyed by the path, the file's
+    * length and modification time (a rewritten table is inferred again)
+    * and the session's parquet read confs, which decide the inferred
+    * types: a query reads each table with a known schema, so its plan
+    * starts with no schema-inference job. */
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    scala.collection.mutable.Map[Seq[Any], StructType]]()
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    // a missing table fails as an uncached read does
+    val st = try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException => return spark.read.parquet(path).schema }
+    val readConfs = spark.conf.getAll.toSeq.sorted.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = Seq(path, st.getLen, st.getModificationTime, readConfs)
+    def known = schemas.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
+    schemas.synchronized(known.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.synchronized(known(key) = inferred)
+      inferred
+    }
   }
 
   /** The driver's generator has written timestamps both as TIMESTAMP(NANOS)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.graftbridge.Checkpoint
@@ -27,6 +28,10 @@ import org.apache.spark.sql.graftbridge.Checkpoint
   * session's. Frames whose last consumer is INSIDE the operator are not
   * left registered — they are unpersisted (a persist) or [[free]]d (a cut)
   * at the internal materialization point instead.
+  *
+  * Queries whose result reads scratch files lazily take their directory
+  * from [[tempDir]]; it is deleted with the session's frames, once the
+  * caller has collected the result.
   */
 object ScratchCache {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
@@ -34,6 +39,10 @@ object ScratchCache {
   /** A cut: its session, the frame [[cut]] returned, the blocks it reads. */
   private final case class Cut(spark: SparkSession, frame: DataFrame, rdd: RDD[_])
   private val cuts = scala.collection.mutable.ArrayBuffer.empty[Cut]
+
+  /** A scratch directory and the session it belongs to. */
+  private final case class TempDir(spark: SparkSession, dir: java.io.File)
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[TempDir]
 
   /** Register an operator-internal persisted frame for later release by
     * its session. */
@@ -65,24 +74,38 @@ object ScratchCache {
     cuts.filterInPlace(_.frame.queryExecution.logical ne plan)
   }
 
+  /** A new directory under `java.io.tmpdir`, named `prefix` + a unique
+    * suffix, registered under `spark`: [[release]] and [[releaseAll]]
+    * delete it. */
+  private[graft] def tempDir(spark: SparkSession, prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    synchronized(dirs += TempDir(spark, dir))
+    dir.toString
+  }
+
   /** Unpersist (blocking=false) and forget the frames and cuts registered
-    * from `spark`. Safe to call between jobs; a released persisted frame
-    * that is re-read simply recomputes (a released cut cannot be re-read:
-    * its rows are gone with its blocks). */
+    * from `spark`, and delete its [[tempDir]]s. Safe to call between
+    * jobs; a released persisted frame that is re-read simply recomputes
+    * (a released cut cannot be re-read: its rows are gone with its
+    * blocks). */
   def release(spark: SparkSession): Unit = synchronized {
     frames.filter(_.sparkSession eq spark).foreach(_.unpersist())
     frames.filterInPlace(_.sparkSession ne spark)
     cuts.filter(_.spark eq spark).foreach(c => Checkpoint.free(c.rdd))
     cuts.filterInPlace(_.spark ne spark)
+    dirs.filter(_.spark eq spark).foreach(d => FileUtils.deleteQuietly(d.dir))
+    dirs.filterInPlace(_.spark ne spark)
   }
 
-  /** Unpersist every registered frame and cut of every session and forget
-    * them. */
+  /** Unpersist every registered frame and cut of every session, delete
+    * every [[tempDir]], and forget them. */
   def releaseAll(): Unit = synchronized {
     frames.foreach(_.unpersist())
     frames.clear()
     cuts.foreach(c => Checkpoint.free(c.rdd))
     cuts.clear()
+    dirs.foreach(d => FileUtils.deleteQuietly(d.dir))
+    dirs.clear()
   }
 
   /** Number of currently-registered frames and cuts (monitoring/tests). */

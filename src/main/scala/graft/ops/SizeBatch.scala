@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.LongType
 
 /** Size-based batching (O7 — reference `flyte/scenes.py:60-70` packs work
   * into byte-budget batches) as a two-pass distributed prefix sum.
@@ -11,22 +15,23 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * to a single partition"), a scale-killer at 100 TB. This operator
   * produces bit-identical batch ids with no single-partition stage:
   *
-  *   1. Range-partition rows by the ordering key (one shuffle, the same
-  *      exchange the global sort would need anyway) and sort within each
-  *      partition.
-  *   2. Pass 1: per-partition byte subtotals — a P-row result (P = the
-  *      partition count), collected to the driver. O(P) metadata, never
-  *      row data.
+  *   1. Range-partition the rows themselves by the ordering key (one
+  *      shuffle, the same exchange the global sort would need anyway) and
+  *      sort within each partition.
+  *   2. Pass 1: per-partition row count, byte subtotal and last row's
+  *      bytes — a P-row result (P = the partition count), collected to the
+  *      driver. O(P) metadata, never row data.
   *   3. Driver: exclusive cumulative sum of the ordered subtotals gives
-  *      each partition its starting byte offset; broadcast the P longs.
+  *      each partition its starting byte offset; the last non-empty
+  *      partition's tail gives the batch count.
   *   4. Pass 2: re-walk each partition in key order with a partition-local
-  *      running total seeded at the broadcast offset;
-  *      `batch_id = bytes_before / budget`.
+  *      running total seeded at its offset and append
+  *      `batch_id = bytes_before / budget` to each row.
   *
-  * Parallelism is P throughout; the per-row work is a pipelined
-  * mapPartitions over the persisted range exchange (pass 1 reads the same
-  * cached partitions pass 2 does, so rows are scanned twice but shuffled
-  * once).
+  * Parallelism is P throughout. Both passes read the one range exchange's
+  * shuffle output (pass 2 re-reads it; nothing is persisted), so rows are
+  * scanned twice but shuffled once, and they carry every input column, so
+  * no join puts the batch id back on them.
   */
 object SizeBatch {
 
@@ -41,57 +46,66 @@ object SizeBatch {
     *         batch_id = floor(preceding-bytes / budget), identical to the
     *         single-reducer `Window.orderBy(key)` formulation
     */
-  def assign(rows: Dataset[(Long, Long)], budget: Long, parts: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
+  def assign(rows: Dataset[(Long, Long)], budget: Long, parts: Int): DataFrame =
+    // a Dataset[(Long, Long)] keeps its source column names: rename
+    // positionally
+    inPlace(rows.toDF("key", "n_bytes"), col("key"), col("n_bytes"), budget,
+      parts, "batch_id")._1
+
+  /** [[assign]] on the rows themselves: `rows` range-partitioned on `key`
+    * (distinct, ascending) into `parts` partitions, sorted within each,
+    * with `batchCol` (BIGINT) appended — the batch ids [[assign]] gives
+    * the (key, weight) pairs — and the number of batches. `weight` is
+    * evaluated once per row ahead of the exchange (a check in it, such
+    * as `raise_error`, runs there). The range exchange and pass 1 run
+    * now; pass 2 runs with the returned frame. */
+  def inPlace(rows: DataFrame, key: Column, weight: Column, budget: Long,
+              parts: Int, batchCol: String): (DataFrame, Long) = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val n = math.max(parts, 1)
+    val w = "_sizebatch_w"
+    val ranged = rows.withColumn(w, weight.cast(LongType))
+      .repartitionByRange(math.max(parts, 1), key)
+      .sortWithinPartitions(key)
+    val wi = ranged.schema.fieldIndex(w)
+    // one RDD for both passes: pass 2 finds the range shuffle's map output
+    // that running this plan (and pass 1) produced
+    val walk = ranged.queryExecution.toRdd
 
-    // normalize names: a Dataset[(Long, Long)] keeps its source column
-    // names, so address positionally
-    val ranged = ScratchCache.register(rows
-      .toDF("key", "n_bytes")
-      .as[(Long, Long)]
-      .repartitionByRange(n, $"key")
-      .sortWithinPartitions($"key")
-      .persist())
-
-    // Pass 1: one (partitionId, subtotal) row per partition. Range
-    // partition i holds strictly smaller keys than partition i+1, so the
-    // id order IS the key order.
-    val subtotals: Map[Int, Long] = ranged
-      .mapPartitions { it =>
-        var total = 0L
-        it.foreach(total += _._2)
-        Iterator.single((TaskContext.getPartitionId(), total))
-      }
-      .collect()
-      .toMap
-
-    // Driver-side exclusive prefix sum over <= n longs.
-    val offsets = new Array[Long](n)
-    var acc = 0L
-    var p = 0
-    while (p < n) {
-      offsets(p) = acc
-      acc += subtotals.getOrElse(p, 0L)
-      p += 1
-    }
-    val bcOffsets = spark.sparkContext.broadcast(offsets)
-    val b = budget
-
-    // Pass 2: partition-local running sum seeded at the global offset —
+    // Pass 1: (rows, weight sum, last row's weight) per partition —
     // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): must be
-    // THIS RDD's index, which a downstream UnionRDD pipelining this
-    // stage would shift (see GlobalIndex)
-    spark.createDataset(ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var cum = bcOffsets.value(pid)
-        it.map { case (key, bytes) =>
-          val batch = cum / b
-          cum += bytes
-          (key, bytes, batch)
-        }
-      })
-      .toDF("key", "n_bytes", "batch_id")
+    // THIS RDD's index, which a downstream UnionRDD pipelining this stage
+    // would shift (see GlobalIndex). Range partition i holds strictly
+    // smaller keys than partition i+1, so the index order IS key order.
+    val stats = walk.mapPartitionsWithIndex { (pid, it) =>
+      var n = 0L
+      var total = 0L
+      var last = 0L
+      it.foreach { r => last = r.getLong(wi); total += last; n += 1 }
+      Iterator.single((pid, n, total, last))
+    }.collect().sortBy(_._1)
+
+    // Driver: exclusive prefix sum over <= parts longs; the last row of the
+    // last non-empty partition starts the last batch
+    val offsets = stats.scanLeft(0L)(_ + _._3)
+    val batches = stats.lastIndexWhere(_._2 > 0) match {
+      case -1 => 0L
+      case p => (offsets(p) + stats(p)._3 - stats(p)._4) / budget + 1L
+    }
+
+    // Pass 2: partition-local running sum seeded at the global offset
+    val b = budget
+    val assigned = walk.mapPartitionsWithIndex { (pid, it) =>
+      var cum = offsets(pid)
+      val batch = new GenericInternalRow(1)
+      val out = new JoinedRow
+      it.map { r =>
+        batch.setLong(0, cum / b)
+        cum += r.getLong(wi)
+        out(r, batch): InternalRow
+      }
+    }
+    (Bridge.ofRows(rows.sparkSession, assigned,
+        ranged.schema.add(batchCol, LongType, nullable = false)).drop(w),
+      batches)
   }
 }

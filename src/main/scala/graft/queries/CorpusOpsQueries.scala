@@ -504,12 +504,12 @@ object CorpusOpsQueries {
     * hash. The oracle aggregates the parquet table directly — any doc a
     * batch boundary dropped, duplicated, or re-typed flips the hash.
     * The batch split point is a doc_id median-ish constant so both
-    * batches are non-trivial at any SF. Fresh scratch dir per run:
-    * append semantics make re-use non-idempotent by design. */
+    * batches are non-trivial at any SF. Fresh scratch dir per run
+    * (append semantics make re-use non-idempotent by design), deleted
+    * when the session releases its scratch. */
   def q162StreamedSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-streamsink-").toString
+    val dir = graft.ops.ScratchCache.tempDir(s, "graft-streamsink-")
     val docs = documents(s, d)
     val rh = polyHash(concat_ws("|", $"doc_id", $"text"))
     val nDocs = docs.count()
@@ -524,7 +524,9 @@ object CorpusOpsQueries {
       0L, "doc_id", "n_chars", rh, 16000L, dir, 8)
     graft.ops.CorpusSink.appendStreamBatch(docs.filter($"doc_id" >= cut),
       1L, "doc_id", "n_chars", rh, 16000L, dir, 8)
-    val back = s.read.parquet(dir)
+    // the shards hold the batch columns, shard_id is the partition column:
+    // no schema inference job
+    val back = s.read.schema(docs.schema.add("shard_id", "long")).parquet(dir)
     back.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_chars".cast("long")).as("n_chars"),

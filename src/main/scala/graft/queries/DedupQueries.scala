@@ -521,7 +521,7 @@ object DedupQueries {
     // identical to minhashDedupPairs over corpus ∪ batch filtered to pairs
     // touching the batch (spec-asserted in DedupSpec).
     val docs = documents(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("graft-band-index").toString
+    val dir = graft.ops.ScratchCache.tempDir(s, "graft-band-index")
     val ref = graft.ops.BandIndex.build(
       docs.filter($"source" =!= "src0"), "doc_id", "text", dir)
     graft.ops.BandIndex.probe(s, ref, docs.filter($"source" === "src0"),

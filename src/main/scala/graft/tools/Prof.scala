@@ -87,12 +87,20 @@ object Prof {
       println(f"PASS $p $name $dt%8.2f s rows=$rows")
     }
     Thread.sleep(1500) // let the listener bus drain
-    var prevEnd = 0L
-    seen.synchronized(seen.toSeq).sortBy(_.t0).foreach { j =>
-      val gap = if (prevEnd == 0) 0.0 else (j.t0 - prevEnd) / 1e3
-      prevEnd = j.t1
+    // a job's driver gap runs from the latest end of all earlier jobs, not
+    // the previous one's: AQE runs query-stage jobs concurrently, and a job
+    // that starts while another still runs has no gap
+    var lastEnd = 0L
+    var gaps = 0.0
+    val js = seen.synchronized(seen.toSeq).sortBy(_.t0)
+    js.foreach { j =>
+      val gap = if (lastEnd == 0) 0.0 else math.max(0L, j.t0 - lastEnd) / 1e3
+      lastEnd = math.max(lastEnd, j.t1)
+      gaps += gap
       println(f"  job ${j.id}%3d ${(j.t1 - j.t0) / 1e3}%7.2f s  gap=$gap%6.2f s  tasks=${j.tasks}%3d  ${j.stages.take(150)}")
     }
+    val span = js.headOption.fold(0.0)(j => (lastEnd - j.t0) / 1e3)
+    println(f"JOBS ${js.size} in_jobs=${span - gaps}%.2f s driver_gap=$gaps%.2f s")
   }
 
   private def plan(spark: SparkSession, queries: Seq[Query], out: String): Unit = {

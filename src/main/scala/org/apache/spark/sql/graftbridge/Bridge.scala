@@ -12,6 +12,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A frame over rows an operator computed itself (`internalCreateDataFrame`
+    * is `private[sql]`): no per-row conversion to and from `Row`. */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+             schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
   // one lazily-built AQE-off clone per base session (weak keys: a clone
   // must not outlive — or retain — its base)
   private val noAqeClones =

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
@@ -44,11 +45,21 @@ object Checkpoint {
         case other => other
       }
       val output = cds.logicalPlan.output
+      // the optimizer may rename the attributes the partitioning and
+      // ordering name (`x + 0 AS y` becomes `x`): rebind them to the
+      // frame's output by position, as Spark's own checkpoint does
+      val rebind = AttributeMap(last.output.zip(output))
+      def bound[T <: Expression](e: T): T =
+        e.transform { case a: Attribute => rebind.getOrElse(a, a) }.asInstanceOf[T]
+      val partitioning = leaf(last.outputPartitioning) match {
+        case e: Expression => bound(e).asInstanceOf[Partitioning]
+        case p => p
+      }
       val stats = Statistics(
         sizeInBytes = EstimationUtils.getSizePerRow(output) * rows,
         rowCount = Some(BigInt(rows)))
-      val plan = LogicalRDD(output, rdd, leaf(last.outputPartitioning),
-        last.outputOrdering, isStreaming = false)(cds.sparkSession, Some(stats), None)
+      val plan = LogicalRDD(output, rdd, partitioning, last.outputOrdering.map(bound),
+        isStreaming = false)(cds.sparkSession, Some(stats), None)
       (org.apache.spark.sql.classic.Dataset.ofRows(cds.sparkSession, plan), rdd)
     }
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.CorpusSink
+import graft.ops.{CorpusSink, SizeBatch}
 
 /** CorpusSink: shard files on disk must carry exactly the corpus, one
   * file per shard, and the writer's manifest must equal a manifest
@@ -204,5 +204,57 @@ class CorpusSinkSpec extends AnyFunSuite with SparkSpecBase {
     val bBack = spark.read.parquet(batchDir).select($"doc_id", $"text")
       .collect().map(_.toSeq).toSet
     assert(sBack == bBack)
+  }
+
+  test("a shard straddling two range partitions: shard files and manifest equal the window replay") {
+    val docs = Tables.documents(spark, sfSmoke)
+    val (budget, parts) = (16000L, 7)
+    // the assigned rows keep their range partition: some shard must span two
+    val (assigned, nShards) = SizeBatch.inPlace(docs, $"doc_id".cast("long"),
+      $"n_chars".cast("long"), budget, parts, "shard_id")
+    val straddling = assigned.withColumn("p", spark_partition_id())
+      .groupBy($"shard_id").agg(countDistinct($"p").as("np"))
+      .filter($"np" > 1).count()
+    assert(straddling > 0, s"no shard straddles two of $parts range partitions")
+    val dir = freshDir()
+    val manifest = CorpusSink.write(docs, "doc_id", "n_chars", rowHash,
+      budget, dir, parts).collect().map(_.toSeq).toSeq
+    // the single-reducer window formulation of the shard ids
+    val replay = docs.withColumn("shard_id",
+      (coalesce(sum($"n_chars".cast("long")).over(
+        org.apache.spark.sql.expressions.Window.orderBy($"doc_id")
+          .rowsBetween(Long.MinValue, -1)), lit(0L)) / budget).cast("long"))
+    assert(manifest.length == nShards)
+    assert(manifest == replay.groupBy($"shard_id")
+      .agg(count(lit(1)).as("n_docs"),
+        sum($"n_chars".cast("long")).as("n_weight"),
+        (sum(rowHash) % 4294967296L).as("content_hash"),
+        min($"doc_id".cast("long")).as("min_id"),
+        max($"doc_id".cast("long")).as("max_id"))
+      .orderBy($"shard_id").collect().map(_.toSeq).toSeq)
+    // each shard_id=N directory holds exactly the replay's rows of shard N,
+    // in one file
+    val cols = Seq("shard_id", "doc_id", "text", "lang", "source", "n_chars").map(col)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols: _*).collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+    assert(rows(spark.read.parquet(dir)) == rows(replay))
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("shard_id=")).foreach { sd =>
+      assert(sd.listFiles().count(_.getName.endsWith(".parquet")) == 1, sd.getName)
+    }
+  }
+
+  test("appendBatch onto an existing manifest runs at most 10 Spark jobs") {
+    val docs = Tables.documents(spark, sfSmoke)
+    val dir = freshDir()
+    CorpusSink.appendBatch(docs.filter($"doc_id" < 80), "doc_id", "n_chars",
+      rowHash, 16000L, dir, 4)
+    // the top of the old manifest, the range exchange (its sample and map
+    // jobs) and pass 1, the write exchange and its cut, the shard write,
+    // the new rows' manifest cut, the rewritten manifest's cut and write
+    val n = jobsOf(CorpusSink.appendBatch(docs.filter($"doc_id" >= 80),
+      "doc_id", "n_chars", rowHash, 16000L, dir, 4))
+    assert(n <= 10, s"one appendBatch ran $n Spark jobs")
+    assert(CorpusSink.manifestFrame(spark, dir).count() ==
+      CorpusSink.manifestOf(spark, dir, "n_chars", rowHash).count())
   }
 }

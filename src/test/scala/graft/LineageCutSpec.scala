@@ -50,6 +50,20 @@ class LineageCutSpec extends AnyFunSuite with SparkSpecBase {
     } finally ScratchCache.free(cut)
   }
 
+  test("cut keeps the partitioning of a key the optimizer renamed (k + 0 AS k)") {
+    // the optimizer folds `k + 0 AS k` into the input attribute, so the
+    // executed plan partitions on an attribute the frame's output does not
+    // name; unbound, the cut's partitioning is lost and the aggregation
+    // below shuffles again
+    val cut = ScratchCache.cut(keyed.withColumn("k", col("k") + 0L)
+      .repartition(4, col("k")))
+    try {
+      val agg = cut.groupBy("k").agg(sum("v"))
+      assert(PlanGuard.digest(agg).exchanges.isEmpty, agg.queryExecution.executedPlan)
+      assert(agg.count() == 97)
+    } finally ScratchCache.free(cut)
+  }
+
   test("cut statistics carry the exact row count") {
     val cut = ScratchCache.cut(keyed.filter(col("k") < 10))
     try {
