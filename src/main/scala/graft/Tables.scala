@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.StructType
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    normalizeNtz(spark.read.schema(schemaOf(spark, path)).parquet(path))
+    val read = schemaOf(spark, path).fold(spark.read)(spark.read.schema(_))
+    normalizeNtz(read.parquet(path))
   }
 
   /** Inferred table schemas per session, keyed by the path, the file's
@@ -24,20 +25,24 @@ object Tables {
   private val schemas = new java.util.WeakHashMap[SparkSession,
     scala.collection.mutable.Map[Seq[Any], StructType]]()
 
-  private def schemaOf(spark: SparkSession, path: String): StructType = {
+  /** The memoized schema of a single-file table. A directory table (whose
+    * own modification time misses a part file rewritten in place) and a
+    * missing one get None: they are read, and fail, as without the memo. */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    // a missing table fails as an uncached read does
-    val st = try p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return spark.read.parquet(path).schema }
-    val readConfs = spark.conf.getAll.toSeq.sorted.filter { case (k, _) =>
-      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-    }
-    val key = Seq(path, st.getLen, st.getModificationTime, readConfs)
-    def known = schemas.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-    schemas.synchronized(known.get(key)).getOrElse {
-      val inferred = spark.read.parquet(path).schema
-      schemas.synchronized(known(key) = inferred)
-      inferred
+    val file = try Some(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    file.filter(_.isFile).map { st =>
+      val readConfs = spark.conf.getAll.toSeq.sorted.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }
+      val key = Seq(path, st.getLen, st.getModificationTime, readConfs)
+      def known = schemas.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
+      schemas.synchronized(known.get(key)).getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        schemas.synchronized(known(key) = inferred)
+        inferred
+      }
     }
   }
 

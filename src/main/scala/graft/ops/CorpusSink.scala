@@ -25,6 +25,13 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    committer (driver-coordinated temp + rename — the idempotence the
   *    Zarr writers hand-roll because they bypass the committer).
   *    `SaveMode.Overwrite` makes re-runs replace, not duplicate.
+  *    The cut is a local checkpoint: its blocks live on the executors and
+  *    lineage cannot recompute them, so an executor lost while a batch is
+  *    written fails the batch where a persisted frame would recompute the
+  *    lost rows. Lost before the shard write commits, nothing is on disk;
+  *    lost after it and before the manifest write, the new shards are on
+  *    disk but not in the manifest, the state any failed manifest write
+  *    leaves (`manifestOf` re-derives the manifest from the shards).
   *  - The manifest — (shard_id, n_docs, weight sum, content_hash) — is
   *    aggregated from the SAME cut that fed the writes, with no exchange;
   *    content_hash is the order-independent sum-of-row-hashes mod 2³²

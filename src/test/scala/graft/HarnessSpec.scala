@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.ScratchCache
@@ -65,38 +64,6 @@ class HarnessSpec extends AnyFunSuite with SparkSpecBase {
     Harness.release(other)
     assert(theirs.storageLevel == StorageLevel.NONE)
     assert(ScratchCache.registered == 0)
-  }
-
-  test("the file: filesystem is graft's, and a parquet write through it leaves the stock mode bits") {
-    val fs = FileSystem.get(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
-    assert(fs.getClass == classOf[NioLocalFileSystem], s"file: is ${fs.getClass}: is the " +
-      "test JVM missing build.sbt's spark.hadoop.fs.file.impl option?")
-    val root = Files.createTempDirectory("harness-fs-modes")
-    try {
-      // an uncached filesystem of each class, both with a umask this
-      // process does not have, so a permission not set explicitly shows
-      def write(name: String, impl: Class[_ <: LocalFileSystem]): Map[String, String] = {
-        val out = root.resolve(name)
-        spark.range(30).selectExpr("id", "id % 3 AS k").write
-          .option("fs.file.impl", impl.getName)
-          .option("fs.file.impl.disable.cache", "true")
-          .option("fs.permissions.umask-mode", "027")
-          .partitionBy("k").parquet(out.toString)
-        val s = Files.walk(out)
-        try s.iterator.asScala.toList.map { p =>
-          // part files carry the write's job id
-          out.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "ID") ->
-            java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
-        }.toMap
-        finally s.close()
-      }
-      val nio = write("nio", classOf[NioLocalFileSystem])
-      val stock = write("stock", classOf[LocalFileSystem])
-      assert(nio == stock)
-      // the umask reached the files: the modes above were set, not defaulted
-      assert(stock.exists { case (p, m) => p.endsWith(".parquet") && m == "rw-r-----" }, stock)
-      assert(stock.keys.exists(_.endsWith(".crc")), "the checksum layer wrote no .crc file")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 
   test("Harness.release deletes the scratch directories q52 and q162 created") {
