@@ -23,12 +23,6 @@ object ChunkTable {
     a.union(b.map(r => r.copy(time = r.time + nTimeA)))
   }
 
-  /** O4: concat along band (mosaics.py:227-229). */
-  def concatBand(a: Dataset[ChunkRow], b: Dataset[ChunkRow], nBandA: Int): Dataset[ChunkRow] = {
-    import a.sparkSession.implicits._
-    a.union(b.map(r => r.copy(band = r.band + nBandA)))
-  }
-
   /** P7: region slice as chunk-key range predicates — the relational form
     * of ds.isel(region) (flyte/build.py:170-173). Regions from
     * RegionPlanner are chunk-aligned by construction. Pixel bounds are

@@ -5,9 +5,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.time.TemporalGrid
 
-/** Per-dataset protocol — the engine's registry of named temporal datasets
-  * (SURVEY §1.1; mirrors reference protocols.py:121-170 +
-  * datasets/__init__.py:7-25). Everything a dataset declares is either plain
+/** Per-dataset protocol of the engine's named temporal datasets
+  * (SURVEY §1.1; mirrors reference protocols.py:121-170). Everything a dataset declares is either plain
   * metadata or a Column-expression factory, so every protocol method stays
   * inside Catalyst codegen.
   */
@@ -82,12 +81,4 @@ object AnnualMedianDataset extends TemporalDatasetProtocol {
   val latest   = Timestamp.valueOf("2024-12-31 00:00:00")
   val windowDays = 365
   val reduction = "median"
-}
-
-/** Registry (datasets/__init__.py:7-25). */
-object DatasetRegistry {
-  val all: Map[String, TemporalDatasetProtocol] = Map(
-    AnnualMeanDataset.name   -> AnnualMeanDataset,
-    AnnualMedianDataset.name -> AnnualMedianDataset)
-  def apply(name: String): TemporalDatasetProtocol = all(name)
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed-table co-location (SURVEY §2.7 O2's second half: "reuse a
   * partitioning across stages").
@@ -24,11 +24,4 @@ object Bucketing {
     df.write.mode("overwrite").format("parquet")
       .bucketBy(nBuckets, key).sortBy(key)
       .saveAsTable(table)
-
-  /** Join two same-key, same-bucket-count tables — plans with no Exchange
-    * on either side (assert via `.explain`; bucket counts must match, or
-    * Spark falls back to shuffling the smaller-bucketed side). */
-  def colocatedJoin(spark: SparkSession, left: String, right: String,
-                    key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
 }

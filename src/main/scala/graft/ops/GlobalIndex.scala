@@ -1,28 +1,14 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 
 /** Dense global 0-based index over a total order — `row_number() - 1`
-  * without the single-reducer global Window.
-  *
-  * A windowed `row_number() OVER (ORDER BY ...)` funnels the whole table
-  * through ONE partition — the canonical 100 TB scale-killer for "assign
+  * without the single-reducer global Window, which funnels the whole table
+  * through ONE partition: the canonical 100 TB scale-killer for "assign
   * every training sample a stable position" (curriculum order, shard
-  * offsets, resumable iteration). This is the [[SizeBatch]] two-pass
-  * shape applied to ranking:
-  *
-  *  1. range-repartition + in-partition sort on the order key (Spark's
-  *     distributed sort machinery: sampled range bounds, no full
-  *     collect);
-  *  2. pass 1 — one `(partitionId, rowCount)` row per partition; range
-  *     partition i holds strictly earlier keys than i+1, so id order IS
-  *     key order;
-  *  3. driver-side exclusive prefix sum over ≤ `parts` longs (a planner
-  *     scalar, never data);
-  *  4. pass 2 — partition-local counter seeded at the global offset.
-  *
-  * Every stage is distributed and O(rows/parts) per task.
+  * offsets, resumable iteration). A [[RangeScan]]: pass 1 counts each
+  * partition's rows, pass 2 runs a counter seeded at the exclusive prefix.
   */
 object GlobalIndex {
 
@@ -39,46 +25,14 @@ object GlobalIndex {
     * divisors, shard math) get it without a second scan job. */
   def byScoreDescWithTotal(rows: Dataset[(Long, Long)],
                            parts: Int): (DataFrame, Long) = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val n = math.max(parts, 1)
-    val ranged = ScratchCache.register(rows
-      .toDF("score", "id")
-      .as[(Long, Long)]
-      .repartitionByRange(n, $"score".desc, $"id")
-      .sortWithinPartitions($"score".desc, $"id")
-      .persist())
-    val counts: Map[Int, Long] = ranged
-      .mapPartitions { it =>
-        var c = 0L
-        it.foreach(_ => c += 1)
-        Iterator.single((TaskContext.getPartitionId(), c))
-      }
-      .collect()
-      .toMap
-    val offsets = new Array[Long](n)
-    var acc = 0L
-    var p = 0
-    while (p < n) {
-      offsets(p) = acc
-      acc += counts.getOrElse(p, 0L)
-      p += 1
+    val scan = RangeScan(rows.toDF("score", "id")
+      .selectExpr("CAST(id AS BIGINT) id", "CAST(score AS BIGINT) score"),
+      Seq(col("score").desc, col("id")), parts)
+    val offsets = scan.summarize(_.foldLeft(0L)((n, _) => n + 1)).scanLeft(0L)(_ + _)
+    val indexed = scan.walk(offsets, RangeScan.longs("id", "score", "idx")) { (seed, it) =>
+      var i = seed - 1
+      RangeScan.appendLong(it) { _ => i += 1; i }
     }
-    val bcOffsets = spark.sparkContext.broadcast(offsets)
-    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): the id
-    // must be THIS RDD's partition index. If a downstream plan pipelines
-    // this stage into a UnionRDD (observed in q235 before the fix), the
-    // task's stage-level partition id is union-shifted — an off-the-end
-    // id crashes, a small shift would mis-seed offsets SILENTLY.
-    val rdd = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var i = bcOffsets.value(pid)
-      it.map { case (score, id) =>
-        val r = (id, score, i)
-        i += 1
-        r
-      }
-    }
-    val df = spark.createDataset(rdd).toDF("id", "score", "idx")
-    (df, acc)
+    (indexed, offsets.last)
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Incremental-compute primitives (SURVEY §2.3 J3, §2.4 A8).
   *
@@ -38,9 +37,4 @@ object Incremental {
       it.map(r => Row.fromSeq(r.toSeq :+ probe(r.getString(idx))))
     }
   }
-
-  /** Convenience: deterministic-output memoization — keep only work units
-    * whose output URL does not exist yet (protocols.py:299-300 semantics). */
-  def pendingWork(work: DataFrame, existingUrls: DataFrame, urlCol: String = "url"): DataFrame =
-    missing(work, existingUrls.withColumnRenamed(existingUrls.columns.head, urlCol), urlCol)
 }

@@ -1,13 +1,11 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 
 /** Distributed inclusive prefix sum over (key, value) rows ordered by key
-  * ASC — the SizeBatch/GlobalIndex two-pass shape generalized to summed
-  * values: range-partition by key, per-partition TOTALS to the driver
-  * (≤ `parts` longs, a planner scalar, never data), exclusive prefix over
-  * those, then a seeded in-partition running sum. Replaces the global
+  * ASC, as a [[RangeScan]]: pass 1 sums each partition's values, pass 2
+  * runs a sum seeded at the exclusive prefix. Replaces the global
   * `sum() OVER (ORDER BY k)` window (single-reducer at scale, PlanGuard
   * error class) and the triangle self-join (quadratic in |keys|).
   */
@@ -17,40 +15,12 @@ object PrefixSum {
     *         cum = Σ v over rows with key ≤ k (inclusive; keys unique by
     *         caller contract). */
   def byKeyAsc(rows: Dataset[(Long, Long)], parts: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val n = math.max(parts, 1)
-    val ranged = ScratchCache.register(rows
-      .toDF("k", "v").as[(Long, Long)]
-      .repartitionByRange(n, $"k")
-      .sortWithinPartitions($"k")
-      .persist())
-    val totals: Map[Int, Long] = ranged
-      .mapPartitions { it =>
-        var s = 0L
-        it.foreach(s += _._2)
-        Iterator.single((TaskContext.getPartitionId(), s))
-      }
-      .collect()
-      .toMap
-    val offsets = new Array[Long](n)
-    var acc = 0L
-    var p = 0
-    while (p < n) {
-      offsets(p) = acc
-      acc += totals.getOrElse(p, 0L)
-      p += 1
+    val scan = RangeScan(rows.toDF("k", "v")
+      .selectExpr("CAST(k AS BIGINT) k", "CAST(v AS BIGINT) v"), Seq(col("k")), parts)
+    val offsets = scan.summarize(_.foldLeft(0L)(_ + _.getLong(1))).scanLeft(0L)(_ + _)
+    scan.walk(offsets, RangeScan.longs("k", "v", "cum")) { (seed, it) =>
+      var run = seed
+      RangeScan.appendLong(it) { r => run += r.getLong(1); run }
     }
-    val bc = spark.sparkContext.broadcast(offsets)
-    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): must be
-    // THIS RDD's index — a downstream UnionRDD pipelining this stage
-    // shifts the task's stage-level partition id (see GlobalIndex)
-    spark.createDataset(ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var run = bc.value(pid)
-      it.map { case (k, v) =>
-        run += v
-        (k, v, run)
-      }
-    }).toDF("k", "v", "cum")
   }
 }

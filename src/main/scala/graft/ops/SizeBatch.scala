@@ -1,37 +1,16 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** Size-based batching (O7 — reference `flyte/scenes.py:60-70` packs work
-  * into byte-budget batches) as a two-pass distributed prefix sum.
-  *
-  * The naive plan — `sum(bytes) over (order by key)` — is a global window:
-  * Spark moves EVERY row to one reducer (WindowExec warns "Moving all data
-  * to a single partition"), a scale-killer at 100 TB. This operator
-  * produces bit-identical batch ids with no single-partition stage:
-  *
-  *   1. Range-partition the rows themselves by the ordering key (one
-  *      shuffle, the same exchange the global sort would need anyway) and
-  *      sort within each partition.
-  *   2. Pass 1: per-partition row count, byte subtotal and last row's
-  *      bytes — a P-row result (P = the partition count), collected to the
-  *      driver. O(P) metadata, never row data.
-  *   3. Driver: exclusive cumulative sum of the ordered subtotals gives
-  *      each partition its starting byte offset; the last non-empty
-  *      partition's tail gives the batch count.
-  *   4. Pass 2: re-walk each partition in key order with a partition-local
-  *      running total seeded at its offset and append
-  *      `batch_id = bytes_before / budget` to each row.
-  *
-  * Parallelism is P throughout. Both passes read the one range exchange's
-  * shuffle output (pass 2 re-reads it; nothing is persisted), so rows are
-  * scanned twice but shuffled once, and they carry every input column, so
-  * no join puts the batch id back on them.
+  * into byte-budget batches): `batch_id = bytes_before / budget` in key
+  * order, bit-identical to the single-reducer `sum(bytes) over (order by
+  * key)` window, as a [[RangeScan]] — pass 1 sums each partition's bytes
+  * (plus its row count and last row's bytes, for the batch count), pass 2
+  * walks from the exclusive prefix sum. The rows carry every input column,
+  * so no join puts the batch id back on them.
   */
 object SizeBatch {
 
@@ -63,49 +42,31 @@ object SizeBatch {
               parts: Int, batchCol: String): (DataFrame, Long) = {
     require(budget > 0, s"budget must be positive, got $budget")
     val w = "_sizebatch_w"
-    val ranged = rows.withColumn(w, weight.cast(LongType))
-      .repartitionByRange(math.max(parts, 1), key)
-      .sortWithinPartitions(key)
-    val wi = ranged.schema.fieldIndex(w)
-    // one RDD for both passes: pass 2 finds the range shuffle's map output
-    // that running this plan (and pass 1) produced
-    val walk = ranged.queryExecution.toRdd
-
-    // Pass 1: (rows, weight sum, last row's weight) per partition —
-    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): must be
-    // THIS RDD's index, which a downstream UnionRDD pipelining this stage
-    // would shift (see GlobalIndex). Range partition i holds strictly
-    // smaller keys than partition i+1, so the index order IS key order.
-    val stats = walk.mapPartitionsWithIndex { (pid, it) =>
+    val scan = RangeScan(rows.withColumn(w, weight.cast(LongType)), Seq(key), parts)
+    val wi = scan.schema.fieldIndex(w)
+    // (rows, weight sum, last row's weight) per partition
+    val stats = scan.summarize { it =>
       var n = 0L
       var total = 0L
       var last = 0L
       it.foreach { r => last = r.getLong(wi); total += last; n += 1 }
-      Iterator.single((pid, n, total, last))
-    }.collect().sortBy(_._1)
-
-    // Driver: exclusive prefix sum over <= parts longs; the last row of the
-    // last non-empty partition starts the last batch
-    val offsets = stats.scanLeft(0L)(_ + _._3)
-    val batches = stats.lastIndexWhere(_._2 > 0) match {
+      (n, total, last)
+    }
+    val offsets = stats.scanLeft(0L)(_ + _._2)
+    // the last row of the last non-empty partition starts the last batch
+    val batches = stats.lastIndexWhere(_._1 > 0) match {
       case -1 => 0L
-      case p => (offsets(p) + stats(p)._3 - stats(p)._4) / budget + 1L
+      case p => (offsets(p + 1) - stats(p)._3) / budget + 1L
     }
-
-    // Pass 2: partition-local running sum seeded at the global offset
-    val b = budget
-    val assigned = walk.mapPartitionsWithIndex { (pid, it) =>
-      var cum = offsets(pid)
-      val batch = new GenericInternalRow(1)
-      val out = new JoinedRow
-      it.map { r =>
-        batch.setLong(0, cum / b)
-        cum += r.getLong(wi)
-        out(r, batch): InternalRow
-      }
+    val assigned = scan.walk(offsets, scan.schema.add(batchCol, LongType, nullable = false)) {
+      (seed, it) =>
+        var cum = seed
+        RangeScan.appendLong(it) { r =>
+          val batch = cum / budget
+          cum += r.getLong(wi)
+          batch
+        }
     }
-    (Bridge.ofRows(rows.sparkSession, assigned,
-        ranged.schema.add(batchCol, LongType, nullable = false)).drop(w),
-      batches)
+    (assigned.drop(w), batches)
   }
 }

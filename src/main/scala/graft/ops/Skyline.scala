@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** 2-D Pareto frontier (skyline): keep every row for which no other row is
   * at-most-equal `cost` AND at-least-equal `gain` with at least one strict
@@ -9,23 +12,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *
   * The textbook plan — a NOT EXISTS self-join — is quadratic; the window
   * form (`max(gain) over (order by cost)`) moves every row through one
-  * reducer. This operator is exact at O(n log n) with parallelism P
-  * throughout, reusing the [[SizeBatch]] two-pass prefix-scan shape:
-  *
-  *   1. Range-partition by `cost` (equal costs co-locate — the range
-  *      partitioner splits on value boundaries) and sort within partitions.
-  *   2. Pass 1: per-partition max gain — P longs to the driver, never rows.
-  *   3. Driver: exclusive prefix max gives each partition the best gain
-  *      seen at any strictly cheaper partition; broadcast P longs.
-  *   4. Pass 2: walk each partition in cost order, buffering only one
-  *      equal-cost group at a time: a row survives iff its gain equals its
-  *      cost-group's max AND strictly exceeds the running best of all
-  *      cheaper groups. Equal (cost, gain) ties all survive — none
-  *      dominates another (no strict inequality).
-  *
-  * At 100 TB the only shuffle is the range exchange a global sort would
-  * need anyway; the frontier is emitted distributed (it can be O(n) in the
-  * worst case, so it is never collected).
+  * reducer. This operator is exact at O(n log n) as a [[RangeScan]] on
+  * `cost` (equal costs co-locate: the range partitioner splits on value
+  * boundaries). Pass 1 takes each partition's max gain; pass 2 walks a
+  * partition in cost order from the best gain of every cheaper partition,
+  * buffering one equal-cost group at a time: a row survives iff its gain
+  * equals its group's max AND strictly exceeds the best of all cheaper
+  * groups. Equal (cost, gain) ties all survive — none dominates another.
+  * The frontier can be O(n), so it is emitted distributed, never collected.
   */
 object Skyline {
 
@@ -37,65 +31,23 @@ object Skyline {
     *         non-dominated rows, bit-identical to the NOT EXISTS form
     */
   def frontier(rows: Dataset[(Long, Double, Long)], parts: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val n = math.max(parts, 1)
-
-    val ranged = ScratchCache.register(rows
-      .toDF("id", "cost", "gain")
-      .as[(Long, Double, Long)]
-      .repartitionByRange(n, $"cost")
-      .sortWithinPartitions($"cost")
-      .persist())
-
-    // Pass 1: max gain per range partition (partition order == cost order).
-    val maxes: Map[Int, Long] = ranged
-      .mapPartitions { it =>
-        var m = Long.MinValue
-        it.foreach(r => if (r._3 > m) m = r._3)
-        Iterator.single((TaskContext.getPartitionId(), m))
+    val scan = RangeScan(rows.toDF("id", "cost", "gain").selectExpr(
+      "CAST(id AS BIGINT) id", "CAST(cost AS DOUBLE) cost", "CAST(gain AS BIGINT) gain"),
+      Seq(col("cost")), parts)
+    val maxes = scan.summarize(_.foldLeft(Long.MinValue)((m, r) => math.max(m, r.getLong(2))))
+    val out = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("cost", DoubleType, nullable = false),
+      StructField("gain", LongType, nullable = false)))
+    scan.walk(maxes.scanLeft(Long.MinValue)(math.max), out) { (seed, rows) =>
+      val it = rows.buffered
+      var best = seed
+      Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+        val cost = it.head.getDouble(1)
+        val group = ArrayBuffer.empty[InternalRow]
+        while (it.hasNext && it.head.getDouble(1) == cost) group += it.next().copy()
+        val gm = group.map(_.getLong(2)).max
+        if (gm > best) { best = gm; group.filter(_.getLong(2) == gm) } else Nil
       }
-      .collect()
-      .toMap
-
-    // Driver: exclusive prefix max over <= n longs.
-    val offsets = new Array[Long](n)
-    var acc = Long.MinValue
-    var p = 0
-    while (p < n) {
-      offsets(p) = acc
-      val v = maxes.getOrElse(p, Long.MinValue)
-      if (v > acc) acc = v
-      p += 1
     }
-    val bcOffsets = spark.sparkContext.broadcast(offsets)
-
-    // Pass 2: stream each partition in cost order; only one equal-cost
-    // group is ever buffered (bounded by the duplicate count of a single
-    // cost value, not the partition size).
-    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): must be
-    // THIS RDD's index, which a downstream UnionRDD pipelining this
-    // stage would shift (see GlobalIndex)
-    spark.createDataset(ranged.rdd.mapPartitionsWithIndex { (pid, it0) =>
-        val it = it0.buffered
-        var below = bcOffsets.value(pid)
-        val groups = new Iterator[Seq[(Long, Double, Long)]] {
-          def hasNext: Boolean = it.hasNext
-          def next(): Seq[(Long, Double, Long)] = {
-            val c = it.head._2
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
-            while (it.hasNext && it.head._2 == c) buf += it.next()
-            buf.toSeq
-          }
-        }
-        groups.flatMap { g =>
-          var gm = Long.MinValue
-          g.foreach(r => if (r._3 > gm) gm = r._3)
-          val out = if (gm > below) g.filter(_._3 == gm) else Nil
-          if (gm > below) below = gm
-          out
-        }
-      })
-      .toDF("id", "cost", "gain")
   }
 }

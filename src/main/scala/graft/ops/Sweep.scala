@@ -1,7 +1,12 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Interval-overlap analytics: max concurrent intervals per group via a
   * DISTRIBUTED sweep line.
@@ -9,21 +14,15 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * The single-node form — `sum(delta) over (partition by g order by t)`
   * then `max` — funnels each group through one reducer: at 100 TB a hot
   * group (one event type, one tenant) is a straggler by construction.
-  * This operator is the grouped generalization of the [[SizeBatch]] /
-  * [[Skyline]] two-pass prefix scan:
-  *
-  *   1. Range-partition the ±1 endpoint stream by (g, t, delta) and sort
-  *      within partitions — groups larger than a partition span SEVERAL
-  *      consecutive partitions, which is exactly what removes the
-  *      one-reducer-per-group bottleneck.
-  *   2. Pass 1: per-partition, per-group delta subtotals — at most
-  *      (groups-in-partition) rows each, collected to the driver. The
-  *      driver holds O(P + G) counters, never endpoints.
-  *   3. Driver: per-group exclusive prefix sums in partition order give
-  *      each (partition, group) its running-count seed; broadcast.
-  *   4. Pass 2: re-walk each partition with seeded per-group counters,
-  *      tracking each group's local max; a final tiny groupBy takes the
-  *      global max over ≤ P rows per group.
+  * This operator is a grouped [[RangeScan]] of the ±1 endpoint stream on
+  * (g, t, delta): a group larger than a partition spans SEVERAL
+  * consecutive partitions, which is what removes the one-reducer-per-group
+  * bottleneck. Pass 1 takes each partition's per-group delta subtotals
+  * (O(P + G) counters on the driver, never endpoints); pass 2 re-walks each
+  * partition with per-group counters seeded at the exclusive prefix,
+  * emitting each group run's local max; a final tiny groupBy takes the
+  * global max over ≤ P rows per group. The null group is a group like any
+  * other, as under `PARTITION BY g`.
   *
   * Endpoint convention is half-open [s, e): at equal t the −1 (close)
   * sorts before the +1 (open), so touching intervals do not overlap.
@@ -36,74 +35,60 @@ object Sweep {
     * @return (g STRING, max_concurrent BIGINT) — bit-identical to the
     *         windowed running-sum formulation */
   def maxConcurrent(points: Dataset[(String, Long, Long)], parts: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val n = math.max(parts, 1)
+    val scan = RangeScan(points.toDF("g", "t", "delta").selectExpr(
+      "CAST(g AS STRING) g", "CAST(t AS BIGINT) t", "CAST(delta AS BIGINT) delta"),
+      Seq(col("g"), col("t"), col("delta")), parts)
 
-    val ranged = ScratchCache.register(points
-      .toDF("g", "t", "delta")
-      .as[(String, Long, Long)]
-      .repartitionByRange(n, $"g", $"t", $"delta")
-      .sortWithinPartitions($"g", $"t", $"delta")
-      .persist())
-
-    // Pass 1: per-(partition, group) subtotals — sorted input means each
-    // group is one contiguous run, so a single running entry suffices.
-    val subtotals: Array[(Int, String, Long)] = ranged
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
-        val pid = TaskContext.getPartitionId()
-        var g: String = null
-        var sum = 0L
-        it.foreach { case (gg, _, d) =>
-          if (g == null || g != gg) {
-            if (g != null) out += ((pid, g, sum))
-            g = gg; sum = 0L
-          }
-          sum += d
-        }
-        if (g != null) out += ((pid, g, sum))
-        out.iterator
+    // Pass 1: (group, delta subtotal) per group run, in partition order
+    val subtotals = scan.summarize { it =>
+      val runs = new GroupRuns
+      val groups = mutable.ArrayBuffer.empty[Option[String]]
+      val sums = mutable.ArrayBuffer.empty[Long]
+      it.foreach { r =>
+        if (runs.starts(r)) { groups += runs.group; sums += 0L }
+        sums(sums.length - 1) += r.getLong(2)
       }
-      .collect()
-
-    // Driver: per-group exclusive prefix sum in partition order.
-    val offsets = scala.collection.mutable.HashMap.empty[(Int, String), Long]
-    val acc = scala.collection.mutable.HashMap.empty[String, Long]
-    subtotals.sortBy(_._1).foreach { case (pid, g, sum) =>
-      val prev = acc.getOrElse(g, 0L)
-      offsets((pid, g)) = prev
-      acc(g) = prev + sum
+      groups.zip(sums).toArray
     }
-    val bcOffsets = spark.sparkContext.broadcast(offsets.toMap)
+    // Driver: per-group exclusive prefix sums in partition order
+    val carried = mutable.HashMap.empty[Option[String], Long].withDefaultValue(0L)
+    val seeds = subtotals.map(_.map { case (g, sum) =>
+      val before = carried(g)
+      carried(g) = before + sum
+      g -> before
+    }.toMap)
 
-    // Pass 2: seeded running counts; one (group, localMax) row per
-    // contiguous group run per partition.
-    // mapPartitionsWithIndex, NOT TaskContext.getPartitionId(): must be
-    // THIS RDD's index, which a downstream UnionRDD pipelining this
-    // stage would shift (see GlobalIndex)
-    spark.createDataset(ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-        val off = bcOffsets.value
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        var g: String = null
-        var run = 0L
-        var mx = Long.MinValue
-        def flush(): Unit = if (g != null) out += ((g, mx))
-        it.foreach { case (gg, _, d) =>
-          if (g == null || g != gg) {
-            flush()
-            g = gg
-            run = off.getOrElse((pid, gg), 0L)
-            mx = Long.MinValue
-          }
-          run += d
-          if (run > mx) mx = run
+    // Pass 2: seeded running counts; one (g, local max) row per group run
+    val out = new StructType().add("g", StringType).add("m", LongType, nullable = false)
+    scan.walk(seeds, out) { (seed, it) =>
+      val runs = new GroupRuns
+      val maxes = mutable.ArrayBuffer.empty[GenericInternalRow]
+      var run = 0L
+      it.foreach { r =>
+        if (runs.starts(r)) {
+          maxes += new GenericInternalRow(Array[Any](runs.key, Long.MinValue))
+          run = seed(runs.group)
         }
-        flush()
-        out.iterator
-      })
-      .toDF("g", "m")
-      .groupBy("g")
-      .agg(org.apache.spark.sql.functions.max("m").as("max_concurrent"))
+        run += r.getLong(2)
+        if (run > maxes.last.getLong(1)) maxes.last.setLong(1, run)
+      }
+      maxes.iterator
+    }.groupBy("g").agg(max("m").as("max_concurrent"))
+  }
+
+  /** The runs of column 0 (the group) along a sorted walk. */
+  private final class GroupRuns {
+    private var started = false
+    /** The current run's group: a clone (the sorted iterator reuses its
+      * row), null for the null group. */
+    var key: UTF8String = _
+    /** Whether `r` starts a new run (and makes its group current). */
+    def starts(r: InternalRow): Boolean = {
+      val k = if (r.isNullAt(0)) null else r.getUTF8String(0)
+      val start = !started || k != key
+      if (start) { started = true; key = if (k == null) null else k.clone() }
+      start
+    }
+    def group: Option[String] = Option(key).map(_.toString)
   }
 }

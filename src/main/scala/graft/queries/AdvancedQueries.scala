@@ -457,7 +457,7 @@ object AdvancedQueries {
     * resolution) hash-mismatches. */
   def q89TimeTravel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-q89").toString
+    val root = graft.ops.ScratchCache.tempDir(s, "graft-q89")
     val log = new graft.store.CommitLog(root)
     val docs = graft.Tables.documents(s, d)
     log.append(docs.filter($"n_chars" <= 300))   // v0

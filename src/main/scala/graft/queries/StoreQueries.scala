@@ -22,7 +22,7 @@ object StoreQueries {
     * per source. */
   def q90MergeUpsert(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-q90").toString
+    val root = graft.ops.ScratchCache.tempDir(s, "graft-q90")
     val log = new CommitLog(root)
     val docs = documents(s, d)
     log.append(docs.repartition($"source")): Unit
@@ -53,7 +53,7 @@ object StoreQueries {
     * row lost in the overwrite surfaces as a wrong change row. */
   def q91ChangeFeed(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-q91").toString
+    val root = graft.ops.ScratchCache.tempDir(s, "graft-q91")
     val log = new CommitLog(root)
     val docs = documents(s, d)
     log.append(docs): Unit
@@ -112,7 +112,7 @@ object StoreQueries {
     * row-accurately. */
   def q96SchemaEvolution(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-q96").toString
+    val root = graft.ops.ScratchCache.tempDir(s, "graft-q96")
     val log = new CommitLog(root)
     val docs = documents(s, d)
     log.append(docs.filter($"source" =!= "src0")
@@ -144,7 +144,7 @@ object StoreQueries {
     * the maintained view diverges and hash-mismatches. */
   def q101IncrementalAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-q101").toString
+    val root = graft.ops.ScratchCache.tempDir(s, "graft-q101")
     val log = new CommitLog(root)
     val docs = documents(s, d)
     log.append(docs): Unit

@@ -1740,10 +1740,7 @@ object TextQueries {
     val (idx, nDocs) = graft.ops.GlobalIndex.byScoreDescWithTotal(
       docs.select((-$"len").as("s"), $"doc_id").as[(Long, Long)], parts)
     // persisted: two consumers (the weights derivation and the final
-    // median-row join) share one rank computation. (Historical note:
-    // before GlobalIndex switched to mapPartitionsWithIndex, the final
-    // union pipelining an UNPERSISTED rank re-run would also shift its
-    // partition ids — that hazard is fixed at the op, and spec-pinned.)
+    // median-row join) share one rank computation
     val ranked = graft.ops.ScratchCache.register(
       idx.select($"idx".as("k"), (-$"score").as("len"),
         $"id".as("doc_id")).persist())

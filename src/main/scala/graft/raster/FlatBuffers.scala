@@ -54,7 +54,6 @@ final class FbBuilder(initialSize: Int = 1024) {
   def pushShort(v: Short): Unit = { prep(2, 0); pushRaw(2)((bb, p) => bb.putShort(p, v)) }
   def pushInt(v: Int): Unit = { prep(4, 0); pushRaw(4)((bb, p) => bb.putInt(p, v)) }
   def pushLong(v: Long): Unit = { prep(8, 0); pushRaw(8)((bb, p) => bb.putLong(p, v)) }
-  def pushDouble(v: Double): Unit = { prep(8, 0); pushRaw(8)((bb, p) => bb.putDouble(p, v)) }
 
   /** uoffset32 reference to something already built at `target`. */
   private def pushRef(target: Int): Unit = {

@@ -278,7 +278,7 @@ object GtiMosaic {
     * US state planes, NAD83 LCC zones). Snyder USGS PP 1395 eqs.
     * 15-1…15-11 on the ellipsoid. Parameters vary per CRS, so LCC warps
     * are REGISTERED explicitly (no EPSG auto-resolution): pass
-    * `LambertConformal(...).toGeoFile` / `.fromGeoFile` in `warps`. */
+    * `LambertConformal(...).fromGeo` in `warps`. */
   final case class LambertConformal(lat1: Double, lat2: Double,
       lat0: Double, lon0: Double, falseE: Double = 0.0, falseN: Double = 0.0,
       ell: Datum.Ellipsoid = Datum.WGS84) {
@@ -331,11 +331,6 @@ object GtiMosaic {
     /** Warp for files gridded in this LCC inside a 4326 mosaic. */
     def fromGeo: PointWarp = new PointWarp {
       def toFile(lon: Double, lat: Double): (Double, Double) = forward(lon, lat)
-    }
-    /** Warp for 4326-gridded files inside a mosaic in this LCC. */
-    def toGeo: PointWarp = new PointWarp {
-      def toFile(east: Double, north: Double): (Double, Double) =
-        inverse(east, north)
     }
   }
 

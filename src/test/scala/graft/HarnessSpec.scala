@@ -78,4 +78,21 @@ class HarnessSpec extends AnyFunSuite with SparkSpecBase {
     Harness.release(spark)
     assert((scratch() -- before).isEmpty, (scratch() -- before).mkString(", "))
   }
+
+  test("Harness.release deletes the scratch directories of the versioned-store queries") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val queries = Seq("q89_time_travel", "q90_merge_upsert", "q91_change_feed",
+      "q96_schema_evolution", "q101_incremental_agg")
+    // each directory is named after its query id: graft-q89..., graft-q101...
+    val prefixes = queries.map(q => "graft-" + q.takeWhile(_ != '_'))
+    def scratch(): Set[String] = tmp.listFiles().map(_.getName)
+      .filter(n => prefixes.exists(n.startsWith)).toSet
+    val before = scratch()
+    for (q <- queries) {
+      assert(SparkEntry.queries(q)(spark, sfSmoke).collect().nonEmpty, q)
+    }
+    assert((scratch() -- before).size == queries.size, "each query should have made its directory")
+    Harness.release(spark)
+    assert((scratch() -- before).isEmpty, (scratch() -- before).mkString(", "))
+  }
 }

@@ -37,6 +37,21 @@ class SweepSpec extends AnyFunSuite with SparkSpecBase {
     graft.ops.ScratchCache.releaseAll()
   }
 
+  test("the null group is kept, next to non-null groups and across partitions") {
+    val rnd = new scala.util.Random(29)
+    val pts = (1 to 600).flatMap { i =>
+      val g = if (i % 2 == 0) null else s"g${rnd.nextInt(3)}"
+      val s0 = rnd.nextInt(500).toLong
+      Seq((g, s0, 1L), (g, s0 + 1 + rnd.nextInt(40), -1L))
+    }
+    for (parts <- Seq(1, 6)) {
+      val got = graft.ops.Sweep.maxConcurrent(pts.toDS(), parts)
+        .as[(String, Long)].collect().toMap
+      assert(got.contains(null), s"parts=$parts")
+      assert(got == brute(pts), s"parts=$parts")
+    }
+  }
+
   test("groups spanning many partitions still seed correctly") {
     // one huge group forced across partitions: staircase up then down
     val up = (0L until 500L).map(t => ("big", t, 1L))
